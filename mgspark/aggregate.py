@@ -44,6 +44,12 @@ from pyspark.sql.types import (
 )
 
 from mgspark.kernel import MGState, mg_build_weighted, mg_merge
+from mgspark.sketches.base import (
+    checkpoint_manifest,
+    checkpoint_partitions,
+    checkpoint_ready,
+    write_checkpoint,
+)
 
 __all__ = [
     "PARTIAL_SCHEMA",
@@ -497,7 +503,18 @@ def _driver_fold(rows, k: int) -> tuple[MGState, dict[int, str]]:
             for key, token in zip(fields["keys"], tokens):
                 if token is not None:
                     exemplars.setdefault(int(key), str(token))
-    return state, exemplars
+    # Like _aligned_tokens in a merge round: only keys the merge kept.
+    survivors = {int(key): exemplars[int(key)] for key in state.keys if int(key) in exemplars}
+    return state, survivors
+
+
+def _mg_manifest(
+    k: int, key_col: str, weight_col: str | None, token_col: str | None
+) -> dict:
+    """Checkpoint manifest of an MG query, over the caller's own columns
+    (not the combiner's internal ``_w``/``_tok``), so the zero-shuffle
+    and combiner plans of one query resume each other's partials."""
+    return checkpoint_manifest("mg", {"k": int(k)}, key_col, weight_col, token_col)
 
 
 def _mg_sketch_core(
@@ -508,24 +525,20 @@ def _mg_sketch_core(
     token_col: str | None,
     checkpoint_dir: str | None,
     fanout: int,
+    manifest: dict,
 ) -> tuple[MGState, dict[int, str]]:
-    """Build + tree-merge; returns (final state, exemplar token map)."""
+    """Build + tree-merge; returns (final state, exemplar token map).
+
+    ``manifest`` describes the caller's query (see :func:`_mg_manifest`);
+    a checkpoint written for another one raises ``ValueError``."""
     spark = df.sparkSession
     if checkpoint_dir is not None:
-        import os
-
-        done_marker = os.path.join(checkpoint_dir, "_SUCCESS")
-        if not os.path.exists(done_marker):
-            mg_partials(df, key_col, k, weight_col, token_col).write.mode(
-                "overwrite"
-            ).parquet(checkpoint_dir)
+        if not checkpoint_ready(checkpoint_dir, manifest):
+            write_checkpoint(
+                mg_partials(df, key_col, k, weight_col, token_col), checkpoint_dir, manifest
+            )
         partials = spark.read.parquet(checkpoint_dir)
-        # Round planning needs an upper bound on max(partition_id)+1, not
-        # the row count: empty stage-1 partitions emit no row, so
-        # checkpointed ids can be sparse and count() would under-plan the
-        # rounds, leaving multiple final rows.
-        max_pid = partials.agg(F.max("partition_id").alias("m")).first()["m"]
-        num_partials = (int(max_pid) + 1) if max_pid is not None else 0
+        num_partials = checkpoint_partitions(partials)
     else:
         partials = mg_partials(df, key_col, k, weight_col, token_col)
         num_partials = partials.rdd.getNumPartitions()
@@ -598,12 +611,9 @@ def mg_sketch_with_tokens(
     row — still one scan, but prefer the combiner when cardinality allows
     (the ``"auto"`` probe does this).
     """
+    manifest = _mg_manifest(k, key_col, weight_col, token_col)
     if pre_aggregate == "auto":
-        import os
-
-        if checkpoint_dir is not None and os.path.exists(
-            os.path.join(checkpoint_dir, "_SUCCESS")
-        ):
+        if checkpoint_dir is not None and checkpoint_ready(checkpoint_dir, manifest):
             pre_aggregate = False  # resuming from partials; no probe needed
         else:
             pre_aggregate = _combiner_probe(df, key_col)
@@ -618,7 +628,9 @@ def mg_sketch_with_tokens(
         weight_col = "_w"
         if token_col is not None:
             token_col = "_tok"
-    return _mg_sketch_core(df, key_col, k, weight_col, token_col, checkpoint_dir, fanout)
+    return _mg_sketch_core(
+        df, key_col, k, weight_col, token_col, checkpoint_dir, fanout, manifest
+    )
 
 
 def mg_sketch(
@@ -922,8 +934,12 @@ def mg_topk(
     if pre_aggregate:
         pre = df.groupBy(token_col).agg(F.count("*").cast("long").alias("_w"))
         encoded = encode_tokens(pre, token_col)
+        # Both paths sketch the unweighted token stream and this path
+        # decodes keys without exemplars below, so a checkpoint from
+        # either path resumes into the other: one manifest for both.
+        manifest = _mg_manifest(k, "key", None, None)
         state, mapping = _mg_sketch_core(
-            encoded, "key", k, "_w", token_col, checkpoint_dir, 64
+            encoded, "key", k, "_w", token_col, checkpoint_dir, 64, manifest
         )
         # A checkpoint written by the zero-shuffle path (or older code)
         # carries no exemplars; resolve any un-decoded keys with the

@@ -8,14 +8,14 @@ from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from mgspark.sketches.base import (  # noqa: F401
     MergeableSketch,
     sketch_agg,
     sketch_agg_grouped,
     sketch_partials,
-    sketch_tree_merge,
 )
 from mgspark.sketches.bloom import BloomFilter  # noqa: F401
 from mgspark.sketches.cms import CountMinSketch  # noqa: F401
@@ -33,7 +33,6 @@ __all__ = [
     "sketch_agg",
     "sketch_agg_grouped",
     "sketch_partials",
-    "sketch_tree_merge",
     "hll_distinct",
     "cms_estimates",
     "bloom_build",
@@ -57,6 +56,19 @@ def hll_distinct(df: DataFrame, col: str, p: int = 14) -> float:
     return sketch.estimate(state)
 
 
+def _hash_literals(spark: SparkSession, col: str, dtype: str, values: list) -> list:
+    """``encode_tokens`` keys of ``values`` cast to ``dtype``, in input order.
+
+    The values ride a one-row literal frame and are exploded and hashed
+    in the JVM: one job, no Python worker and no Python RDD."""
+    if not values:
+        return []
+    literals = F.array(*[F.lit(v).cast(dtype) for v in values])
+    probe = spark.sql("SELECT 1").select(F.posexplode(literals).alias("_pos", col))
+    rows = _encoded(probe, col).select("_pos", "_key").collect()
+    return [r["_key"] for r in sorted(rows, key=lambda r: r["_pos"])]
+
+
 def cms_estimates(
     df: DataFrame,
     col: str,
@@ -74,13 +86,7 @@ def cms_estimates(
     encoded = _encoded(df, col)
     state = sketch_agg(encoded, "_key", sketch)
     if probe_hashed is None:
-        spark = df.sparkSession
-        probe_df = spark.createDataFrame(
-            [(v,) for v in probe_keys], f"{col} {dict(df.dtypes)[col]}"
-        )
-        probe_hashed = [
-            r["_key"] for r in _encoded(probe_df, col).select("_key").collect()
-        ]
+        probe_hashed = _hash_literals(df.sparkSession, col, dict(df.dtypes)[col], probe_keys)
     elif len(probe_hashed) != len(probe_keys):
         raise ValueError("probe_hashed must align with probe_keys")
     ests = sketch.estimate(state, np.asarray(probe_hashed, dtype=np.int64))

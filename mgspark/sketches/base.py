@@ -2,19 +2,22 @@
 every sketch family (HLL, Count-Min, Bloom, t-digest, KLL, ...).
 
 Same execution shape as the MG pipeline (mgspark/aggregate.py): stage 1
-is a shuffle-free ``mapInPandas`` over the scan partitions, each task
+is a shuffle-free ``mapInArrow`` over the scan partitions, each task
 folding its Arrow batches into one O(sketch-size) state and emitting a
-single serialized row; stage 2 tree-merges the partial rows with
-``applyInPandas``.  PySpark has no Python UDAF merge hook, so the
-partial/final split is staged explicitly.
+single serialized row; stage 2 runs distributed ``applyInPandas`` merge
+rounds only while more than ``fanout`` partial rows remain, then folds
+the last <= fanout rows on the driver.  PySpark has no Python UDAF merge
+hook, so the partial/final split is staged explicitly.
 
 A sketch family implements the five kernel hooks below on numpy state;
-the Spark plumbing (``sketch_partials`` / ``sketch_tree_merge`` /
-``sketch_agg``) is shared and never touches per-row Python.
+the Spark plumbing (``sketch_partials`` / ``sketch_agg``) is shared and
+never touches per-row Python.
 """
 
 from __future__ import annotations
 
+import json
+import os
 import time
 from abc import ABC, abstractmethod
 from typing import Any, Iterator
@@ -33,7 +36,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-__all__ = ["MergeableSketch", "sketch_partials", "sketch_tree_merge", "sketch_agg", "sketch_agg_grouped", "splitmix64"]
+__all__ = ["MergeableSketch", "sketch_partials", "sketch_agg", "sketch_agg_grouped", "splitmix64"]
 
 SKETCH_PARTIAL_SCHEMA = StructType(
     [
@@ -86,6 +89,16 @@ class MergeableSketch(ABC):
     @abstractmethod
     def deserialize(self, blob: bytes) -> Any: ...
 
+    def params(self) -> dict:
+        """The constructor parameters (and values derived from them) that
+        shape the state: its public scalar attributes.  A checkpoint
+        records them so partials built with other parameters are refused."""
+        return {
+            name: value
+            for name, value in vars(self).items()
+            if not name.startswith("_") and isinstance(value, (int, float, str))
+        }
+
 
 def sketch_partials(df: DataFrame, col: str, sketch: MergeableSketch) -> DataFrame:
     """Stage 1: one serialized partial sketch per non-empty scan partition.
@@ -120,43 +133,109 @@ def sketch_partials(df: DataFrame, col: str, sketch: MergeableSketch) -> DataFra
     return projected.mapInArrow(build, SKETCH_PARTIAL_SCHEMA)
 
 
-def sketch_tree_merge(
-    partials: DataFrame,
-    sketch: MergeableSketch,
-    fanout: int = 64,
-    num_partials: int | None = None,
-) -> DataFrame:
-    """Stage 2: lazy tree merge of partial rows (ceil(log_fan P) rounds)."""
-    if num_partials is None:
-        num_partials = partials.rdd.getNumPartitions()
+_MANIFEST = "_manifest.json"  # leading "_": Spark's parquet reader skips it
+
+
+def checkpoint_manifest(
+    family: str,
+    params: dict,
+    key_col: str,
+    weight_col: str | None = None,
+    token_col: str | None = None,
+) -> dict:
+    """What a partials checkpoint was built from: the sketch family, its
+    parameters and the key, weight and token columns it read."""
+    manifest = {
+        "family": family,
+        "params": params,
+        "key_col": key_col,
+        "weight_col": weight_col,
+        "token_col": token_col,
+    }
+    # JSON round trip, so a fresh manifest compares equal to a stored one.
+    return json.loads(json.dumps(manifest, sort_keys=True))
+
+
+def checkpoint_ready(checkpoint_dir: str, manifest: dict) -> bool:
+    """True when ``checkpoint_dir`` holds complete partials to resume from.
+
+    Raises ``ValueError`` when its manifest differs from ``manifest``:
+    resuming partials built with another family, parameters or columns
+    would silently answer a different query.  Partials written without
+    a manifest (by hand, or by code that predates it) are trusted as
+    before.
+    """
+    if not os.path.exists(os.path.join(checkpoint_dir, "_SUCCESS")):
+        return False
+    path = os.path.join(checkpoint_dir, _MANIFEST)
+    if not os.path.exists(path):
+        return True
+    with open(path, encoding="utf8") as f:
+        stored = json.load(f)
+    if stored != manifest:
+        diff = {
+            key: (stored.get(key), manifest.get(key))
+            for key in sorted(stored.keys() | manifest.keys())
+            if stored.get(key) != manifest.get(key)
+        }
+        raise ValueError(
+            f"checkpoint {checkpoint_dir} was built for another query "
+            f"({{field: (checkpoint, requested)}} = {diff}); "
+            "delete it or pass a fresh checkpoint_dir"
+        )
+    return True
+
+
+def write_checkpoint(partials: DataFrame, checkpoint_dir: str, manifest: dict) -> None:
+    """Persist stage-1 partial rows as parquet, with their manifest beside them."""
+    partials.write.mode("overwrite").parquet(checkpoint_dir)
+    with open(os.path.join(checkpoint_dir, _MANIFEST), "w", encoding="utf8") as f:
+        json.dump(manifest, f, sort_keys=True)
+
+
+def checkpoint_partitions(partials: DataFrame) -> int:
+    """Round-planning bound for checkpointed partials: max(partition_id)+1.
+
+    Not a row count: empty stage-1 partitions emit no row, so
+    checkpointed ids can be sparse and count() would under-plan the
+    merge rounds, leaving more rows than one fold should take.
+    """
+    max_pid = partials.agg(F.max("partition_id").alias("m")).first()["m"]
+    return (int(max_pid) + 1) if max_pid is not None else 0
+
+
+def _fold(sketch: MergeableSketch, payloads) -> Any:
+    """Sequential merge of serialized states, from ``zero()``, in the given order."""
+    state = sketch.zero()
+    for blob in payloads:
+        state = sketch.merge(state, sketch.deserialize(bytes(blob)))
+    return state
+
+
+def _merge_round(partials: DataFrame, sketch: MergeableSketch, fanout: int) -> DataFrame:
+    """One distributed merge round: bucket by ``partition_id // fanout``
+    and fold each bucket, in ascending partition-id order, in one
+    ``applyInPandas`` task.  The bucket id is the next round's
+    (dense) partition id."""
 
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
         start = time.perf_counter()
-        bucket = int(pdf["_bucket"].iloc[0])
         pdf = pdf.sort_values("partition_id")
-        state = sketch.zero()
-        for blob in pdf["payload"]:
-            state = sketch.merge(state, sketch.deserialize(bytes(blob)))
+        state = _fold(sketch, pdf["payload"])
         return pd.DataFrame(
             {
-                "partition_id": [bucket],
+                "partition_id": [int(pdf["_bucket"].iloc[0])],
                 "payload": [sketch.serialize(state)],
                 "rows": [int(pdf["rows"].sum())],
                 "wall_sec": [time.perf_counter() - start],
             }
         )
 
-    merged = partials
-    remaining = max(int(num_partials), 1)
-    while True:
-        merged = (
-            merged.withColumn("_bucket", (F.col("partition_id") / fanout).cast("long"))
-            .groupBy("_bucket")
-            .applyInPandas(merge_group, SKETCH_PARTIAL_SCHEMA)
-        )
-        if remaining <= fanout:
-            return merged
-        remaining = -(-remaining // fanout)
+    return (
+        partials.withColumn("_bucket", (F.col("partition_id") / fanout).cast("long"))
+        .groupBy("_bucket")
+        .applyInPandas(merge_group, SKETCH_PARTIAL_SCHEMA)
+    )
 
 
 def sketch_agg(
@@ -166,35 +245,39 @@ def sketch_agg(
     fanout: int = 64,
     checkpoint_dir: str | None = None,
 ) -> Any:
-    """End-to-end: build + tree-merge, return the final state on the driver.
+    """End-to-end: build + merge, return the final state on the driver.
+
+    Stage 2 plans distributed merge rounds only while more than
+    ``fanout`` partials remain (none at all for <= ``fanout`` input
+    partitions), then collects the <= ``fanout`` remaining rows and folds
+    them on the driver with ``sketch.merge`` from ``zero()`` in ascending
+    ``partition_id`` order — the fold the last ``applyInPandas`` task
+    would run, so even the order-sensitive families (t-digest, KLL) get
+    the same state, minus that round's shuffle and Python-worker wave.
+    Driver memory is bounded by ``fanout`` x payload size (e.g. 64 x
+    1.5 MB for a Count-Min sketch at ``eps=1e-4``), what that last merge
+    task would otherwise hold.
 
     ``checkpoint_dir`` persists the stage-1 partial rows (payload +
-    lineage/metrics) to parquet; a rerun resumes from them — same
-    contract as the MG pipeline's checkpointing.
+    lineage/metrics) to parquet with a manifest of the family, its
+    parameters and ``col``; a rerun resumes from them — same contract
+    as the MG pipeline's checkpointing — and raises ``ValueError`` if
+    they were built for another family, parameters or column.
     """
     if checkpoint_dir is not None:
-        import os
-
-        spark = df.sparkSession
-        if not os.path.exists(os.path.join(checkpoint_dir, "_SUCCESS")):
-            sketch_partials(df, col, sketch).write.mode("overwrite").parquet(
-                checkpoint_dir
-            )
-        partials = spark.read.parquet(checkpoint_dir)
-        # Upper bound on max(partition_id)+1, not a row count: checkpointed
-        # ids can be sparse (empty partitions emit no row) and count()
-        # would under-plan the merge rounds.
-        max_pid = partials.agg(F.max("partition_id").alias("m")).first()["m"]
-        num_partials = (int(max_pid) + 1) if max_pid is not None else 0
+        manifest = checkpoint_manifest(sketch.name, sketch.params(), col)
+        if not checkpoint_ready(checkpoint_dir, manifest):
+            write_checkpoint(sketch_partials(df, col, sketch), checkpoint_dir, manifest)
+        partials = df.sparkSession.read.parquet(checkpoint_dir)
+        remaining = checkpoint_partitions(partials)
     else:
         partials = sketch_partials(df, col, sketch)
-        num_partials = None
-    rows = sketch_tree_merge(partials, sketch, fanout, num_partials).collect()
-    if not rows:
-        return sketch.zero()
-    if len(rows) != 1:
-        raise AssertionError(f"tree merge left {len(rows)} rows; round planning bug")
-    return sketch.deserialize(bytes(rows[0]["payload"]))
+        remaining = partials.rdd.getNumPartitions()
+    while remaining > fanout:
+        partials = _merge_round(partials, sketch, fanout)
+        remaining = -(-remaining // fanout)
+    rows = sorted(partials.collect(), key=lambda r: r["partition_id"])
+    return _fold(sketch, (r["payload"] for r in rows))
 
 
 GROUPED_PARTIAL_SCHEMA_SUFFIX = [
@@ -240,7 +323,7 @@ def sketch_agg_grouped(
     Stage 2 merges each group's partials in ascending ``_salt`` order —
     deterministic, so order-sensitive-within-bound families (t-digest,
     KLL) reproduce bit-identical results across reruns of the same
-    input (same reason ``sketch_tree_merge`` sorts by partition_id).
+    input (same reason ``sketch_agg`` folds in partition-id order).
 
     Output: (group_col, _salt=0, payload binary, rows long); map the
     family's ``estimate``/query over the payloads (e.g. HLL distinct
@@ -320,9 +403,7 @@ def sketch_agg_grouped(
         # Ascending salt order: deterministic merges for families that
         # are only order-insensitive within their error bound.
         pdf = pdf.sort_values("_salt")
-        state = sketch.zero()
-        for blob in pdf["payload"]:
-            state = sketch.merge(state, sketch.deserialize(bytes(blob)))
+        state = _fold(sketch, pdf["payload"])
         return pd.DataFrame(
             {
                 group_col: [pdf[group_col].iloc[0]],

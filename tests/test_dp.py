@@ -171,7 +171,7 @@ def test_user_level_merged_threshold_stricter_than_element_level():
 
 
 @pytest.mark.parametrize("mechanism", ["approx", "pure"])
-def test_dp_distribution_ratio(reference_pmg, mechanism):
+def test_dp_distribution_ratio(mechanism):
     """Reduced-rep stochastic DP check (evaluate.py:663-881 style).
 
     Runs the mechanism on neighboring sketches and checks the outcome

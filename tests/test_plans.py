@@ -111,6 +111,41 @@ def test_grouped_sketch_exchanges_on_salted_key(docs):
     assert "_salt" in plan[salted : salted + 200]
 
 
+def _sketch_agg_collected_plan(spark, monkeypatch, partitions: int, fanout: int) -> str:
+    """Formatted plan tree of the frame ``sketch_agg`` collects, taken
+    before it runs (an executed adaptive plan lists its nodes twice)."""
+    from mgspark.sketches import HLLSketch
+    from mgspark.sketches.base import sketch_agg
+
+    df = spark.range(0, 1_000, numPartitions=partitions)
+    frame_type = type(df)
+    real_collect = frame_type.collect
+    collected = []
+
+    def spy(self):
+        collected.append(_formatted(self).split("\n\n")[0])
+        return real_collect(self)
+
+    monkeypatch.setattr(frame_type, "collect", spy)
+    sketch_agg(df, "id", HLLSketch(p=10), fanout=fanout)
+    monkeypatch.undo()
+    assert len(collected) == 1
+    return collected[0]
+
+
+def test_sketch_agg_folds_last_round_on_driver(spark, monkeypatch):
+    """Within fanout, sketch_agg collects the stage-1 partials directly:
+    no FlatMapGroupsInPandas merge round and no Exchange.  Past fanout
+    (6 partitions, fanout 2) it runs exactly the two distributed rounds
+    that bring the partials down to <= fanout rows."""
+    tree = _sketch_agg_collected_plan(spark, monkeypatch, partitions=4, fanout=64)
+    assert "MapInArrow" in tree
+    assert "FlatMapGroupsInPandas" not in tree
+    assert "Exchange" not in tree
+    tree = _sketch_agg_collected_plan(spark, monkeypatch, partitions=6, fanout=2)
+    assert tree.count("FlatMapGroupsInPandas (") == 2, tree
+
+
 def test_combiner_preagg_has_mapside_partial_agg(docs):
     """The combiner plan must show a two-phase hash aggregate (partial
     map-side combine before the exchange): shuffle bytes are then

@@ -138,6 +138,88 @@ def test_sketch_agg_checkpoint_resume(spark, tables, tmp_path):
     assert np.array_equal(s1, s2)
 
 
+def test_sketch_agg_checkpoint_refuses_other_parameters(spark, tmp_path):
+    """A checkpoint built for HLL p=12 must not silently answer a p=14
+    (or other-column) query: its manifest makes the resume raise."""
+    from mgspark.sketches import HLLSketch
+    from mgspark.sketches.base import sketch_agg
+
+    df = spark.range(0, 2_000, numPartitions=2)
+    ckpt = str(tmp_path / "hll_p12")
+    sketch_agg(df, "id", HLLSketch(p=12), checkpoint_dir=ckpt)
+    with pytest.raises(ValueError, match="params"):
+        sketch_agg(df, "id", HLLSketch(p=14), checkpoint_dir=ckpt)
+    with pytest.raises(ValueError, match="key_col"):
+        sketch_agg(df.withColumnRenamed("id", "v"), "v", HLLSketch(p=12), checkpoint_dir=ckpt)
+
+
+def _families():
+    from mgspark.sketches import BloomFilter, CountMinSketch, HLLSketch, KLLSketch, TDigest
+
+    return {
+        "hll": (HLLSketch(p=10), "id"),
+        "cms": (CountMinSketch(eps=1e-2, delta=1e-2), "id"),
+        "bloom": (BloomFilter(capacity=10_000), "id"),
+        "tdigest": (TDigest(compression=50), "x"),
+        "kll": (KLLSketch(k=32), "x"),
+    }
+
+
+def _reference_merge(sketch, rows, fanout: int, num_partitions: int):
+    """sketch_agg's merge in plain Python: sequential folds of each
+    ``partition_id // fanout`` bucket while more than ``fanout`` remain,
+    then one sequential fold of the rest in partition-id order."""
+    from functools import reduce
+
+    def fold(states):
+        return reduce(sketch.merge, states, sketch.zero())
+
+    states = {r["partition_id"]: sketch.deserialize(bytes(r["payload"])) for r in rows}
+    while num_partitions > fanout:
+        buckets: dict = {}
+        for pid in sorted(states):
+            buckets.setdefault(pid // fanout, []).append(states[pid])
+        states = {bucket: fold(group) for bucket, group in buckets.items()}
+        num_partitions = -(-num_partitions // fanout)
+    return fold(states[pid] for pid in sorted(states))
+
+
+@pytest.mark.parametrize("fanout", [64, 2])
+@pytest.mark.parametrize("family", ["hll", "cms", "bloom", "tdigest", "kll"])
+def test_sketch_agg_driver_fold_matches_sequential_fold(spark, family, fanout):
+    """sketch_agg's state is bit-identical to folding the collected
+    stage-1 partials in partition-id order (at fanout=2 over 6
+    partitions, after the same two bucketed rounds the distributed
+    merge runs) — including the order-sensitive t-digest and KLL."""
+    from mgspark.sketches.base import sketch_agg, sketch_partials
+
+    sketch, col = _families()[family]
+    df = spark.range(0, 6_000, numPartitions=6).withColumn(
+        "x", ((F.col("id") * 7919) % 1009) / F.lit(7.0)
+    )
+    rows = sketch_partials(df, col, sketch).collect()
+    assert len(rows) == 6
+    expected = _reference_merge(sketch, rows, fanout, 6)
+    state = sketch_agg(df, col, sketch, fanout=fanout)
+    assert sketch.serialize(state) == sketch.serialize(expected)
+
+
+def test_sketch_agg_within_fanout_runs_one_job(spark):
+    """<= fanout input partitions: the build's collect is the only Spark
+    job — no merge-round shuffle, no second Python-worker wave."""
+    from mgspark.sketches import HLLSketch
+    from mgspark.sketches.base import sketch_agg
+
+    sc = spark.sparkContext
+    group = "test-sketch-agg-one-job"
+    sc.setJobGroup(group, "sketch_agg within fanout")
+    try:
+        sketch_agg(spark.range(0, 4_000, numPartitions=4), "id", HLLSketch(p=10))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_hll_distinct_grouped_accuracy_and_nulls(spark):
     """Per-group HLL estimates within the published error bound (~1.04/
     sqrt(2^p), p=14 -> ~0.8%); a null group forms its own group like

@@ -95,6 +95,36 @@ def test_checkpoint_resume(spark, docs, tmp_path):
     assert (s1.n, s1.d) == (s2.n, s2.d)
 
 
+def test_checkpoint_refuses_other_k(spark, docs, tmp_path):
+    """Resuming a k=2 checkpoint into a k=64 query raised nothing and
+    returned the k=2 state; the manifest makes both resume checks (the
+    pre_aggregate="auto" probe and the sketch core) raise."""
+    ckpt = str(tmp_path / "k2_ckpt")
+    tokens = encode_tokens(content_tokens(docs, "text"), "token")
+    mg_sketch(tokens, "key", 2, checkpoint_dir=ckpt)
+    with pytest.raises(ValueError, match="params"):
+        mg_sketch(tokens, "key", 64, checkpoint_dir=ckpt)
+    with pytest.raises(ValueError, match="params"):
+        mg_sketch(tokens, "key", 64, checkpoint_dir=ckpt, pre_aggregate=False)
+
+
+def test_driver_fold_returns_only_surviving_exemplars():
+    """Exemplars of keys the final merge evicted are dropped, as the
+    distributed merge round's aligned tokens drop them."""
+    from pyspark.sql import Row
+
+    from mgspark.aggregate import _driver_fold
+
+    rows = [
+        Row(partition_id=1, keys=[2], counters=[3], tokens=["b"], n=3, d=0, rows=3, wall_sec=0.0),
+        Row(partition_id=0, keys=[1], counters=[5], tokens=["a"], n=5, d=0, rows=5, wall_sec=0.0),
+    ]
+    state, exemplars = _driver_fold(rows, k=1)
+    assert state.keys.tolist() == [1]  # key 2 is decremented away
+    assert set(exemplars) <= set(state.keys.tolist())
+    assert exemplars == {1: "a"}
+
+
 def test_checkpoint_resume_sparse_partition_ids(spark, tmp_path):
     """Checkpointed partial rows can have sparse partition ids (empty
     stage-1 partitions emit no row).  Round planning must bound rounds by
