@@ -9,7 +9,7 @@ Bloom, t-digest-style quantiles, KLL) and large-scale training-data
 pipeline operators (dedup, similarity search, text analysis).
 """
 
-from mgspark.kernel import MGState, mg_build_batch, mg_merge, mg_reference  # noqa: F401
+from mgspark.kernel import MGState, mg_build_weighted, mg_merge, mg_reference  # noqa: F401
 from mgspark import dp  # noqa: F401
 
 __version__ = "0.1.0"

@@ -4,19 +4,24 @@ PySpark exposes no Python UDAF ``merge()`` hook, so the partial/final
 split of the reference's build+merge pipeline (pmg.py:26-98, 207-246) is
 staged explicitly (SURVEY.md §4.1):
 
-    Scan parquet -> Project(tokenize/encode) -> mapInPandas(build)   [stage 1]
+    Scan parquet -> Project(tokenize/encode) -> mapInArrow(build)    [stage 1]
       -> [optional parquet checkpoint of partials]
-      -> groupBy(bucket).applyInPandas(merge) x ceil(log_fan P)      [stage 2]
-      -> collect tiny final sketch -> driver-side DP release
+      -> merge_partials: merge rounds while > fanout partials,
+         then a driver fold of the rest                           [stage 2]
+      -> driver-side DP release
 
-Stage 1 runs directly on the scan partitions — **zero shuffles**: MG build
-needs no key co-location, so each task folds its Arrow batches into one
-O(k) state and emits a single partial row.  Stage 2 shuffles only the
-partial rows (<= k keys each), which is bytes, not data.  Skewed input
-(one giant repo) cannot create a straggler because stage 1 partitions by
-input splits (``spark.sql.files.maxPartitionBytes``), not by key; the
-grouped per-entity variant (``mg_sketch_grouped``) adds an explicit salt
-column for the groupBy path instead.
+MG is one ``MergeableSketch`` family (``mgspark.sketches.mg.MGSketch``)
+and runs through the shared skeleton of ``mgspark.sketches.base``: this
+module projects MG's key, weight and token columns and calls
+``sketch_agg``.  Stage 1 runs directly on the scan partitions — **zero
+shuffles**: MG build needs no key co-location, so each task folds its
+Arrow batches into one O(k) state and emits a single partial row.
+Stage 2 moves only the partial rows (<= k keys each), which is bytes,
+not data; at <= fanout input partitions it is a plain collect.  Skewed
+input (one giant repo) cannot create a straggler because stage 1
+partitions by input splits (``spark.sql.files.maxPartitionBytes``), not
+by key; the grouped per-entity variant (``mg_sketch_grouped``) adds an
+explicit salt column for the groupBy path instead.
 
 Partial rows carry lineage + metrics (partition id, row count, wall time)
 and can be persisted to a parquet checkpoint so a killed job resumes from
@@ -25,14 +30,10 @@ partials (north_star requirement).
 
 from __future__ import annotations
 
-import time
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 
-from pyspark import TaskContext
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -43,18 +44,18 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mgspark.kernel import MGState, mg_build_weighted, mg_merge
+from mgspark.kernel import MGState, mg_build_weighted
 from mgspark.sketches.base import (
     checkpoint_manifest,
-    checkpoint_partitions,
     checkpoint_ready,
-    write_checkpoint,
+    sketch_agg,
+    sketch_partials,
 )
+from mgspark.sketches.mg import MGSketch, _aligned_tokens, _from_arrays, _update_exemplars
 
 __all__ = [
     "PARTIAL_SCHEMA",
     "mg_partials",
-    "mg_tree_merge",
     "mg_sketch",
     "mg_sketch_with_tokens",
     "mg_sketch_grouped",
@@ -65,9 +66,10 @@ __all__ = [
     "mg_topk",
 ]
 
-# One row per stage-1 task: the partial sketch plus lineage/metrics.
-# ``tokens`` (nullable) carries one exemplar token string per surviving
-# key so the release can decode keys without re-scanning the input.
+# One grouped MG sketch row (``mg_sketch_grouped``): the sketch as
+# arrays plus lineage/metrics.  ``tokens`` (nullable) carries one
+# exemplar token string per surviving key so the release can decode keys
+# without re-scanning the input.
 PARTIAL_SCHEMA = StructType(
     [
         StructField("partition_id", LongType(), False),
@@ -104,16 +106,6 @@ def _state_to_row(
             "rows": [rows],
             "wall_sec": [wall],
         }
-    )
-
-
-def _row_to_state(row, k: int) -> MGState:
-    return MGState(
-        k=k,
-        keys=np.asarray(row["keys"], dtype=np.int64),
-        counters=np.asarray(row["counters"], dtype=np.int64),
-        n=int(row["n"]),
-        d=int(row["d"]),
     )
 
 
@@ -311,41 +303,14 @@ def decode_dictionary_keys(
     return {int(r["key"]): r[value_col] for r in rows}
 
 
-def _update_exemplars(
-    exemplars: dict[int, str],
-    state_keys: np.ndarray,
-    batch_keys: np.ndarray,
-    batch_tokens,
-) -> dict[int, str]:
-    """Record one exemplar token per surviving key, from this batch.
-
-    A key is in ``state_keys`` only if it appeared in a batch folded since
-    it last (re-)entered the state, so every key missing an exemplar has
-    an occurrence in the current batch.  Prune to the surviving keys so
-    the dict stays O(k).
-    """
-    exemplars = {key: exemplars[key] for key in map(int, state_keys) if key in exemplars}
-    missing = np.asarray(
-        [key for key in state_keys.tolist() if key not in exemplars], dtype=np.int64
-    )
-    if len(missing):
-        mask = np.isin(batch_keys, missing)
-        hit_idx = np.flatnonzero(mask)
-        if len(hit_idx):
-            # First occurrence per missing key, vectorized on the masked
-            # subset; only <= k entries reach the Python loop.
-            sub_keys = batch_keys[hit_idx]
-            uniq, first = np.unique(sub_keys, return_index=True)
-            for key, sub_i in zip(uniq.tolist(), first.tolist()):
-                value = batch_tokens[int(hit_idx[sub_i])]
-                value = value.as_py() if hasattr(value, "as_py") else value
-                if value is not None:
-                    exemplars[int(key)] = str(value)
-    return exemplars
-
-
-def _aligned_tokens(exemplars: dict[int, str], state_keys: np.ndarray) -> list[str | None]:
-    return [exemplars.get(int(key)) for key in state_keys]
+def _mg_columns(key_col: str, weight_col: str | None, token_col: str | None) -> list:
+    """The key, weight and token columns ``MGSketch.build_batch`` reads."""
+    cols = [F.col(key_col).cast("long").alias("key")]
+    if weight_col is not None:
+        cols.append(F.col(weight_col).cast("long").alias("weight"))
+    if token_col is not None:
+        cols.append(F.col(token_col).cast("string").alias("token"))
+    return cols
 
 
 def mg_partials(
@@ -359,9 +324,10 @@ def mg_partials(
 
     ``mapInArrow`` streams raw Arrow record batches through a vectorized
     value_counts + merge fold (SURVEY.md §4.2) holding only O(k) state,
-    and emits exactly one partial-sketch row per non-empty task.  Arrow
-    columns go straight to numpy — no pandas block-manager construction
-    in the hot path (~40% of per-task time in profiling).
+    and emits exactly one ``SKETCH_PARTIAL_SCHEMA`` row per non-empty
+    task, its payload an ``MGSketch`` state.  Arrow columns go straight
+    to numpy — no pandas block-manager construction in the hot path
+    (~40% of per-task time in profiling).
 
     With ``token_col`` set, each partial also carries one exemplar token
     string per surviving key, so the release decodes keys without a
@@ -369,143 +335,7 @@ def mg_partials(
     boundary, so prefer this on pre-aggregated (distinct-key) inputs —
     the combiner path — where the extra bytes are O(distinct), not O(rows).
     """
-    import pyarrow as pa
-
-    cols = [F.col(key_col).cast("long").alias("key")]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("long").alias("weight"))
-    if token_col is not None:
-        cols.append(F.col(token_col).cast("string").alias("token"))
-    projected = df.select(*cols)
-    token_idx = 2 if weight_col is not None else 1
-
-    def _to_int64(column, fill: int) -> np.ndarray:
-        if column.null_count:
-            import pyarrow.compute as pc
-
-            column = pc.fill_null(column, fill)
-        return column.to_numpy(zero_copy_only=False)
-
-    def build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        start = time.perf_counter()
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        state = MGState(k=k)
-        exemplars: dict[int, str] = {}
-        rows = 0
-        for batch in batches:
-            rows += batch.num_rows
-            keys = _to_int64(batch.column(0), -1)
-            if weight_col is not None:
-                weights = _to_int64(batch.column(1), 0)
-            else:
-                weights = np.ones(len(keys), dtype=np.int64)
-            state = mg_build_weighted(state, keys, weights)
-            if token_col is not None:
-                exemplars = _update_exemplars(
-                    exemplars, state.keys, keys, batch.column(token_idx)
-                )
-        if rows == 0:
-            return
-        tokens = _aligned_tokens(exemplars, state.keys) if token_col is not None else None
-        yield pa.RecordBatch.from_pydict(
-            {
-                "partition_id": pa.array([pid], pa.int64()),
-                "keys": pa.array([state.keys.tolist()], pa.list_(pa.int64())),
-                "counters": pa.array([state.counters.tolist()], pa.list_(pa.int64())),
-                "tokens": pa.array([tokens], pa.list_(pa.string())),
-                "n": pa.array([state.n], pa.int64()),
-                "d": pa.array([state.d], pa.int64()),
-                "rows": pa.array([rows], pa.int64()),
-                "wall_sec": pa.array([time.perf_counter() - start], pa.float64()),
-            }
-        )
-
-    return projected.mapInArrow(build, PARTIAL_SCHEMA)
-
-
-def _merge_group_fn(k: int):
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        start = time.perf_counter()
-        # Pin fold order by partition id so reruns are deterministic
-        # (merge results can differ at (k+1)-th-largest ties otherwise).
-        bucket = int(pdf["_bucket"].iloc[0])
-        pdf = pdf.sort_values("partition_id")
-        state = MGState(k=k)
-        exemplars: dict[int, str] = {}
-        have_tokens = False
-        rows = 0
-        for row in pdf.itertuples(index=False):
-            fields = row._asdict()
-            state = mg_merge(state, _row_to_state(fields, k))
-            rows += int(row.rows)
-            tokens = fields.get("tokens")
-            # Missing array cells can surface as NaN through pandas.
-            if tokens is not None and not isinstance(tokens, float):
-                have_tokens = True
-                for key, token in zip(fields["keys"], tokens):
-                    if token is not None:
-                        exemplars.setdefault(int(key), str(token))
-        tokens_out = _aligned_tokens(exemplars, state.keys) if have_tokens else None
-        # The bucket id becomes the (dense) partition id of the next round.
-        return _state_to_row(state, bucket, rows, time.perf_counter() - start, tokens_out)
-
-    return merge_group
-
-
-def _merge_round(partials: DataFrame, k: int, fanout: int) -> DataFrame:
-    """One tree-merge round: bucket by ``partition_id // fanout``, merge
-    each bucket with one ``applyInPandas`` task."""
-    return (
-        partials.withColumn("_bucket", (F.col("partition_id") / fanout).cast("long"))
-        .groupBy("_bucket")
-        .applyInPandas(_merge_group_fn(k), PARTIAL_SCHEMA)
-    )
-
-
-def mg_tree_merge(
-    partials: DataFrame, k: int, fanout: int = 64, num_partials: int | None = None
-) -> DataFrame:
-    """Stage 2: balanced pairwise-style merge rounds, fully lazy.
-
-    Each round buckets partials by ``partition_id // fanout`` and merges a
-    bucket with one ``applyInPandas`` task; ceil(log_fan P) rounds leave a
-    single row.  Rounds are planned from ``num_partials`` (an upper bound
-    on stage-1 rows — one per input partition) so no counting job runs and
-    stage 1 executes exactly once.  Partial rows are <= k keys each, so
-    every round shuffles kilobytes regardless of input size.
-    """
-    if num_partials is None:
-        num_partials = partials.rdd.getNumPartitions()
-    merged = partials
-    remaining = max(int(num_partials), 1)
-    while True:
-        merged = _merge_round(merged, k, fanout)
-        if remaining <= fanout:
-            return merged
-        remaining = -(-remaining // fanout)
-
-
-def _driver_fold(rows, k: int) -> tuple[MGState, dict[int, str]]:
-    """Fold <= fanout partial rows into the final state on the driver —
-    the identical sequential merge (partition-id order, same
-    ``mg_merge``) the last ``applyInPandas`` round would run in one
-    task, minus that round's shuffle + Python-worker wave.  Bounded by
-    construction: the caller only hands over what a single merge task
-    would otherwise hold (fanout rows x O(k) counters)."""
-    state = MGState(k=k)
-    exemplars: dict[int, str] = {}
-    for row in sorted(rows, key=lambda r: r["partition_id"]):
-        fields = row.asDict()
-        state = mg_merge(state, _row_to_state(fields, k))
-        tokens = fields.get("tokens")
-        if tokens is not None:
-            for key, token in zip(fields["keys"], tokens):
-                if token is not None:
-                    exemplars.setdefault(int(key), str(token))
-    # Like _aligned_tokens in a merge round: only keys the merge kept.
-    survivors = {int(key): exemplars[int(key)] for key in state.keys if int(key) in exemplars}
-    return state, survivors
+    return sketch_partials(df, _mg_columns(key_col, weight_col, token_col), MGSketch(k))
 
 
 def _mg_manifest(
@@ -515,44 +345,6 @@ def _mg_manifest(
     (not the combiner's internal ``_w``/``_tok``), so the zero-shuffle
     and combiner plans of one query resume each other's partials."""
     return checkpoint_manifest("mg", {"k": int(k)}, key_col, weight_col, token_col)
-
-
-def _mg_sketch_core(
-    df: DataFrame,
-    key_col: str,
-    k: int,
-    weight_col: str | None,
-    token_col: str | None,
-    checkpoint_dir: str | None,
-    fanout: int,
-    manifest: dict,
-) -> tuple[MGState, dict[int, str]]:
-    """Build + tree-merge; returns (final state, exemplar token map).
-
-    ``manifest`` describes the caller's query (see :func:`_mg_manifest`);
-    a checkpoint written for another one raises ``ValueError``."""
-    spark = df.sparkSession
-    if checkpoint_dir is not None:
-        if not checkpoint_ready(checkpoint_dir, manifest):
-            write_checkpoint(
-                mg_partials(df, key_col, k, weight_col, token_col), checkpoint_dir, manifest
-            )
-        partials = spark.read.parquet(checkpoint_dir)
-        num_partials = checkpoint_partitions(partials)
-    else:
-        partials = mg_partials(df, key_col, k, weight_col, token_col)
-        num_partials = partials.rdd.getNumPartitions()
-    # Distributed rounds only while more than one merge task is needed;
-    # the last round (<= fanout tiny rows) folds on the driver with the
-    # same mg_merge in the same partition-id order — identical result,
-    # one less shuffle + Python-worker wave (that final applyInPandas
-    # round measured ~1 s of fixed latency per query at sf0.1).
-    merged = partials
-    remaining = max(int(num_partials), 1)
-    while remaining > fanout:
-        merged = _merge_round(merged, k, fanout)
-        remaining = -(-remaining // fanout)
-    return _driver_fold(merged.collect(), k)
 
 
 _PROBE_ROWS = 200_000
@@ -628,9 +420,8 @@ def mg_sketch_with_tokens(
         weight_col = "_w"
         if token_col is not None:
             token_col = "_tok"
-    return _mg_sketch_core(
-        df, key_col, k, weight_col, token_col, checkpoint_dir, fanout, manifest
-    )
+    columns = _mg_columns(key_col, weight_col, token_col)
+    return sketch_agg(df, columns, MGSketch(k), fanout, checkpoint_dir, manifest)
 
 
 def mg_sketch(
@@ -753,13 +544,8 @@ def mg_sketch_grouped(
         state = mg_build_weighted(state, keys, weights)
         tokens = None
         if token_col is not None:
-            firsts = (
-                pdf.dropna(subset=[key_col])
-                .drop_duplicates(subset=key_col)
-                .set_index(key_col)[token_col]
-            )
-            mapping = {int(key): str(tok) for key, tok in firsts.items() if tok is not None}
-            tokens = _aligned_tokens(mapping, state.keys)
+            firsts = _update_exemplars({}, state.keys, keys, pdf[token_col].to_numpy(object))
+            tokens = _aligned_tokens(firsts, state.keys)
         out = _state_to_row(state, 0, int(weights.sum()), 0.0, tokens)
         out.insert(0, "group", [pdf["_group"].iloc[0]])
         return out
@@ -774,22 +560,16 @@ def mg_sketch_grouped(
         .applyInPandas(build_group, grouped_schema)
     )
 
+    sketch = MGSketch(k)
+
     def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("partition_id")
-        state = MGState(k=k)
-        exemplars: dict[int, str] = {}
-        have_tokens = False
-        for row in pdf.itertuples(index=False):
-            fields = row._asdict()
-            state = mg_merge(state, _row_to_state(fields, k))
-            tokens = fields.get("tokens")
-            if tokens is not None and not isinstance(tokens, float):
-                have_tokens = True
-                for key, token in zip(fields["keys"], tokens):
-                    if token is not None:
-                        exemplars.setdefault(int(key), str(token))
-        tokens_out = _aligned_tokens(exemplars, state.keys) if have_tokens else None
-        out = _state_to_row(state, 0, int(pdf["rows"].sum()), 0.0, tokens_out)
+        state = sketch.zero()
+        arrays = pdf.sort_values("partition_id")[["keys", "counters", "tokens", "n", "d"]]
+        for row in arrays.itertuples(index=False, name=None):
+            state = sketch.merge(state, _from_arrays(k, *row))
+        mg, exemplars = state
+        tokens = _aligned_tokens(exemplars, mg.keys) if token_col is not None else None
+        out = _state_to_row(mg, 0, int(pdf["rows"].sum()), 0.0, tokens)
         out.insert(0, "group", [pdf["group"].iloc[0]])
         return out
 
@@ -938,9 +718,8 @@ def mg_topk(
         # decodes keys without exemplars below, so a checkpoint from
         # either path resumes into the other: one manifest for both.
         manifest = _mg_manifest(k, "key", None, None)
-        state, mapping = _mg_sketch_core(
-            encoded, "key", k, "_w", token_col, checkpoint_dir, 64, manifest
-        )
+        columns = _mg_columns("key", "_w", token_col)
+        state, mapping = sketch_agg(encoded, columns, MGSketch(k), 64, checkpoint_dir, manifest)
         # A checkpoint written by the zero-shuffle path (or older code)
         # carries no exemplars; resolve any un-decoded keys with the
         # broadcast semi-join instead of silently emitting hash strings.

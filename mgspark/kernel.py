@@ -7,7 +7,7 @@ implementation (``/root/reference/pmg.py``) in two forms:
   parity against the reference ``misra_gries`` (pmg.py:26-98), kept so the
   golden test vectors (evaluate.py:71-99) pin the semantics.  It is a test
   oracle, not the hot path.
-* :class:`MGState` + :func:`mg_build_batch` / :func:`mg_merge` — the
+* :class:`MGState` + :func:`mg_build_weighted` / :func:`mg_merge` — the
   vectorized, *mergeable-summary* formulation used by the distributed
   engine: each Arrow batch is reduced to exact counts (an exact summary is
   a valid MG summary), then folded into the running state with the
@@ -36,7 +36,7 @@ import numpy as np
 __all__ = [
     "MGState",
     "mg_reference",
-    "mg_build_batch",
+    "mg_build_weighted",
     "mg_merge",
     "mg_merge_arrays",
     "kth_largest",
@@ -169,43 +169,34 @@ def mg_merge_arrays(
     return uniq[keep], summed[keep] - offset, offset
 
 
-def mg_build_batch(state: MGState, batch: np.ndarray) -> MGState:
-    """Fold one Arrow batch of int64 elements into ``state``.
+def mg_build_weighted(
+    state: MGState, keys: np.ndarray, weights: np.ndarray | None = None
+) -> MGState:
+    """Fold one Arrow batch of int64 keys into ``state``.
 
-    The batch is reduced to exact counts with ``np.unique`` (an exact
-    summary is a valid MG summary with zero decrements), then merged under
-    the reference rule.  This replaces the reference's per-element loop
+    ``weights[i]`` is how often ``keys[i]`` occurs (pre-aggregated
+    ``(token, count)`` rows); ``None`` means each key occurs once.  The
+    batch is reduced to exact counts with ``np.unique`` (an exact summary
+    is a valid MG summary with zero decrements), then merged under the
+    reference rule.  This replaces the reference's per-element loop
     (pmg.py:81-90) with two vectorized passes and is the `no per-row
-    Python` translation described in SURVEY.md §4.2.
-    """
-    batch = np.asarray(batch, dtype=np.int64)
-    valid = batch[batch >= 0]
-    if len(valid) == 0:
-        return state
-    uniq, counts = np.unique(valid, return_counts=True)
-    keys, counters, offset = mg_merge_arrays(
-        state.keys, state.counters, uniq, counts.astype(np.int64), state.k
-    )
-    return MGState(
-        k=state.k, keys=keys, counters=counters, n=state.n + len(valid), d=state.d + offset
-    )
-
-
-def mg_build_weighted(state: MGState, keys: np.ndarray, weights: np.ndarray) -> MGState:
-    """Fold pre-aggregated ``(key, weight)`` pairs into ``state``.
-
-    Equivalent to :func:`mg_build_batch` on a stream where ``keys[i]``
-    appears ``weights[i]`` times.  Used when the upstream already holds
-    (token, count) rows.
+    Python` translation described in SURVEY.md §4.2.  Negative keys are
+    invalid and skipped.
     """
     keys = np.asarray(keys, dtype=np.int64)
-    weights = np.asarray(weights, dtype=np.int64)
     valid = keys >= 0
-    keys, weights = keys[valid], weights[valid]
+    keys = keys[valid]
     if len(keys) == 0:
         return state
-    uniq, inverse = np.unique(keys, return_inverse=True)
-    counts = np.bincount(inverse, weights=weights, minlength=len(uniq)).astype(np.int64)
+    if weights is None:
+        uniq, counts = np.unique(keys, return_counts=True)
+        counts = counts.astype(np.int64)
+        n = len(keys)
+    else:
+        weights = np.asarray(weights, dtype=np.int64)[valid]
+        uniq, inverse = np.unique(keys, return_inverse=True)
+        counts = np.bincount(inverse, weights=weights, minlength=len(uniq)).astype(np.int64)
+        n = int(weights.sum())
     merged_keys, merged_counters, offset = mg_merge_arrays(
         state.keys, state.counters, uniq, counts, state.k
     )
@@ -213,7 +204,7 @@ def mg_build_weighted(state: MGState, keys: np.ndarray, weights: np.ndarray) -> 
         k=state.k,
         keys=merged_keys,
         counters=merged_counters,
-        n=state.n + int(weights.sum()),
+        n=state.n + n,
         d=state.d + offset,
     )
 

@@ -68,9 +68,9 @@ def logreg_train(
     expression in the same IEEE arithmetic; results differ only in
     float summation order, exactly like re-partitioning the distributed
     loop does.  Inputs past the bound keep the distributed
-    one-scan-per-iteration shape; ragged or null feature rows fall back
-    to the distributed path too (it skips nulls per element_at
-    semantics).
+    one-scan-per-iteration shape; ragged feature rows, null labels and
+    null feature elements fall back to the distributed path too (it
+    skips nulls per element_at and SUM semantics).
     """
     sel = df.select(
         F.col(vec_col).alias("x"), F.col(label_col).cast("double").alias("y")
@@ -88,8 +88,12 @@ def logreg_train(
                 raise ValueError("ragged feature vectors")
         except (TypeError, ValueError):
             X = None
+        y = head["y"].to_numpy(dtype=np.float64, na_value=np.nan)
+        # A null label or array element arrives as NaN and would poison
+        # every weight; the distributed path skips nulls instead.
+        if X is not None and (np.isnan(X).any() or np.isnan(y).any()):
+            X = None
         if X is not None and X.shape[1] == dim:
-            y = head["y"].to_numpy(dtype=np.float64)
             n = len(head)
             w = np.zeros(dim)
             b = 0.0

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from mgspark.sketches.base import (  # noqa: F401
     MergeableSketch,
+    merge_partials,
     sketch_agg,
     sketch_agg_grouped,
     sketch_partials,
@@ -21,6 +22,7 @@ from mgspark.sketches.bloom import BloomFilter  # noqa: F401
 from mgspark.sketches.cms import CountMinSketch  # noqa: F401
 from mgspark.sketches.hll import HLLSketch  # noqa: F401
 from mgspark.sketches.kll import KLLSketch  # noqa: F401
+from mgspark.sketches.mg import MGSketch  # noqa: F401
 from mgspark.sketches.tdigest import TDigest  # noqa: F401
 
 __all__ = [
@@ -30,9 +32,11 @@ __all__ = [
     "BloomFilter",
     "TDigest",
     "KLLSketch",
+    "MGSketch",
     "sketch_agg",
     "sketch_agg_grouped",
     "sketch_partials",
+    "merge_partials",
     "hll_distinct",
     "cms_estimates",
     "bloom_build",

@@ -1,17 +1,19 @@
 """Mergeable-sketch framework: one partial+final aggregation skeleton for
-every sketch family (HLL, Count-Min, Bloom, t-digest, KLL, ...).
+every sketch family (Misra-Gries, HLL, Count-Min, Bloom, t-digest, KLL).
 
-Same execution shape as the MG pipeline (mgspark/aggregate.py): stage 1
-is a shuffle-free ``mapInArrow`` over the scan partitions, each task
-folding its Arrow batches into one O(sketch-size) state and emitting a
-single serialized row; stage 2 runs distributed ``applyInPandas`` merge
-rounds only while more than ``fanout`` partial rows remain, then folds
-the last <= fanout rows on the driver.  PySpark has no Python UDAF merge
-hook, so the partial/final split is staged explicitly.
+Stage 1 (``sketch_partials``) is a shuffle-free ``mapInArrow`` over the
+scan partitions, each task folding its Arrow batches into one
+O(sketch-size) state and emitting a single serialized row; stage 2
+(``merge_partials``) runs distributed ``applyInPandas`` merge rounds
+only while more than ``fanout`` partial rows remain, then folds the last
+<= fanout rows on the driver.  PySpark has no Python UDAF merge hook, so
+the partial/final split is staged explicitly.
 
-A sketch family implements the five kernel hooks below on numpy state;
-the Spark plumbing (``sketch_partials`` / ``sketch_agg``) is shared and
-never touches per-row Python.
+A sketch family implements the five kernel hooks below on numpy state.
+``build`` folds one column as a pandas Series; a family that reads
+several columns (MG: key, weight, exemplar token) overrides
+``build_batch`` to read the Arrow batch itself.  The Spark plumbing is
+shared and never touches per-row Python.
 """
 
 from __future__ import annotations
@@ -26,7 +28,7 @@ import numpy as np
 import pandas as pd
 
 from pyspark import TaskContext
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
@@ -36,7 +38,10 @@ from pyspark.sql.types import (
     StructType,
 )
 
-__all__ = ["MergeableSketch", "sketch_partials", "sketch_agg", "sketch_agg_grouped", "splitmix64"]
+__all__ = [
+    "MergeableSketch", "sketch_partials", "merge_partials", "sketch_agg",
+    "sketch_agg_grouped", "splitmix64",
+]
 
 SKETCH_PARTIAL_SCHEMA = StructType(
     [
@@ -80,6 +85,11 @@ class MergeableSketch(ABC):
     def build(self, state: Any, values: pd.Series) -> Any:
         """Fold one Arrow-batch column into the state (vectorized)."""
 
+    def build_batch(self, state: Any, batch: "pa.RecordBatch") -> Any:
+        """Fold one Arrow record batch of the projected columns into the
+        state; by default its first column, through ``build``."""
+        return self.build(state, batch.column(0).to_pandas())
+
     @abstractmethod
     def merge(self, a: Any, b: Any) -> Any: ...
 
@@ -100,15 +110,18 @@ class MergeableSketch(ABC):
         }
 
 
-def sketch_partials(df: DataFrame, col: str, sketch: MergeableSketch) -> DataFrame:
+def sketch_partials(
+    df: DataFrame, col: str | list[Column], sketch: MergeableSketch
+) -> DataFrame:
     """Stage 1: one serialized partial sketch per non-empty scan partition.
 
-    Raw Arrow record batches feed ``sketch.build`` as pandas Series built
-    from a single Arrow column — no per-batch DataFrame block manager.
+    ``col`` names the one column to sketch, or lists the projected
+    columns ``sketch.build_batch`` reads.  Raw Arrow record batches feed
+    ``sketch.build_batch`` — no per-batch DataFrame block manager.
     """
     import pyarrow as pa
 
-    projected = df.select(F.col(col).alias("_v"))
+    projected = df.select(F.col(col).alias("_v")) if isinstance(col, str) else df.select(*col)
 
     def build(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         start = time.perf_counter()
@@ -118,7 +131,7 @@ def sketch_partials(df: DataFrame, col: str, sketch: MergeableSketch) -> DataFra
         rows = 0
         for batch in batches:
             rows += batch.num_rows
-            state = sketch.build(state, batch.column(0).to_pandas())
+            state = sketch.build_batch(state, batch)
         if rows == 0:
             return
         yield pa.RecordBatch.from_pydict(
@@ -161,15 +174,18 @@ def checkpoint_ready(checkpoint_dir: str, manifest: dict) -> bool:
 
     Raises ``ValueError`` when its manifest differs from ``manifest``:
     resuming partials built with another family, parameters or columns
-    would silently answer a different query.  Partials written without
-    a manifest (by hand, or by code that predates it) are trusted as
-    before.
+    would silently answer a different query.  Complete partials without
+    a manifest (written by hand, or by code that predates it, e.g. MG's
+    old array rows) are refused too: nothing says what they hold.
     """
     if not os.path.exists(os.path.join(checkpoint_dir, "_SUCCESS")):
         return False
     path = os.path.join(checkpoint_dir, _MANIFEST)
     if not os.path.exists(path):
-        return True
+        raise ValueError(
+            f"checkpoint {checkpoint_dir} has no {_MANIFEST}, so what its partials "
+            "were built from is unknown; delete it or pass a fresh checkpoint_dir"
+        )
     with open(path, encoding="utf8") as f:
         stored = json.load(f)
     if stored != manifest:
@@ -238,46 +254,56 @@ def _merge_round(partials: DataFrame, sketch: MergeableSketch, fanout: int) -> D
     )
 
 
-def sketch_agg(
-    df: DataFrame,
-    col: str,
-    sketch: MergeableSketch,
-    fanout: int = 64,
-    checkpoint_dir: str | None = None,
+def merge_partials(
+    partials: DataFrame, num_partials: int, sketch: MergeableSketch, fanout: int = 64
 ) -> Any:
-    """End-to-end: build + merge, return the final state on the driver.
+    """Stage 2: merge partial rows into the final state on the driver.
 
-    Stage 2 plans distributed merge rounds only while more than
-    ``fanout`` partials remain (none at all for <= ``fanout`` input
-    partitions), then collects the <= ``fanout`` remaining rows and folds
-    them on the driver with ``sketch.merge`` from ``zero()`` in ascending
-    ``partition_id`` order — the fold the last ``applyInPandas`` task
-    would run, so even the order-sensitive families (t-digest, KLL) get
-    the same state, minus that round's shuffle and Python-worker wave.
-    Driver memory is bounded by ``fanout`` x payload size (e.g. 64 x
-    1.5 MB for a Count-Min sketch at ``eps=1e-4``), what that last merge
-    task would otherwise hold.
-
-    ``checkpoint_dir`` persists the stage-1 partial rows (payload +
-    lineage/metrics) to parquet with a manifest of the family, its
-    parameters and ``col``; a rerun resumes from them — same contract
-    as the MG pipeline's checkpointing — and raises ``ValueError`` if
-    they were built for another family, parameters or column.
+    Plans distributed merge rounds only while more than ``fanout`` of the
+    ``num_partials`` partition ids remain, then collects the <= ``fanout``
+    remaining rows and folds them on the driver with ``sketch.merge``
+    from ``zero()`` in ascending ``partition_id`` order — the fold the
+    last ``applyInPandas`` task would run, so even the order-sensitive
+    families (t-digest, KLL, MG) get the same state, minus that round's
+    shuffle and Python-worker wave.  Driver memory is bounded by
+    ``fanout`` x payload size (e.g. 64 x 1.5 MB for a Count-Min sketch
+    at ``eps=1e-4``), what that last merge task would otherwise hold.
     """
-    if checkpoint_dir is not None:
-        manifest = checkpoint_manifest(sketch.name, sketch.params(), col)
-        if not checkpoint_ready(checkpoint_dir, manifest):
-            write_checkpoint(sketch_partials(df, col, sketch), checkpoint_dir, manifest)
-        partials = df.sparkSession.read.parquet(checkpoint_dir)
-        remaining = checkpoint_partitions(partials)
-    else:
-        partials = sketch_partials(df, col, sketch)
-        remaining = partials.rdd.getNumPartitions()
+    remaining = num_partials
     while remaining > fanout:
         partials = _merge_round(partials, sketch, fanout)
         remaining = -(-remaining // fanout)
     rows = sorted(partials.collect(), key=lambda r: r["partition_id"])
     return _fold(sketch, (r["payload"] for r in rows))
+
+
+def sketch_agg(
+    df: DataFrame,
+    col: str | list[Column],
+    sketch: MergeableSketch,
+    fanout: int = 64,
+    checkpoint_dir: str | None = None,
+    manifest: dict | None = None,
+) -> Any:
+    """End-to-end ``sketch_partials`` + ``merge_partials``: the final
+    state on the driver.  ``col`` is one column name, or the projected
+    columns the family's ``build_batch`` reads.
+
+    ``checkpoint_dir`` persists the stage-1 partial rows (payload +
+    lineage/metrics) to parquet with ``manifest`` — by default the
+    family, its parameters and ``col``; MG passes one over the caller's
+    own columns, shared by its zero-shuffle and combiner plans.  A rerun
+    resumes from them and raises ``ValueError`` on another manifest.
+    """
+    if checkpoint_dir is None:
+        partials = sketch_partials(df, col, sketch)
+        return merge_partials(partials, partials.rdd.getNumPartitions(), sketch, fanout)
+    if manifest is None:
+        manifest = checkpoint_manifest(sketch.name, sketch.params(), col)
+    if not checkpoint_ready(checkpoint_dir, manifest):
+        write_checkpoint(sketch_partials(df, col, sketch), checkpoint_dir, manifest)
+    partials = df.sparkSession.read.parquet(checkpoint_dir)
+    return merge_partials(partials, checkpoint_partitions(partials), sketch, fanout)
 
 
 GROUPED_PARTIAL_SCHEMA_SUFFIX = [

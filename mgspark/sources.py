@@ -5,7 +5,7 @@
   pmg.py:515-517) — as a distributed Spark text source;
 * JSON sketch files — ``{"key": counter}`` objects (pmg.py:222-225,
   532-534) — loaded into partial-sketch rows ready for
-  :func:`mgspark.aggregate.mg_tree_merge`, and written back out;
+  :func:`mgspark.sketches.base.merge_partials`, and written back out;
 * parquet checkpoint partials (the engine's own resumable format);
 * catalog tables — ``table:NAME`` (session catalog) and
   ``iceberg:catalog.db.table`` (Apache Iceberg DataSource-V2 reader with
@@ -115,22 +115,23 @@ def read_stream_file(spark: SparkSession, path: str) -> DataFrame:
 def read_sketch_jsons(spark: SparkSession, paths: list[str], k: int) -> DataFrame:
     """Load reference JSON sketch files as partial-sketch rows.
 
-    Each file becomes one row of the engine's PARTIAL_SCHEMA (n and d are
-    unknown for foreign sketches — recorded as 0, matching the reference
-    merge which ignores them, pmg.py:207-246).  Fold order in the tree
-    merge follows the given path order via ``partition_id``.
+    Each file becomes one ``SKETCH_PARTIAL_SCHEMA`` row whose payload is
+    an ``MGSketch(k)`` state (n and d are unknown for foreign sketches —
+    recorded as 0, matching the reference merge which ignores them,
+    pmg.py:207-246).  Fold order in ``merge_partials`` follows the given
+    path order via ``partition_id``.
     """
-    from mgspark.aggregate import PARTIAL_SCHEMA
+    from mgspark.sketches.base import SKETCH_PARTIAL_SCHEMA
+    from mgspark.sketches.mg import MGSketch
 
+    sketch = MGSketch(k)
     rows = []
     for i, path in enumerate(paths):
         with open(path, encoding="utf8") as f:
-            sketch = {int(key): counter for key, counter in json.load(f).items()}
-        state = MGState.from_dict(sketch, k)
-        rows.append(
-            (i, state.keys.tolist(), state.counters.tolist(), None, 0, 0, len(sketch), 0.0)
-        )
-    return spark.createDataFrame(rows, PARTIAL_SCHEMA)
+            counters = {int(key): counter for key, counter in json.load(f).items()}
+        payload = sketch.serialize((MGState.from_dict(counters, k), {}))
+        rows.append((i, payload, len(counters), 0.0))
+    return spark.createDataFrame(rows, SKETCH_PARTIAL_SCHEMA)
 
 
 def write_sketch_json(state_or_dict, path: str) -> None:

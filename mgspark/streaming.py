@@ -112,29 +112,12 @@ def mg_streaming_sketch(
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        from mgspark.aggregate import _aligned_tokens, _update_exemplars
+        from mgspark.sketches.mg import _aligned_tokens, _from_arrays, _update_exemplars
 
-        exemplars: dict[int, str] = {}
-        if state.exists:
-            keys, counters, tokens, n, d = state.get
-            mg = MGState(
-                k=k,
-                keys=np.asarray(keys, dtype=np.int64),
-                counters=np.asarray(counters, dtype=np.int64),
-                n=int(n),
-                d=int(d),
-            )
-            if tokens is not None:
-                exemplars = {
-                    int(key): str(tok)
-                    for key, tok in zip(keys, tokens)
-                    if tok is not None
-                }
-        else:
-            mg = MGState(k=k)
+        mg, exemplars = _from_arrays(k, *state.get) if state.exists else (MGState(k=k), {})
         for pdf in batches:
             batch_keys = pdf["key"].to_numpy(dtype=np.int64, na_value=-1)
-            mg = mg_build_weighted(mg, batch_keys, np.ones(len(batch_keys), dtype=np.int64))
+            mg = mg_build_weighted(mg, batch_keys)
             if token_col is not None:
                 exemplars = _update_exemplars(
                     exemplars, mg.keys, batch_keys, pdf["token"].to_numpy(object)

@@ -38,7 +38,7 @@ def tree(df) -> str:
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from mgspark.aggregate import encode_tokens, mg_partials, mg_tree_merge
+    from mgspark.aggregate import encode_tokens, mg_partials
     from mgspark.pipeline.dedup import minhash_dedup_pairs, ngram_jaccard_pairs
     from mgspark.pipeline.textstats import bpe_token_stats, lang_id
     from mgspark.session import get_spark
@@ -61,11 +61,16 @@ def main() -> None:
         tree(mg_partials(tokens, "key", 64)),
     ))
 
+    from mgspark.sketches.base import _merge_round
+    from mgspark.sketches.mg import MGSketch
+
     sections.append((
-        "MG stage 1+2: build + tree merge",
+        "MG stage 2: one distributed merge round (past fanout partials)",
         "Exactly one hash exchange, and it moves <= k-row partial "
-        "sketches (kilobytes at any input size), never raw tokens.",
-        tree(mg_tree_merge(mg_partials(tokens, "key", 64), 64)),
+        "sketches (kilobytes at any input size), never raw tokens.  "
+        "Within fanout partials merge_partials runs no round at all: it "
+        "collects the stage-1 rows and folds them on the driver.",
+        tree(_merge_round(mg_partials(tokens, "key", 64), MGSketch(64), 64)),
     ))
 
     pre = tokens.groupBy("key").agg(F.count("*").cast("long").alias("_w"))

@@ -27,7 +27,7 @@ from mgspark import dp  # noqa: E402
 from mgspark.evalx import accuracy_sweep, time_operator  # noqa: E402
 from mgspark.kernel import (  # noqa: E402
     MGState,
-    mg_build_batch,
+    mg_build_weighted,
     mg_merge_dicts,
     mg_reference,
 )
@@ -36,7 +36,7 @@ RNG = np.random.default_rng(42)
 
 
 def _vectorized_build(stream: np.ndarray, k: int) -> MGState:
-    return mg_build_batch(MGState(k=k), stream)
+    return mg_build_weighted(MGState(k=k), stream)
 
 
 def sweep_stream_length() -> list[dict]:

@@ -72,3 +72,20 @@ def test_score_plan_has_no_python_node(spark):
     )
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert marker not in plan, marker
+
+
+def test_local_path_falls_back_on_null_label_or_element(spark):
+    """A null label or null feature element would turn the local GD's
+    weights into NaN; the local path falls back to the distributed one,
+    which skips nulls."""
+    rng = np.random.default_rng(6)
+    X = rng.integers(-4, 5, size=(30, 3)).astype(float)
+    y = (X.sum(axis=1) > 0).astype(int)
+    rows = [(i, [float(v) for v in x], int(lbl)) for i, (x, lbl) in enumerate(zip(X, y))]
+    rows[3] = (3, [1.0, None, -2.0], 1)
+    rows[7] = (7, rows[7][1], None)
+    df = spark.createDataFrame(rows, "doc_id long, features array<double>, label long")
+    w, b = logreg_train(df, "features", "label", iterations=6, lr=0.3)
+    assert np.isfinite(w).all() and np.isfinite(b)
+    rw, rb = logreg_train(df, "features", "label", iterations=6, lr=0.3, local_elements=0)
+    assert np.allclose(w, rw) and abs(b - rb) < 1e-9

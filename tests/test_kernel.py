@@ -10,7 +10,6 @@ import pytest
 from mgspark.kernel import (
     MGState,
     kth_largest,
-    mg_build_batch,
     mg_build_weighted,
     mg_merge,
     mg_merge_dicts,
@@ -107,7 +106,7 @@ def test_batch_kernel_bound_randomized():
         pos = 0
         while pos < length:
             step = int(rng.integers(1, 500))
-            state = mg_build_batch(state, stream[pos : pos + step])
+            state = mg_build_weighted(state, stream[pos : pos + step])
             pos += step
         assert state.n == length
         assert len(state.keys) <= max(k, 0) or length == 0
@@ -115,13 +114,18 @@ def test_batch_kernel_bound_randomized():
 
 
 def test_weighted_build_equals_batch_build():
+    """Unweighted build (each key once) equals the weighted build over
+    the stream's exact counts, and over unit weights."""
     rng = np.random.default_rng(7)
     stream = (rng.zipf(1.3, size=2000) % 100).astype(np.int64)
     uniq, counts = np.unique(stream, return_counts=True)
-    a = mg_build_batch(MGState(k=8), stream)
-    b = mg_build_weighted(MGState(k=8), uniq, counts)
-    assert a.to_dict() == b.to_dict()
-    assert (a.n, a.d) == (b.n, b.d)
+    a = mg_build_weighted(MGState(k=8), stream)
+    for b in (
+        mg_build_weighted(MGState(k=8), uniq, counts),
+        mg_build_weighted(MGState(k=8), stream, np.ones(len(stream), dtype=np.int64)),
+    ):
+        assert a.to_dict() == b.to_dict()
+        assert (a.n, a.d) == (b.n, b.d)
 
 
 def test_merge_matches_reference_fold(reference_pmg, tmp_path):
@@ -154,7 +158,7 @@ def test_merge_commutative_bound_and_tie_free_equality():
             (rng.zipf(1.4, size=int(rng.integers(50, 800))) % 60).astype(np.int64)
             for _ in range(4)
         ]
-        states = [mg_build_batch(MGState(k=k), s) for s in streams]
+        states = [mg_build_weighted(MGState(k=k), s) for s in streams]
         forward = states[0]
         for s in states[1:]:
             forward = mg_merge(forward, s)

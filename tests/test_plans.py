@@ -7,7 +7,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from mgspark.aggregate import encode_tokens, mg_partials, mg_tree_merge
+from mgspark.aggregate import encode_tokens, mg_partials
 from mgspark.tokenize import content_tokens
 
 
@@ -51,18 +51,6 @@ def test_hashing_stays_in_codegen(docs):
     assert "xxhash64" in plan
     # the Project carrying the hash is inside a WholeStageCodegen span
     assert "* Project" in plan
-
-
-def test_full_job_has_single_exchange_of_partials(docs):
-    """Build + tree merge: exactly one Exchange (the tiny partial rows)."""
-    tokens = encode_tokens(content_tokens(docs, "text"), "token")
-    merged = mg_tree_merge(mg_partials(tokens, "key", 64), 64)
-    plan = _formatted(merged)
-    assert plan.count("Exchange") <= 2  # hashpartition of partials (+AQE read)
-    # the Exchange must sit above MapInPandas (partials), not below it
-    map_pos = plan.index("MapInArrow")
-    tree_section = plan[: plan.index("(1) Scan")]
-    assert "Exchange" not in tree_section[tree_section.index("MapInArrow"):]
 
 
 def test_predicate_pushdown_reaches_scan(spark, sf_dir):
@@ -111,14 +99,12 @@ def test_grouped_sketch_exchanges_on_salted_key(docs):
     assert "_salt" in plan[salted : salted + 200]
 
 
-def _sketch_agg_collected_plan(spark, monkeypatch, partitions: int, fanout: int) -> str:
-    """Formatted plan tree of the frame ``sketch_agg`` collects, taken
+def _collected_plan(monkeypatch, run) -> str:
+    """Formatted plan tree of the one frame ``run()`` collects, taken
     before it runs (an executed adaptive plan lists its nodes twice)."""
-    from mgspark.sketches import HLLSketch
-    from mgspark.sketches.base import sketch_agg
+    from pyspark.sql import SparkSession
 
-    df = spark.range(0, 1_000, numPartitions=partitions)
-    frame_type = type(df)
+    frame_type = type(SparkSession.getActiveSession().range(1))
     real_collect = frame_type.collect
     collected = []
 
@@ -127,7 +113,7 @@ def _sketch_agg_collected_plan(spark, monkeypatch, partitions: int, fanout: int)
         return real_collect(self)
 
     monkeypatch.setattr(frame_type, "collect", spy)
-    sketch_agg(df, "id", HLLSketch(p=10), fanout=fanout)
+    run()
     monkeypatch.undo()
     assert len(collected) == 1
     return collected[0]
@@ -138,12 +124,42 @@ def test_sketch_agg_folds_last_round_on_driver(spark, monkeypatch):
     no FlatMapGroupsInPandas merge round and no Exchange.  Past fanout
     (6 partitions, fanout 2) it runs exactly the two distributed rounds
     that bring the partials down to <= fanout rows."""
-    tree = _sketch_agg_collected_plan(spark, monkeypatch, partitions=4, fanout=64)
+    from mgspark.sketches import HLLSketch
+    from mgspark.sketches.base import sketch_agg
+
+    def run(partitions, fanout):
+        df = spark.range(0, 1_000, numPartitions=partitions)
+        return lambda: sketch_agg(df, "id", HLLSketch(p=10), fanout=fanout)
+
+    tree = _collected_plan(monkeypatch, run(4, 64))
     assert "MapInArrow" in tree
     assert "FlatMapGroupsInPandas" not in tree
     assert "Exchange" not in tree
-    tree = _sketch_agg_collected_plan(spark, monkeypatch, partitions=6, fanout=2)
+    tree = _collected_plan(monkeypatch, run(6, 2))
     assert tree.count("FlatMapGroupsInPandas (") == 2, tree
+
+
+def test_mg_sketch_collects_partials_without_merge_round(spark, docs, monkeypatch):
+    """The MG zero-shuffle path collects its stage-1 partials directly
+    at <= fanout partitions: the build over the scan, no Exchange and no
+    FlatMapGroupsInPandas merge round.  Past fanout (6 partitions,
+    fanout 2) the two distributed rounds appear, each above the build."""
+    from mgspark.aggregate import mg_sketch
+
+    tokens = encode_tokens(content_tokens(docs, "text"), "token")
+    tree = _collected_plan(
+        monkeypatch, lambda: mg_sketch(tokens, "key", 64, pre_aggregate=False)
+    )
+    assert "MapInArrow" in tree
+    assert "FlatMapGroupsInPandas" not in tree
+    assert "Exchange" not in tree
+    keys = spark.range(0, 1_000, numPartitions=6).select((F.col("id") % 37).alias("key"))
+    tree = _collected_plan(
+        monkeypatch, lambda: mg_sketch(keys, "key", 8, fanout=2, pre_aggregate=False)
+    )
+    assert tree.count("FlatMapGroupsInPandas (") == 2, tree
+    # the exchanges move partial rows: every one sits above the build
+    assert "Exchange" not in tree[tree.index("MapInArrow"):], tree
 
 
 def test_combiner_preagg_has_mapside_partial_agg(docs):

@@ -7,7 +7,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mgspark import dp
-from mgspark.kernel import MGState, mg_build_batch, mg_merge, mg_reference
+from mgspark.kernel import MGState, mg_build_weighted, mg_merge, mg_reference
 from mgspark.sketches.bloom import BloomFilter
 from mgspark.sketches.cms import CountMinSketch
 from mgspark.sketches.hll import HLLSketch
@@ -49,7 +49,7 @@ def test_distributed_build_merge_bound_any_partitioning(parts, k):
     """Any partitioning of a stream into batches + any pairwise merge
     order keeps the MG bound over the combined stream."""
     states = [
-        mg_build_batch(MGState(k=k), np.asarray(p, dtype=np.int64)) for p in parts
+        mg_build_weighted(MGState(k=k), np.asarray(p, dtype=np.int64)) for p in parts
     ]
     acc = states[0]
     for s in states[1:]:
@@ -168,11 +168,11 @@ def test_exemplar_invariant_every_state_key_decodable(keys):
     (the single-scan decode invariant)."""
     import numpy as np
 
-    from mgspark.aggregate import _update_exemplars
     from mgspark.kernel import MGState, mg_build_weighted
+    from mgspark.sketches.mg import _update_exemplars
 
     arr = np.asarray(keys, dtype=np.int64)
-    state = mg_build_weighted(MGState(k=8), arr, np.ones(len(arr), dtype=np.int64))
+    state = mg_build_weighted(MGState(k=8), arr)
     tokens = [f"t{key}" for key in keys]
     exemplars = _update_exemplars({}, state.keys, arr, tokens)
     assert set(map(int, state.keys)) <= set(exemplars)

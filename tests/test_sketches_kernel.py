@@ -126,3 +126,46 @@ def test_kll_rank_accuracy_and_merge():
     # serialization round-trip
     rt = sketch.deserialize(sketch.serialize(merged))
     assert all(np.array_equal(a, b) for a, b in zip(rt, merged))
+
+
+def test_mg_sketch_serialize_roundtrip():
+    """MGSketch payloads round-trip n, d, keys, counters and exemplar
+    tokens: empty and tokenless states carry no token section, keys
+    without an exemplar come back without one, and non-ASCII tokens
+    survive."""
+    from mgspark.kernel import MGState
+    from mgspark.sketches.mg import MGSketch
+
+    sketch = MGSketch(k=4)
+    states = [
+        sketch.zero(),
+        (MGState.from_dict({3: 7, 11: 2}, 4, n=12, d=3), {}),
+        (MGState.from_dict({3: 7, 11: 2, 40: 1}, 4, n=10, d=0), {3: "naïve", 40: "日本語"}),
+        (MGState.from_dict({2**61: 5}, 4, n=5, d=0), {2**61: ""}),
+    ]
+    for state, exemplars in states:
+        blob = sketch.serialize((state, exemplars))
+        got, got_exemplars = sketch.deserialize(blob)
+        assert got.keys.dtype == np.int64 and got.counters.dtype == np.int64
+        assert got.keys.tolist() == state.keys.tolist()
+        assert got.counters.tolist() == state.counters.tolist()
+        assert (got.k, got.n, got.d) == (4, state.n, state.d)
+        assert got_exemplars == exemplars
+        assert sketch.serialize((got, got_exemplars)) == blob
+    # no exemplars -> header + keys + counters only
+    assert len(sketch.serialize(states[1])) == 8 * (3 + 2 * 2)
+    assert len(sketch.serialize(states[0])) == 8 * 3
+
+
+def test_mg_sketch_merge_keeps_accumulator_exemplar():
+    """On a shared key the accumulator's token wins; tokens of evicted
+    keys are pruned."""
+    from mgspark.kernel import MGState
+    from mgspark.sketches.mg import MGSketch
+
+    sketch = MGSketch(k=2)
+    a = (MGState.from_dict({1: 5, 2: 4}, 2, n=9), {1: "a1", 2: "a2"})
+    b = (MGState.from_dict({1: 1, 3: 1}, 2, n=2), {1: "b1", 3: "b3"})
+    state, exemplars = sketch.merge(a, b)
+    assert state.to_dict() == {1: 5, 2: 3}  # offset 1 evicts key 3
+    assert exemplars == {1: "a1", 2: "a2"}

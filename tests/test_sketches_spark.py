@@ -154,9 +154,17 @@ def test_sketch_agg_checkpoint_refuses_other_parameters(spark, tmp_path):
 
 
 def _families():
-    from mgspark.sketches import BloomFilter, CountMinSketch, HLLSketch, KLLSketch, TDigest
+    from mgspark.sketches import (
+        BloomFilter,
+        CountMinSketch,
+        HLLSketch,
+        KLLSketch,
+        MGSketch,
+        TDigest,
+    )
 
     return {
+        "mg": (MGSketch(k=64), "key"),
         "hll": (HLLSketch(p=10), "id"),
         "cms": (CountMinSketch(eps=1e-2, delta=1e-2), "id"),
         "bloom": (BloomFilter(capacity=10_000), "id"),
@@ -185,18 +193,19 @@ def _reference_merge(sketch, rows, fanout: int, num_partitions: int):
 
 
 @pytest.mark.parametrize("fanout", [64, 2])
-@pytest.mark.parametrize("family", ["hll", "cms", "bloom", "tdigest", "kll"])
+@pytest.mark.parametrize("family", ["mg", "hll", "cms", "bloom", "tdigest", "kll"])
 def test_sketch_agg_driver_fold_matches_sequential_fold(spark, family, fanout):
     """sketch_agg's state is bit-identical to folding the collected
     stage-1 partials in partition-id order (at fanout=2 over 6
     partitions, after the same two bucketed rounds the distributed
-    merge runs) — including the order-sensitive t-digest and KLL."""
+    merge runs) — including the order-sensitive t-digest, KLL and MG
+    (whose (k+1)-th-largest offset depends on the fold order)."""
     from mgspark.sketches.base import sketch_agg, sketch_partials
 
     sketch, col = _families()[family]
     df = spark.range(0, 6_000, numPartitions=6).withColumn(
         "x", ((F.col("id") * 7919) % 1009) / F.lit(7.0)
-    )
+    ).withColumn("key", (F.col("id") * 7919) % 1009 % (F.col("id") % 97 + 1))
     rows = sketch_partials(df, col, sketch).collect()
     assert len(rows) == 6
     expected = _reference_merge(sketch, rows, fanout, 6)

@@ -8,8 +8,10 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
-from mgspark.aggregate import mg_sketch, mg_tree_merge
+from mgspark.aggregate import mg_sketch
 from mgspark.kernel import MGState, mg_reference
+from mgspark.sketches.base import merge_partials
+from mgspark.sketches.mg import MGSketch
 from mgspark.sources import (
     read_checkpoint,
     read_sketch_jsons,
@@ -51,8 +53,9 @@ def test_sketch_json_roundtrip_and_merge(spark, tmp_path):
     write_sketch_json(a, pa_)
     write_sketch_json(b, pb)
     partials = read_sketch_jsons(spark, [pa_, pb], k=3)
-    merged = mg_tree_merge(partials, 3, num_partials=2).collect()[0]
-    got = dict(zip(merged["keys"], merged["counters"]))
+    assert [r["partition_id"] for r in partials.collect()] == [0, 1]
+    merged, _ = merge_partials(partials, 2, MGSketch(3))
+    got = merged.to_dict()
     # golden merge vector (evaluate.py:189-203)
     assert got == {2: 10, 3: 20, 4: 30}
 

@@ -17,9 +17,10 @@ from mgspark.aggregate import (
     mg_sketch,
     mg_sketch_grouped,
     mg_topk,
-    mg_tree_merge,
 )
 from mgspark.kernel import MGState
+from mgspark.sketches.base import merge_partials
+from mgspark.sketches.mg import MGSketch
 from mgspark.testgen import repo_table_pandas, write_repo_table
 from mgspark.tokenize import content_tokens, ext_tokens, lang_tokens, sha256_invariant
 
@@ -75,12 +76,12 @@ def test_partials_lineage_and_tree_merge(spark, repo_df):
     rows = partials.collect()
     assert len(rows) >= 1
     assert all(r["rows"] > 0 and r["wall_sec"] >= 0 for r in rows)
-    assert all(len(r["keys"]) <= 16 for r in rows)
+    sketch = MGSketch(16)
+    assert all(len(sketch.deserialize(r["payload"])[0].keys) <= 16 for r in rows)
     total_rows = sum(r["rows"] for r in rows)
     assert total_rows == tokens.count()
-    final = mg_tree_merge(partials, 16, fanout=2).collect()
-    assert len(final) == 1
-    assert final[0]["n"] == total_rows
+    state, _ = merge_partials(partials, partials.rdd.getNumPartitions(), sketch, fanout=2)
+    assert state.n == total_rows
     partials.unpersist()
 
 
@@ -109,17 +110,12 @@ def test_checkpoint_refuses_other_k(spark, docs, tmp_path):
 
 
 def test_driver_fold_returns_only_surviving_exemplars():
-    """Exemplars of keys the final merge evicted are dropped, as the
-    distributed merge round's aligned tokens drop them."""
-    from pyspark.sql import Row
-
-    from mgspark.aggregate import _driver_fold
-
-    rows = [
-        Row(partition_id=1, keys=[2], counters=[3], tokens=["b"], n=3, d=0, rows=3, wall_sec=0.0),
-        Row(partition_id=0, keys=[1], counters=[5], tokens=["a"], n=5, d=0, rows=5, wall_sec=0.0),
-    ]
-    state, exemplars = _driver_fold(rows, k=1)
+    """Exemplars of keys the merge evicted are dropped, in the driver
+    fold and in every distributed merge round alike."""
+    sketch = MGSketch(k=1)
+    a = (MGState.from_dict({1: 5}, 1, n=5), {1: "a"})
+    b = (MGState.from_dict({2: 3}, 1, n=3), {2: "b"})
+    state, exemplars = sketch.merge(sketch.merge(sketch.zero(), a), b)
     assert state.keys.tolist() == [1]  # key 2 is decremented away
     assert set(exemplars) <= set(state.keys.tolist())
     assert exemplars == {1: "a"}
@@ -130,19 +126,56 @@ def test_checkpoint_resume_sparse_partition_ids(spark, tmp_path):
     stage-1 partitions emit no row).  Round planning must bound rounds by
     max(partition_id)+1, not the row count, or the tree merge ends with
     multiple rows and drops partials (ADVICE r01)."""
-    from mgspark.aggregate import PARTIAL_SCHEMA
+    from mgspark.aggregate import _mg_manifest
+    from mgspark.sketches.base import SKETCH_PARTIAL_SCHEMA, write_checkpoint
 
     ckpt = str(tmp_path / "sparse_ckpt")
-    rows = [
-        (pid, [pid * 10 + 1, pid * 10 + 2], [5, 3], None, 8, 0, 8, 0.0)
-        for pid in (0, 5, 13)  # sparse: count=3 but ids span 14 slots
-    ]
-    spark.createDataFrame(rows, PARTIAL_SCHEMA).write.mode("overwrite").parquet(ckpt)
+    sketch = MGSketch(16)
+
+    def payload(pid):
+        state = MGState.from_dict({pid * 10 + 1: 5, pid * 10 + 2: 3}, 16, n=8)
+        return sketch.serialize((state, {}))
+
+    # sparse: count=3 but ids span 14 slots
+    rows = [(pid, payload(pid), 8, 0.0) for pid in (0, 5, 13)]
+    partials = spark.createDataFrame(rows, SKETCH_PARTIAL_SCHEMA)
+    write_checkpoint(partials, ckpt, _mg_manifest(16, "key", None, None))
     empty = spark.createDataFrame([], "key long")
     state = mg_sketch(empty, "key", k=16, checkpoint_dir=ckpt, fanout=2)
     # All three partials must have merged into one state.
     assert state.n == 24
     assert sorted(state.keys.tolist()) == [1, 2, 51, 52, 131, 132]
+
+
+def test_checkpoint_without_manifest_is_refused(spark, tmp_path):
+    """Complete partials with no manifest (hand-written, or MG's old
+    array rows) raise a clear ValueError instead of being trusted or
+    failing mid-query on their schema."""
+    from mgspark.aggregate import PARTIAL_SCHEMA
+
+    ckpt = str(tmp_path / "no_manifest_ckpt")
+    rows = [(0, [1, 2], [5, 3], None, 8, 0, 8, 0.0)]
+    spark.createDataFrame(rows, PARTIAL_SCHEMA).write.mode("overwrite").parquet(ckpt)
+    empty = spark.createDataFrame([], "key long")
+    with pytest.raises(ValueError, match="no _manifest.json"):
+        mg_sketch(empty, "key", k=16, checkpoint_dir=ckpt, pre_aggregate=False)
+    with pytest.raises(ValueError, match="no _manifest.json"):
+        mg_sketch(empty, "key", k=16, checkpoint_dir=ckpt)
+
+
+def test_mg_sketch_within_fanout_runs_one_job(spark):
+    """<= fanout input partitions on the zero-shuffle path: the build's
+    collect is the only Spark job — no merge round, no probe."""
+    sc = spark.sparkContext
+    group = "test-mg-sketch-one-job"
+    df = spark.range(0, 4_000, numPartitions=4).select((F.col("id") % 37).alias("key"))
+    sc.setJobGroup(group, "mg_sketch within fanout")
+    try:
+        state = mg_sketch(df, "key", 8, pre_aggregate=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert state.n == 4_000
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_mg_topk_exemplars_survive_checkpoint(spark, docs, tmp_path, monkeypatch):
