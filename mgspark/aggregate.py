@@ -20,8 +20,9 @@ Stage 2 moves only the partial rows (<= k keys each), which is bytes,
 not data; at <= fanout input partitions it is a plain collect.  Skewed
 input (one giant repo) cannot create a straggler because stage 1
 partitions by input splits (``spark.sql.files.maxPartitionBytes``), not
-by key; the grouped per-entity variant (``mg_sketch_grouped``) adds an
-explicit salt column for the groupBy path instead.
+by key.  The grouped per-entity variant (``mg_sketch_grouped``) is an
+exact ``(group, key)`` combiner followed by the same ``MGSketch`` on
+``sketch_agg_grouped``'s salted shuffle plan.
 
 Partial rows carry lineage + metrics (partition id, row count, wall time)
 and can be persisted to a parquet checkpoint so a killed job resumes from
@@ -30,31 +31,23 @@ partials (north_star requirement).
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from mgspark.kernel import MGState, mg_build_weighted
+from mgspark.kernel import MGState
 from mgspark.sketches.base import (
     checkpoint_manifest,
     checkpoint_ready,
     sketch_agg,
+    sketch_agg_grouped,
     sketch_partials,
 )
-from mgspark.sketches.mg import MGSketch, _aligned_tokens, _from_arrays, _update_exemplars
+from mgspark.sketches.mg import MGSketch
 
 __all__ = [
-    "PARTIAL_SCHEMA",
     "mg_partials",
     "mg_sketch",
     "mg_sketch_with_tokens",
@@ -66,47 +59,9 @@ __all__ = [
     "mg_topk",
 ]
 
-# One grouped MG sketch row (``mg_sketch_grouped``): the sketch as
-# arrays plus lineage/metrics.  ``tokens`` (nullable) carries one
-# exemplar token string per surviving key so the release can decode keys
-# without re-scanning the input.
-PARTIAL_SCHEMA = StructType(
-    [
-        StructField("partition_id", LongType(), False),
-        StructField("keys", ArrayType(LongType(), False), False),
-        StructField("counters", ArrayType(LongType(), False), False),
-        StructField("tokens", ArrayType(StringType(), True), True),
-        StructField("n", LongType(), False),
-        StructField("d", LongType(), False),
-        StructField("rows", LongType(), False),
-        StructField("wall_sec", DoubleType(), False),
-    ]
-)
-
 # Mask keeping hashed keys non-negative (the reference's key domain is
 # ints >= 0, pmg.py:32).
 _HASH_MASK = (1 << 62) - 1
-
-
-def _state_to_row(
-    state: MGState,
-    partition_id: int,
-    rows: int,
-    wall: float,
-    tokens: list[str] | None = None,
-) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "partition_id": [partition_id],
-            "keys": [state.keys.tolist()],
-            "counters": [state.counters.tolist()],
-            "tokens": [tokens],
-            "n": [state.n],
-            "d": [state.d],
-            "rows": [rows],
-            "wall_sec": [wall],
-        }
-    )
 
 
 def encode_tokens(df: DataFrame, col: str, key_col: str = "key") -> DataFrame:
@@ -461,119 +416,42 @@ def mg_sketch(
     return state
 
 
-def _salt_probe(df: DataFrame, group_col: str) -> int:
-    """Skew-sized salt bucket count from a bounded prefix.
-
-    If the largest group holds > 25% of the probed rows, spread it over
-    roughly the cluster's parallelism (capped) so one giant group cannot
-    straggle a single task; balanced groups keep the small default (extra
-    buckets only add merge rows).
-    """
-    probe = (
-        df.select(group_col)
-        .limit(_PROBE_ROWS)
-        .groupBy(group_col)
-        .count()
-        .agg(F.max("count").alias("mx"), F.sum("count").alias("n"))
-        .first()
-    )
-    if not probe or not probe["n"]:
-        return 8
-    share = probe["mx"] / probe["n"]
-    if share <= 0.25:
-        return 8
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    return max(8, min(64, parallelism))
-
-
 def mg_sketch_grouped(
     df: DataFrame,
     group_col: str,
     key_col: str,
     k: int,
-    salt_buckets: int | str = 8,
+    salt_buckets: int = 8,
     token_col: str | None = None,
-    pre_aggregate: bool = True,
 ) -> DataFrame:
-    """Per-entity MG sketches with explicit salting for skewed groups.
+    """Per-entity MG sketches, salted so one giant group cannot straggle.
 
-    ``groupBy(group)`` alone lets one giant group (e.g. a monorepo)
-    straggle; instead group by ``(group, salt)`` where the salt spreads a
-    group's keys over ``salt_buckets`` sub-sketches, then merge the
-    sub-sketches per group in a second, tiny aggregation.  Output: one row
-    per group with the merged sketch arrays.  With ``token_col``, one
-    exemplar token per surviving key rides along (``tokens`` array), so
-    callers decode without re-scanning the input.
-    ``salt_buckets="auto"`` sizes the salt to observed group skew with a
-    constant-cost prefix probe (:func:`_salt_probe`).
+    An exact JVM ``groupBy(group, key)`` count runs first: map-side
+    combining collapses a hot key inside each scan partition, so sub-group
+    task size is O(distinct keys / salt_buckets), not O(rows).  Its
+    weighted rows then go through :func:`sketch_agg_grouped`'s shuffle
+    plan with ``MGSketch(k)``: a cell is the combiner's output partition
+    id mod ``salt_buckets``, and each group's cell sketches merge in
+    ascending cell order, so reruns are deterministic.  Per-group results
+    are exact when a group has <= k keys and within the MG bound
+    (est in [true - N/(k+1), true]) above it.  (The map-side plan would
+    hold groups x O(k) states per task after the combiner, and ``auto``
+    would re-run the combiner shuffle as its probe.)
 
-    ``pre_aggregate=True`` (default) reduces to exact (group, key) counts
-    first: map-side combining collapses a hot key inside each scan
-    partition, so no single (group, key) can straggle one salt bucket —
-    a salt over raw rows cannot fix that, since a deterministic salt must
-    send equal rows to the same bucket.  Sub-group task size becomes
-    O(distinct keys / salt_buckets), not O(rows).
+    Output: ``(group_col, _salt, payload, rows)``, one row per group;
+    ``MGSketch(k).deserialize(payload)`` gives ``(MGState, {key: token})``.
+    With ``token_col``, one exemplar token per surviving key rides in the
+    payload, so callers decode without re-scanning the input.
     """
-    if salt_buckets == "auto":
-        salt_buckets = _salt_probe(df, group_col)
-    weight_col = None
-    if pre_aggregate:
-        aggs = [F.count("*").cast("long").alias("_w")]
-        if token_col is not None:
-            # min() = deterministic exemplar (all tokens under one hash
-            # key are equal anyway, modulo hash collisions).
-            aggs.append(F.min(token_col).alias("_tok"))
-        df = df.groupBy(group_col, key_col).agg(*aggs)
-        weight_col = "_w"
-        if token_col is not None:
-            token_col = "_tok"
-    # Salt deterministically from row content: a nondeterministic per-row
-    # expression (e.g. monotonically_increasing_id) feeding a shuffle can
-    # re-salt rows on task retry, duplicating/losing them.
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(key_col), F.lit("mg_salt")), F.lit(salt_buckets))
-    )
-
-    def build_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        state = MGState(k=k)
-        keys = pdf[key_col].to_numpy(dtype=np.int64, na_value=-1)
-        if weight_col is not None:
-            weights = pdf[weight_col].to_numpy(dtype=np.int64, na_value=0)
-        else:
-            weights = np.ones(len(keys), dtype=np.int64)
-        state = mg_build_weighted(state, keys, weights)
-        tokens = None
-        if token_col is not None:
-            firsts = _update_exemplars({}, state.keys, keys, pdf[token_col].to_numpy(object))
-            tokens = _aligned_tokens(firsts, state.keys)
-        out = _state_to_row(state, 0, int(weights.sum()), 0.0, tokens)
-        out.insert(0, "group", [pdf["_group"].iloc[0]])
-        return out
-
-    grouped_schema = StructType(
-        [StructField("group", df.schema[group_col].dataType, True)] + PARTIAL_SCHEMA.fields
-    )
-
-    partials = (
-        salted.withColumn("_group", F.col(group_col))
-        .groupBy("_group", "_salt")
-        .applyInPandas(build_group, grouped_schema)
-    )
-
-    sketch = MGSketch(k)
-
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        state = sketch.zero()
-        arrays = pdf.sort_values("partition_id")[["keys", "counters", "tokens", "n", "d"]]
-        for row in arrays.itertuples(index=False, name=None):
-            state = sketch.merge(state, _from_arrays(k, *row))
-        mg, exemplars = state
-        tokens = _aligned_tokens(exemplars, mg.keys) if token_col is not None else None
-        out = _state_to_row(mg, 0, int(pdf["rows"].sum()), 0.0, tokens)
-        out.insert(0, "group", [pdf["group"].iloc[0]])
-        return out
-
-    return partials.groupBy("group").applyInPandas(merge_group, grouped_schema)
+    aggs = [F.count("*").cast("long").alias("_w")]
+    if token_col is not None:
+        # min() = deterministic exemplar (all tokens under one hash key
+        # are equal anyway, modulo hash collisions).
+        aggs.append(F.min(token_col).alias("_tok"))
+        token_col = "_tok"
+    counts = df.groupBy(group_col, key_col).agg(*aggs)
+    columns = _mg_columns(key_col, "_w", token_col)
+    return sketch_agg_grouped(counts, group_col, columns, MGSketch(k), salt_buckets, mode="shuffle")
 
 
 def mg_topk_grouped(
@@ -586,25 +464,36 @@ def mg_topk_grouped(
     """Per-group heavy hitters decoded to tokens: (group, token, est).
 
     One pass: tokens are hashed JVM-side, per-group sketches build on the
-    salted path, and exemplar tokens carried in the sketch rows decode
+    salted path, and exemplar tokens carried in the sketch payloads decode
     the <= k survivors per group — no second scan of the input.  Exact
     whenever a group's token cardinality is <= k.
     """
     encoded = encode_tokens(df.select(group_col, token_col), token_col)
-    grouped = mg_sketch_grouped(
-        encoded, group_col, "key", k, salt_buckets, token_col=token_col
+    payloads = mg_sketch_grouped(encoded, group_col, "key", k, salt_buckets, token_col)
+    sketch = MGSketch(k)
+    schema = StructType(
+        [
+            StructField(group_col, df.schema[group_col].dataType, True),
+            StructField("token", StringType(), True),
+            StructField("est", LongType(), False),
+        ]
     )
-    exploded = grouped.select(
-        F.col("group").alias(group_col),
-        F.explode(F.arrays_zip("keys", "tokens", "counters")).alias("kv"),
-    )
-    # Null-token inputs still hash to a valid key but have no exemplar;
-    # fall back to the stringified key like mg_topk does.
-    return exploded.select(
-        group_col,
-        F.coalesce(F.col("kv.tokens"), F.col("kv.keys").cast("string")).alias("token"),
-        F.col("kv.counters").alias("est"),
-    )
+
+    def decode(batches):
+        for pdf in batches:
+            groups, tokens, ests = [], [], []
+            for group, blob in zip(pdf[group_col], pdf["payload"]):
+                mg, exemplars = sketch.deserialize(bytes(blob))
+                for key, est in zip(mg.keys.tolist(), mg.counters.tolist()):
+                    groups.append(group)
+                    # Null-token inputs still hash to a valid key but have
+                    # no exemplar; fall back to the stringified key like
+                    # mg_topk does.
+                    tokens.append(exemplars.get(key, str(key)))
+                    ests.append(est)
+            yield pd.DataFrame({group_col: groups, "token": tokens, "est": ests})
+
+    return payloads.mapInPandas(decode, schema)
 
 
 def max_user_contribution(df: DataFrame, user_col: str) -> int:

@@ -12,8 +12,9 @@ the partial/final split is staged explicitly.
 A sketch family implements the five kernel hooks below on numpy state.
 ``build`` folds one column as a pandas Series; a family that reads
 several columns (MG: key, weight, exemplar token) overrides
-``build_batch`` to read the Arrow batch itself.  The Spark plumbing is
-shared and never touches per-row Python.
+``build_batch`` to read the Arrow batch itself.  The Spark plumbing —
+including the per-group form, ``sketch_agg_grouped`` — is shared, feeds
+every family through ``build_batch`` and never touches per-row Python.
 """
 
 from __future__ import annotations
@@ -157,13 +158,16 @@ def checkpoint_manifest(
     token_col: str | None = None,
 ) -> dict:
     """What a partials checkpoint was built from: the sketch family, its
-    parameters and the key, weight and token columns it read."""
+    parameters, the key, weight and token columns it read, and the
+    partial row layout (so partials in an older layout, e.g. MG's array
+    rows, are refused with a clear error rather than failing to read)."""
     manifest = {
         "family": family,
         "params": params,
         "key_col": key_col,
         "weight_col": weight_col,
         "token_col": token_col,
+        "partial_schema": SKETCH_PARTIAL_SCHEMA.simpleString(),
     }
     # JSON round trip, so a fresh manifest compares equal to a stored one.
     return json.loads(json.dumps(manifest, sort_keys=True))
@@ -313,10 +317,24 @@ GROUPED_PARTIAL_SCHEMA_SUFFIX = [
 ]
 
 
+def _group_rows(column: "pa.Array") -> Iterator[tuple[Any, np.ndarray]]:
+    """(value, row positions) for each distinct value of an Arrow
+    column; null is one value, ``None``."""
+    import pyarrow.compute as pc
+
+    encoded = column.dictionary_encode()
+    codes = pc.fill_null(encoded.indices, -1).to_numpy(zero_copy_only=False)
+    order = np.argsort(codes, kind="stable")  # keeps row order within a value
+    uniq, starts = np.unique(codes[order], return_index=True)
+    values = encoded.dictionary.to_pylist()
+    for code, rows in zip(uniq.tolist(), np.split(order, starts[1:])):
+        yield (None if code < 0 else values[code]), rows
+
+
 def sketch_agg_grouped(
     df: DataFrame,
     group_col: str,
-    value_col: str,
+    col: str | list[Column],
     sketch: MergeableSketch,
     num_salts: int = 16,
     mode: str = "auto",
@@ -324,48 +342,53 @@ def sketch_agg_grouped(
 ) -> DataFrame:
     """Per-group sketches as a distributed DataFrame: one serialized
     state per group value — the ``df.groupBy(g).agg(sketch(x))`` shape
-    PySpark cannot express as a Python UDAF.
+    PySpark cannot express as a Python UDAF.  ``col`` names the one
+    column to sketch, or lists the projected columns the family's
+    ``build_batch`` reads, as in :func:`sketch_partials`; both plans fold
+    raw Arrow record batches through ``sketch.build_batch``.
 
     Two plans, selected by ``mode``:
 
-    * ``"mapside"`` — stage 1 is a ZERO-input-shuffle ``mapInPandas``
+    * ``"mapside"`` — stage 1 is a ZERO-input-shuffle ``mapInArrow``
       over the scan partitions, each task folding a dict of per-group
       states (the map-side-combine shape of a hash aggregate); only
       O(partitions x groups x sketch-size) partial rows shuffle into
       the per-group merge.  Right whenever the distinct group count is
       modest (task memory holds groups x sketch-size).
-    * ``"shuffle"`` — stage 1 shuffles rows by ``(group, salt)`` where
-      the salt derives from the INPUT PARTITION id, so both a hot group
-      and a hot identical value fan across up to ``num_salts`` cells.
-      (Splitting identical rows across cells is multiset-correct for
-      every mergeable family — sketch(A ⊎ B) = merge(sketch(A),
-      sketch(B)) — unlike the grouped MG path, whose pre-aggregated
-      counts force equal rows into one bucket.)  Stage-1 shuffle volume
-      is O(rows); use it when group cardinality is too high for the
-      map-side dict.
+    * ``"shuffle"`` — stage 1 shuffles rows by ``(group, salt)`` into an
+      ``applyInArrow`` fold, where the salt is the INPUT PARTITION id mod
+      ``num_salts``, so both a hot group and a hot identical value fan
+      across up to ``num_salts`` cells.  Splitting identical rows across
+      cells is multiset-correct for every mergeable family —
+      sketch(A ⊎ B) = merge(sketch(A), sketch(B)).  Stage-1 shuffle
+      volume is O(rows); use it when group cardinality is too high for
+      the map-side dict.
     * ``"auto"`` — one JVM-only ``approx_count_distinct`` probe on the
       group column picks map-side iff groups <= ``mapside_group_cap``.
 
     Stage 2 merges each group's partials in ascending ``_salt`` order —
     deterministic, so order-sensitive-within-bound families (t-digest,
-    KLL) reproduce bit-identical results across reruns of the same
+    KLL, MG) reproduce bit-identical results across reruns of the same
     input (same reason ``sketch_agg`` folds in partition-id order).
 
     Output: (group_col, _salt=0, payload binary, rows long); map the
     family's ``estimate``/query over the payloads (e.g. HLL distinct
     per group).  Null group values form their own group, matching SQL
     GROUP BY.  Caveat: a NULLABLE int64 group column passes through
-    pandas as float64 in the map-side fold and in estimator helpers, so
-    group KEYS above 2^53 lose precision there — use string group keys
-    (or drop nulls first) for snowflake-scale id groups.
+    pandas as float64 in estimator helpers, so group KEYS above 2^53
+    lose precision there — use string group keys (or drop nulls first)
+    for snowflake-scale id groups.
     """
+    import pyarrow as pa
+
     if mode not in ("auto", "mapside", "shuffle"):
         raise ValueError(f"mode must be auto|mapside|shuffle, got {mode!r}")
-    group_type = df.schema[group_col].dataType
+    value_cols = [F.col(col).alias("_v")] if isinstance(col, str) else col
+    value_pos = list(range(1, len(value_cols) + 1))  # after the group column
     partial_schema = StructType(
-        [StructField(group_col, group_type, True), *GROUPED_PARTIAL_SCHEMA_SUFFIX]
+        [StructField(group_col, df.schema[group_col].dataType, True), *GROUPED_PARTIAL_SCHEMA_SUFFIX]
     )
-    projected = df.select(F.col(group_col), F.col(value_col).alias("_v"))
+    projected = df.select(F.col(group_col), *value_cols)
 
     if mode == "auto":
         n_groups = projected.agg(
@@ -373,70 +396,66 @@ def sketch_agg_grouped(
         ).first()["g"]
         mode = "mapside" if n_groups <= mapside_group_cap else "shuffle"
 
-    _NULL = object()  # sentinel: the SQL null group
-
     if mode == "mapside":
 
-        def fold_partitions(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def fold_partitions(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
             ctx = TaskContext.get()
             pid = ctx.partitionId() if ctx is not None else 0
             states: dict[Any, Any] = {}
             counts: dict[Any, int] = {}
-            for pdf in batches:
-                null_mask = pdf[group_col].isna()
-                for key, sub in pdf[~null_mask].groupby(group_col, sort=False):
-                    states[key] = sketch.build(states.get(key, sketch.zero()), sub["_v"])
-                    counts[key] = counts.get(key, 0) + len(sub)
-                if null_mask.any():
-                    sub = pdf[null_mask]
-                    states[_NULL] = sketch.build(
-                        states.get(_NULL, sketch.zero()), sub["_v"]
-                    )
-                    counts[_NULL] = counts.get(_NULL, 0) + len(sub)
+            for batch in batches:
+                group_type = batch.schema.field(0).type
+                cells = batch.select(value_pos)
+                for group, rows in _group_rows(batch.column(0)):
+                    state = states.get(group, sketch.zero())
+                    states[group] = sketch.build_batch(state, cells.take(rows))
+                    counts[group] = counts.get(group, 0) + len(rows)
             if not states:
                 return
-            yield pd.DataFrame(
+            yield pa.RecordBatch.from_pydict(
                 {
-                    group_col: [None if k is _NULL else k for k in states],
-                    "_salt": [pid] * len(states),
-                    "payload": [sketch.serialize(s) for s in states.values()],
-                    "rows": [counts[k] for k in states],
+                    group_col: pa.array(list(states), group_type),
+                    "_salt": pa.array([pid] * len(states), pa.int64()),
+                    "payload": pa.array([sketch.serialize(s) for s in states.values()], pa.binary()),
+                    "rows": pa.array(list(counts.values()), pa.int64()),
                 }
             )
 
-        partials = projected.mapInPandas(fold_partitions, partial_schema)
+        partials = projected.mapInArrow(fold_partitions, partial_schema)
     else:
         salted = projected.withColumn(
-            "_salt", F.pmod(F.spark_partition_id(), F.lit(num_salts))
+            "_salt", F.pmod(F.spark_partition_id(), F.lit(num_salts)).cast("long")
         )
 
-        def fold(pdf: pd.DataFrame) -> pd.DataFrame:
-            state = sketch.build(sketch.zero(), pdf["_v"])
-            return pd.DataFrame(
+        def fold(table: "pa.Table") -> "pa.Table":
+            state = sketch.zero()
+            # One batch per cell: a batch-order-sensitive build (t-digest)
+            # must not depend on how Spark chunked the group.
+            for batch in table.select(value_pos).combine_chunks().to_batches():
+                state = sketch.build_batch(state, batch)
+            return pa.table(
                 {
-                    group_col: [pdf[group_col].iloc[0]],
-                    "_salt": [int(pdf["_salt"].iloc[0])],
-                    "payload": [sketch.serialize(state)],
-                    "rows": [len(pdf)],
+                    group_col: table.column(0).slice(0, 1),
+                    "_salt": table.column("_salt").slice(0, 1),
+                    "payload": pa.array([sketch.serialize(state)], pa.binary()),
+                    "rows": pa.array([table.num_rows], pa.int64()),
                 }
             )
 
-        partials = salted.groupBy(group_col, "_salt").applyInPandas(
-            fold, partial_schema
-        )
+        partials = salted.groupBy(group_col, "_salt").applyInArrow(fold, partial_schema)
 
-    def merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_group(table: "pa.Table") -> "pa.Table":
         # Ascending salt order: deterministic merges for families that
         # are only order-insensitive within their error bound.
-        pdf = pdf.sort_values("_salt")
-        state = _fold(sketch, pdf["payload"])
-        return pd.DataFrame(
+        table = table.sort_by("_salt")
+        state = _fold(sketch, table.column("payload").to_pylist())
+        return pa.table(
             {
-                group_col: [pdf[group_col].iloc[0]],
-                "_salt": [0],
-                "payload": [sketch.serialize(state)],
-                "rows": [int(pdf["rows"].sum())],
+                group_col: table.column(0).slice(0, 1),
+                "_salt": pa.array([0], pa.int64()),
+                "payload": pa.array([sketch.serialize(state)], pa.binary()),
+                "rows": pa.array([sum(table.column("rows").to_pylist())], pa.int64()),
             }
         )
 
-    return partials.groupBy(group_col).applyInPandas(merge_group, partial_schema)
+    return partials.groupBy(group_col).applyInArrow(merge_group, partial_schema)

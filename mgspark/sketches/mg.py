@@ -59,22 +59,6 @@ def _aligned_tokens(exemplars: dict[int, str], state_keys: np.ndarray) -> list[s
     return [exemplars.get(int(key)) for key in state_keys]
 
 
-def _from_arrays(k: int, keys, counters, tokens, n, d) -> tuple[MGState, dict[int, str]]:
-    """An ``MGSketch`` state from array columns (grouped sketch rows,
-    streaming state); ``tokens`` is aligned to ``keys``, or missing."""
-    state = MGState(
-        k=k,
-        keys=np.asarray(keys, dtype=np.int64),
-        counters=np.asarray(counters, dtype=np.int64),
-        n=int(n),
-        d=int(d),
-    )
-    # Missing array cells can surface as NaN through pandas.
-    if tokens is None or isinstance(tokens, float):
-        return state, {}
-    return state, {int(key): str(tok) for key, tok in zip(keys, tokens) if tok is not None}
-
-
 def _to_int64(column, fill: int) -> np.ndarray:
     if column.null_count:
         import pyarrow.compute as pc

@@ -35,7 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mgspark.kernel import MGState, mg_build_weighted
+from mgspark.kernel import MGState
 
 __all__ = [
     "mg_streaming_sketch",
@@ -68,6 +68,21 @@ STREAM_STATE_SCHEMA = StructType(
 )
 
 
+def _from_arrays(k: int, keys, counters, tokens, n, d) -> tuple[MGState, dict[int, str]]:
+    """An ``MGSketch`` state from a ``STREAM_STATE_SCHEMA`` row;
+    ``tokens`` is aligned to ``keys``, or missing."""
+    state = MGState(
+        k=k,
+        keys=np.asarray(keys, dtype=np.int64),
+        counters=np.asarray(counters, dtype=np.int64),
+        n=int(n),
+        d=int(d),
+    )
+    if tokens is None:
+        return state, {}
+    return state, {int(key): str(tok) for key, tok in zip(keys, tokens) if tok is not None}
+
+
 def mg_streaming_sketch(
     stream_df: DataFrame,
     key_col: str,
@@ -98,7 +113,7 @@ def mg_streaming_sketch(
     """
     # Coalesce null keys to -1 before sharding: pmod(null) yields a null
     # shard group whose key tuple would fail int() inside the state
-    # function; -1 routes them to a real shard where mg_build_weighted
+    # function; -1 routes them to a real shard where the MG build
     # drops them as invalid, matching the batch path's skip semantics.
     cols = [F.coalesce(F.col(key_col).cast("long"), F.lit(-1)).alias("key")]
     if token_col is not None:
@@ -112,16 +127,15 @@ def mg_streaming_sketch(
         batches: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        from mgspark.sketches.mg import _aligned_tokens, _from_arrays, _update_exemplars
+        import pyarrow as pa
 
-        mg, exemplars = _from_arrays(k, *state.get) if state.exists else (MGState(k=k), {})
+        from mgspark.sketches.mg import MGSketch, _aligned_tokens
+
+        sketch = MGSketch(k)
+        mg, exemplars = _from_arrays(k, *state.get) if state.exists else sketch.zero()
         for pdf in batches:
-            batch_keys = pdf["key"].to_numpy(dtype=np.int64, na_value=-1)
-            mg = mg_build_weighted(mg, batch_keys)
-            if token_col is not None:
-                exemplars = _update_exemplars(
-                    exemplars, mg.keys, batch_keys, pdf["token"].to_numpy(object)
-                )
+            batch = pa.RecordBatch.from_pandas(pdf.drop(columns="shard"), preserve_index=False)
+            mg, exemplars = sketch.build_batch((mg, exemplars), batch)
         tokens_out = _aligned_tokens(exemplars, mg.keys) if token_col is not None else None
         state.update((mg.keys.tolist(), mg.counters.tolist(), tokens_out, mg.n, mg.d))
         yield pd.DataFrame(

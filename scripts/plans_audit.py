@@ -196,7 +196,7 @@ def main() -> None:
 
     sections.append((
         "Grouped sketch, map-side combine plan",
-        "Stage 1 is a zero-input-shuffle MapInPandas over the scan "
+        "Stage 1 is a zero-input-shuffle MapInArrow over the scan "
         "partitions (per-task dict of per-group states); the only "
         "exchange moves O(partitions x groups x sketch-size) partial "
         "rows into the per-group merge — the hash-aggregate shape for "

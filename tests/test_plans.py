@@ -3,6 +3,7 @@ are pinned here so a regression (an accidental shuffle, lost column
 pruning, lost filter pushdown) fails CI, not a 100 TB run."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -81,22 +82,36 @@ def test_grouped_sketch_exchanges_on_salted_key(docs):
     """mg_sketch_grouped: exact (group, key) combiner first (map-side
     partial agg so a hot key cannot straggle a salt bucket), then the
     salted build exchange, then the per-group merge — and the salt must
-    appear in a partitioning key."""
-    from mgspark.aggregate import mg_sketch_grouped
+    appear in a partitioning key.  mg_topk_grouped adds only the decode
+    of the merged payloads: one MapInPandas, no JVM explode."""
+    from mgspark.aggregate import mg_sketch_grouped, mg_topk_grouped
 
     df = docs.select(
         "lang", F.explode(F.split(F.col("text"), " ")).alias("token")
     ).where(F.col("token") != "")
     df = encode_tokens(df, "token")
     plan = _formatted(mg_sketch_grouped(df, "lang", "key", 8, salt_buckets=4))
-    # formatted output lists each node in the tree and in the details
-    assert plan.count("FlatMapGroupsInPandas") >= 2
     tree = plan.split("\n\n")[0]
+    assert tree.count("FlatMapGroupsInArrow (") == 2, plan  # salted build, merge
     assert tree.count("HashAggregate (") >= 2, plan  # partial+final combiner
     first = plan.index("hashpartitioning")
     assert "key" in plan[first : first + 200]  # combiner exchange on (group, key)
     salted = plan.index("hashpartitioning", first + 1)
     assert "_salt" in plan[salted : salted + 200]
+
+    plan = _formatted(
+        mg_topk_grouped(docs.select("lang", "source"), "lang", "source", 8, salt_buckets=4)
+    )
+    tree = plan.split("\n\n")[0]
+    assert tree.count("Exchange (") == 3, plan
+    assert tree.count("FlatMapGroupsInArrow (") == 2, plan
+    assert tree.count("MapInPandas (") == 1, plan
+    assert "Generate" not in tree, plan
+    partitionings = [
+        re.sub(r"#\d+L?", "", cols).rsplit(", ", 1)[0]  # drop ids and partition count
+        for cols in re.findall(r"hashpartitioning\(([^)]*)\)", plan)
+    ]
+    assert partitionings == ["lang, key", "lang, _salt", "lang"], plan
 
 
 def _collected_plan(monkeypatch, run) -> str:

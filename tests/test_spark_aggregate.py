@@ -147,19 +147,46 @@ def test_checkpoint_resume_sparse_partition_ids(spark, tmp_path):
     assert sorted(state.keys.tolist()) == [1, 2, 51, 52, 131, 132]
 
 
+# The array-row layout MG partials had before they became MGSketch payloads.
+_OLD_MG_PARTIAL_DDL = (
+    "partition_id long, keys array<long>, counters array<long>, tokens array<string>, "
+    "n long, d long, rows long, wall_sec double"
+)
+
+
 def test_checkpoint_without_manifest_is_refused(spark, tmp_path):
     """Complete partials with no manifest (hand-written, or MG's old
     array rows) raise a clear ValueError instead of being trusted or
     failing mid-query on their schema."""
-    from mgspark.aggregate import PARTIAL_SCHEMA
-
     ckpt = str(tmp_path / "no_manifest_ckpt")
     rows = [(0, [1, 2], [5, 3], None, 8, 0, 8, 0.0)]
-    spark.createDataFrame(rows, PARTIAL_SCHEMA).write.mode("overwrite").parquet(ckpt)
+    spark.createDataFrame(rows, _OLD_MG_PARTIAL_DDL).write.mode("overwrite").parquet(ckpt)
     empty = spark.createDataFrame([], "key long")
     with pytest.raises(ValueError, match="no _manifest.json"):
         mg_sketch(empty, "key", k=16, checkpoint_dir=ckpt, pre_aggregate=False)
     with pytest.raises(ValueError, match="no _manifest.json"):
+        mg_sketch(empty, "key", k=16, checkpoint_dir=ckpt)
+
+
+def test_checkpoint_in_old_partial_layout_is_refused(spark, tmp_path):
+    """An MG checkpoint of array rows whose manifest predates the
+    partial-layout field is refused as another query's partials, not
+    read until Spark fails on its missing payload column."""
+    import json
+
+    ckpt = str(tmp_path / "old_layout_ckpt")
+    rows = [(0, [1, 2], [5, 3], None, 8, 0, 8, 0.0)]
+    spark.createDataFrame(rows, _OLD_MG_PARTIAL_DDL).write.mode("overwrite").parquet(ckpt)
+    old_manifest = {
+        "family": "mg", "params": {"k": 16}, "key_col": "key",
+        "weight_col": None, "token_col": None,
+    }
+    with open(os.path.join(ckpt, "_manifest.json"), "w", encoding="utf8") as f:
+        json.dump(old_manifest, f, sort_keys=True)
+    empty = spark.createDataFrame([], "key long")
+    with pytest.raises(ValueError, match="built for another query.*partial_schema"):
+        mg_sketch(empty, "key", k=16, checkpoint_dir=ckpt, pre_aggregate=False)
+    with pytest.raises(ValueError, match="built for another query.*partial_schema"):
         mg_sketch(empty, "key", k=16, checkpoint_dir=ckpt)
 
 
@@ -201,26 +228,26 @@ def test_mg_topk_exemplars_survive_checkpoint(spark, docs, tmp_path, monkeypatch
     assert all(not t.isdigit() for t in resumed), "tokens must be decoded strings"
 
 
-def test_grouped_sketch_salt_deterministic(spark, repo_df):
-    """The salt must be a deterministic function of row content so task
-    retries cannot re-salt rows (nondeterminism-with-shuffle hazard)."""
+def _token_rows(repo_df):
     df = repo_df.select(
         "lang", F.explode(F.split(F.col("content"), r"\s+")).alias("token")
     ).where(F.col("token") != "")
-    df = encode_tokens(df, "token")
-    a = {r["group"]: (r["keys"], r["counters"]) for r in mg_sketch_grouped(df, "lang", "key", 8, salt_buckets=4).collect()}
-    b = {r["group"]: (r["keys"], r["counters"]) for r in mg_sketch_grouped(df, "lang", "key", 8, salt_buckets=4).collect()}
-    assert a == b
+    return encode_tokens(df, "token")
+
+
+def test_grouped_sketch_salt_deterministic(spark, repo_df):
+    """The salt must be a deterministic function of the input so task
+    retries and reruns cannot re-salt rows (nondeterminism-with-shuffle
+    hazard): two runs give the same payload bytes."""
+    df = _token_rows(repo_df)
+    a = {r["lang"]: bytes(r["payload"]) for r in mg_sketch_grouped(df, "lang", "key", 8, salt_buckets=4).collect()}
+    b = {r["lang"]: bytes(r["payload"]) for r in mg_sketch_grouped(df, "lang", "key", 8, salt_buckets=4).collect()}
+    assert a and a == b
 
 
 def test_grouped_sketch_salted(spark, repo_df):
     k = 12
-    encoded = encode_tokens(content_tokens(repo_df.select("lang", "content")), "token")
-    # per-lang token sketches; recompute tokens with lang retained
-    df = repo_df.select(
-        "lang", F.explode(F.split(F.col("content"), r"\s+")).alias("token")
-    ).where(F.col("token") != "")
-    df = encode_tokens(df, "token")
+    df = _token_rows(repo_df)
     result = mg_sketch_grouped(df, "lang", "key", k, salt_buckets=4).collect()
     exact = {
         (r["lang"], r["key"]): r["cnt"]
@@ -230,12 +257,14 @@ def test_grouped_sketch_salted(spark, repo_df):
     for (lang, _), cnt in exact.items():
         totals[lang] = totals.get(lang, 0) + cnt
     assert len(result) == len(totals)
+    sketch = MGSketch(k)
     for row in result:
-        lang = row["group"]
-        assert row["n"] == totals[lang]
+        lang = row["lang"]
+        state, _ = sketch.deserialize(bytes(row["payload"]))
+        assert state.n == totals[lang]
         cap = totals[lang] // (k + 1)
-        assert row["d"] <= cap
-        for key, est in zip(row["keys"], row["counters"]):
+        assert state.d <= cap
+        for key, est in zip(state.keys, state.counters):
             true = exact.get((lang, int(key)), 0)
             assert true - cap <= est <= true
 
@@ -342,25 +371,22 @@ def test_mg_sketch_all_invalid_keys(spark):
     assert state.to_dict() == {} and state.n == 0
 
 
-def test_salt_buckets_auto_sizes_to_skew(spark):
-    """salt_buckets='auto': a dominant group gets spread over ~parallelism
-    buckets; balanced groups keep the small default."""
-    from mgspark.aggregate import _salt_probe
+def test_grouped_sketch_dominant_group_exact(spark):
+    """A group holding 90% of the rows still sketches exactly with the
+    default salt: its cells merge back into one state per group."""
+    from mgspark.aggregate import mg_sketch_grouped
 
     skewed = spark.createDataFrame(
         [("big" if i % 10 else "small", i) for i in range(5000)], "g string, key long"
     )
-    balanced = spark.createDataFrame(
-        [(f"g{i % 50}", i) for i in range(5000)], "g string, key long"
-    )
-    assert _salt_probe(skewed, "g") > 8 or spark.sparkContext.defaultParallelism <= 8
-    assert _salt_probe(balanced, "g") == 8
-    # and the grouped sketch still produces exact results under 'auto'
-    from mgspark.aggregate import mg_sketch_grouped
-
-    result = mg_sketch_grouped(skewed, "g", "key", k=6000, salt_buckets="auto").collect()
-    got = {r["group"]: r["n"] for r in result}
-    assert got == {"big": 4500, "small": 500}
+    sketch = MGSketch(6000)
+    result = mg_sketch_grouped(skewed, "g", "key", k=6000).collect()
+    states = {r["g"]: sketch.deserialize(bytes(r["payload"]))[0] for r in result}
+    assert {g: s.n for g, s in states.items()} == {"big": 4500, "small": 500}
+    for g, state in states.items():
+        assert state.d == 0
+        expected = {i: 1 for i in range(5000) if (i % 10 != 0) == (g == "big")}
+        assert state.to_dict() == expected
 
 
 def test_mg_topk_combiner_resume_from_tokenless_checkpoint(spark, docs, tmp_path):
@@ -378,3 +404,47 @@ def test_mg_topk_combiner_resume_from_tokenless_checkpoint(spark, docs, tmp_path
     }
     assert resumed == first
     assert all(not t.isdigit() for t in resumed), "must not emit hash-key strings"
+
+
+def test_mg_topk_grouped_decodes_exact_counts(spark):
+    """With <= k tokens per group, mg_topk_grouped equals an exact
+    groupBy count; a null token decodes to its stringified hash key, a
+    null group is its own group, and the map-side and shuffle plans of
+    sketch_agg_grouped over MG's columns build equal states."""
+    from mgspark.aggregate import _mg_columns, mg_topk_grouped
+    from mgspark.sketches.base import sketch_agg_grouped
+
+    rows = (
+        [("a", "x")] * 5 + [("a", "y")] * 3 + [("b", "x")] * 2 + [("b", None)] * 4
+        + [(None, "z")] * 6 + [(None, "x")]
+    )
+    df = spark.createDataFrame(rows, "g string, tok string").repartition(3)
+    null_key = encode_tokens(spark.createDataFrame([(None,)], "tok string"), "tok").first()["key"]
+    exact = {
+        (r["g"], str(null_key) if r["tok"] is None else r["tok"]): r["count"]
+        for r in df.groupBy("g", "tok").count().collect()
+    }
+    got = {
+        (r["g"], r["token"]): r["est"]
+        for r in mg_topk_grouped(df, "g", "tok", k=4, salt_buckets=2).collect()
+    }
+    assert got == exact
+    assert got[("b", str(null_key))] == 4 and got[(None, "z")] == 6
+
+    counts = encode_tokens(df, "tok").groupBy("g", "key").agg(
+        F.count("*").alias("_w"), F.min("tok").alias("_tok")
+    )
+    sketch = MGSketch(4)
+
+    def states(mode):
+        out = {}
+        for r in sketch_agg_grouped(
+            counts, "g", _mg_columns("key", "_w", "_tok"), sketch, 2, mode=mode
+        ).collect():
+            state, exemplars = sketch.deserialize(bytes(r["payload"]))
+            out[r["g"]] = (state.to_dict(), state.n, state.d, exemplars)
+        return out
+
+    mapside = states("mapside")
+    assert set(mapside) == {"a", "b", None}
+    assert mapside == states("shuffle")
