@@ -181,15 +181,14 @@ def q_ann_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_mg_grouped_lang_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source language sketches via the salted groupBy path with
-    exemplar decode (single scan).  k=10 >= 5 distinct langs, so
-    estimates are exact."""
+    """Per-source language heavy hitters via the grouped exact-prune
+    window with exemplar decode (single scan, no Python stage).  k=10 >=
+    5 distinct langs, so estimates are exact."""
     from mgspark.aggregate import mg_topk_grouped
 
     docs = _read(spark, sf_dir, "documents")
     return mg_topk_grouped(
-        docs.select("source", F.col("lang").alias("token")), "source", "token", k=10,
-        salt_buckets=4,
+        docs.select("source", F.col("lang").alias("token")), "source", "token", k=10
     )
 
 
@@ -744,65 +743,41 @@ def q_dsir_features_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dsir_resample_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gumbel top-k resampling invariants, computed distributedly (the
-    selections never reach the driver): exactly n selected, all from
+    """Gumbel top-k resampling invariants: exactly n selected, all from
     the corpus, and an independent recomputation selects the identical
-    set.  log_weight is rounded to 9 decimals first so float summation
-    order across runs cannot flip a near-tie in the contract row."""
+    set.  Only the 2 x n selected ids reach the driver.  log_weight is
+    rounded to 9 decimals first so float summation order across runs
+    cannot flip a near-tie in the contract row."""
     from mgspark.pipeline.dsir import dsir_log_weights, dsir_resample
 
     docs = _read(spark, sf_dir, "documents")
 
-    def weights() -> DataFrame:
+    def selection() -> DataFrame:
         w = dsir_log_weights(
             docs,
             None,
             n_buckets=_DSIR_BUCKETS,
             target_predicate=_dsir_target_predicate(),
         )
-        return w.withColumn("log_weight", F.round("log_weight", 9))
+        w = w.withColumn("log_weight", F.round("log_weight", 9))
+        return dsir_resample(w, 200, seed=11).select("id")
 
-    n = 200
-    # All three invariant counts in ONE fused action: full-outer join
-    # of the two independent 200-row selections on id, left join of the
-    # corpus id column, then conditional sums.  Each selection subtree
-    # appears exactly once in the plan, so each independent weights
-    # pipeline still executes exactly once (the two runs the
-    # rerun-identity check needs) — previously two persists plus three
-    # sequential count jobs did the same arithmetic.
-    sel1 = dsir_resample(weights(), n, seed=11).select(
-        F.col("id").alias("id"), F.lit(1).alias("_a")
-    )
-    sel2 = dsir_resample(weights(), n, seed=11).select(
-        F.col("id").alias("id"), F.lit(1).alias("_b")
-    )
+    # The two selections run as separate actions: fused into one plan,
+    # exchange reuse would execute the identical subtrees once and make
+    # the rerun check vacuous.
     corpus_ids = docs.select(
         F.col("doc_id").cast("long").alias("id"), F.lit(1).alias("_c")
     )
-    fused = (
-        sel1.join(sel2, "id", "full_outer")
-        .join(corpus_ids, "id", "left")
-        .agg(
-            F.coalesce(F.sum("_a"), F.lit(0)).cast("long").alias("n_selected"),
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("_a").isNotNull() & F.col("_c").isNull(), 1)
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("n_outside"),
-            F.coalesce(
-                F.sum(
-                    F.when(F.col("_a").isNull() | F.col("_b").isNull(), 1)
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("n_rerun_mismatch"),
-        )
+    first = selection().join(corpus_ids, "id", "left").collect()
+    rerun = {r["id"] for r in selection().collect()}
+    row = (
+        len(first),
+        sum(r["_c"] is None for r in first),
+        len({r["id"] for r in first} ^ rerun),
     )
-    return fused
+    return spark.createDataFrame(
+        [row], "n_selected long, n_outside long, n_rerun_mismatch long"
+    )
 
 
 def _bench_set(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -20,9 +20,9 @@ Stage 2 moves only the partial rows (<= k keys each), which is bytes,
 not data; at <= fanout input partitions it is a plain collect.  Skewed
 input (one giant repo) cannot create a straggler because stage 1
 partitions by input splits (``spark.sql.files.maxPartitionBytes``), not
-by key.  The grouped per-entity variant (``mg_sketch_grouped``) is an
-exact ``(group, key)`` combiner followed by the same ``MGSketch`` on
-``sketch_agg_grouped``'s salted shuffle plan.
+by key.  The grouped per-entity variant (``mg_topk_grouped``) needs no
+Python at all: an exact ``(group, key)`` count pruned per group at its
+(k+1)-th largest count by one JVM window is itself an MG summary.
 
 Partial rows carry lineage + metrics (partition id, row count, wall time)
 and can be persisted to a parquet checkpoint so a killed job resumes from
@@ -31,18 +31,15 @@ partials (north_star requirement).
 
 from __future__ import annotations
 
-import pandas as pd
-
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
 
 from mgspark.kernel import MGState
 from mgspark.sketches.base import (
     checkpoint_manifest,
     checkpoint_ready,
     sketch_agg,
-    sketch_agg_grouped,
     sketch_partials,
 )
 from mgspark.sketches.mg import MGSketch
@@ -51,7 +48,6 @@ __all__ = [
     "mg_partials",
     "mg_sketch",
     "mg_sketch_with_tokens",
-    "mg_sketch_grouped",
     "mg_topk_grouped",
     "encode_tokens",
     "decode_keys",
@@ -139,12 +135,9 @@ def dictionary_encode(
             "universe instead"
         )
     spark = df.sparkSession
-    from pyspark.sql.types import StructField as _SF
-    from pyspark.sql.types import StructType as _ST
-
     tmp_key = _fresh_col(df, "_dict_key")
-    dict_schema = _ST(
-        [_SF(col, df.schema[col].dataType, True), _SF(tmp_key, LongType(), False)]
+    dict_schema = StructType(
+        [StructField(col, df.schema[col].dataType, True), StructField(tmp_key, LongType(), False)]
     )
     dict_df = spark.createDataFrame(
         [(value, i) for i, value in enumerate(values)], dict_schema
@@ -193,8 +186,6 @@ def dictionary_encode_distributed(
     broadcast-filtered collect, never the full dictionary.
     """
     spark = df.sparkSession
-    from pyspark.sql import Window as _W
-
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
     distinct = df.select(col).where(F.col(col).isNotNull()).distinct()
@@ -208,7 +199,7 @@ def dictionary_encode_distributed(
     ranked = transient_persist(
         ranged.withColumn(
             "_lid",
-            F.row_number().over(_W.partitionBy("_pid").orderBy(col)) - 1,
+            F.row_number().over(Window.partitionBy("_pid").orderBy(col)) - 1,
         )
     )
     counts = sorted(
@@ -416,84 +407,43 @@ def mg_sketch(
     return state
 
 
-def mg_sketch_grouped(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    k: int,
-    salt_buckets: int = 8,
-    token_col: str | None = None,
-) -> DataFrame:
-    """Per-entity MG sketches, salted so one giant group cannot straggle.
-
-    An exact JVM ``groupBy(group, key)`` count runs first: map-side
-    combining collapses a hot key inside each scan partition, so sub-group
-    task size is O(distinct keys / salt_buckets), not O(rows).  Its
-    weighted rows then go through :func:`sketch_agg_grouped`'s shuffle
-    plan with ``MGSketch(k)``: a cell is the combiner's output partition
-    id mod ``salt_buckets``, and each group's cell sketches merge in
-    ascending cell order, so reruns are deterministic.  Per-group results
-    are exact when a group has <= k keys and within the MG bound
-    (est in [true - N/(k+1), true]) above it.  (The map-side plan would
-    hold groups x O(k) states per task after the combiner, and ``auto``
-    would re-run the combiner shuffle as its probe.)
-
-    Output: ``(group_col, _salt, payload, rows)``, one row per group;
-    ``MGSketch(k).deserialize(payload)`` gives ``(MGState, {key: token})``.
-    With ``token_col``, one exemplar token per surviving key rides in the
-    payload, so callers decode without re-scanning the input.
-    """
-    aggs = [F.count("*").cast("long").alias("_w")]
-    if token_col is not None:
-        # min() = deterministic exemplar (all tokens under one hash key
-        # are equal anyway, modulo hash collisions).
-        aggs.append(F.min(token_col).alias("_tok"))
-        token_col = "_tok"
-    counts = df.groupBy(group_col, key_col).agg(*aggs)
-    columns = _mg_columns(key_col, "_w", token_col)
-    return sketch_agg_grouped(counts, group_col, columns, MGSketch(k), salt_buckets, mode="shuffle")
-
-
-def mg_topk_grouped(
-    df: DataFrame,
-    group_col: str,
-    token_col: str,
-    k: int,
-    salt_buckets: int = 8,
-) -> DataFrame:
+def mg_topk_grouped(df: DataFrame, group_col: str, token_col: str, k: int) -> DataFrame:
     """Per-group heavy hitters decoded to tokens: (group, token, est).
 
-    One pass: tokens are hashed JVM-side, per-group sketches build on the
-    salted path, and exemplar tokens carried in the sketch payloads decode
-    the <= k survivors per group — no second scan of the input.  Exact
-    whenever a group's token cardinality is <= k.
+    One JVM plan, no Python stage: tokens are hashed JVM-side, an exact
+    ``groupBy(group, key)`` count (exemplar token = ``min``) runs with
+    map-side combining, and each group's count table is pruned at its
+    (k+1)-th largest count ``t`` (0 when the group has <= k keys):
+    ``est = count - t``, keeping only ``est > 0``.  That is MG's merge
+    rule applied to exact counts, so the result is a valid MG summary
+    with the smallest possible offset: est in [true - N/(k+1), true],
+    exact whenever a group's token cardinality is <= k.
+
+    Ties: ranks order by count descending, key ascending, but every key
+    whose count equals ``t`` gets est 0 and is dropped, so at most k keys
+    survive per group and the output depends on neither tie order nor
+    input partitioning.  The ``row_number() <= k+1`` filter plans a
+    partial ``WindowGroupLimit`` below the group shuffle (k+1 below
+    ``spark.sql.optimizer.windowGroupLimitThreshold``), so each map task
+    ships at most k+1 rows per group and a hot group cannot straggle;
+    above that threshold the plan stays correct without the map-side
+    limit.  A null token decodes to its stringified key.
     """
     encoded = encode_tokens(df.select(group_col, token_col), token_col)
-    payloads = mg_sketch_grouped(encoded, group_col, "key", k, salt_buckets, token_col)
-    sketch = MGSketch(k)
-    schema = StructType(
-        [
-            StructField(group_col, df.schema[group_col].dataType, True),
-            StructField("token", StringType(), True),
-            StructField("est", LongType(), False),
-        ]
+    counts = (
+        encoded.where(F.col("key") >= 0)  # the kernel's invalid-key rule
+        .groupBy(group_col, "key")
+        .agg(F.count("*").alias("_c"), F.min(token_col).cast("string").alias("_tok"))
     )
-
-    def decode(batches):
-        for pdf in batches:
-            groups, tokens, ests = [], [], []
-            for group, blob in zip(pdf[group_col], pdf["payload"]):
-                mg, exemplars = sketch.deserialize(bytes(blob))
-                for key, est in zip(mg.keys.tolist(), mg.counters.tolist()):
-                    groups.append(group)
-                    # Null-token inputs still hash to a valid key but have
-                    # no exemplar; fall back to the stringified key like
-                    # mg_topk does.
-                    tokens.append(exemplars.get(key, str(key)))
-                    ests.append(est)
-            yield pd.DataFrame({group_col: groups, "token": tokens, "est": ests})
-
-    return payloads.mapInPandas(decode, schema)
+    by_group = Window.partitionBy(group_col)
+    rank = F.row_number().over(by_group.orderBy(F.desc("_c"), F.asc("key")))
+    top = counts.withColumn("_rank", rank).where(F.col("_rank") <= k + 1)
+    cutoff = F.max(F.when(F.col("_rank") == k + 1, F.col("_c")).otherwise(0)).over(by_group)
+    return top.select(
+        group_col,
+        F.coalesce("_tok", F.col("key").cast("string")).alias("token"),
+        (F.col("_c") - cutoff).alias("est"),
+    ).where(F.col("est") > 0)
 
 
 def max_user_contribution(df: DataFrame, user_col: str) -> int:

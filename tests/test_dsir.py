@@ -207,3 +207,40 @@ def test_empty_target_corpus_yields_finite_weights(spark, raw_df):
     for r in rows:
         assert r["target_count_sum"] == 0
         assert math.isfinite(r["log_weight"])
+
+
+def test_entry_rerun_check_runs_selections_as_separate_jobs(spark, sf_dir, monkeypatch):
+    """The rerun-identity invariant of q_dsir_resample_check is only
+    meaningful if the two selections execute independently (fused in one
+    plan, exchange reuse would run the identical subtrees once): each is
+    its own action holding one Gumbel top-k, with its own Spark jobs."""
+    import contextlib
+    import io
+
+    import __spark_entry__ as entry
+
+    tracker = spark.sparkContext.statusTracker()
+    frame_type = type(spark.range(1))
+    real_collect = frame_type.collect
+    actions = []
+
+    def spy(self):
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            self.explain("formatted")
+        before = set(tracker.getJobIdsForGroup())
+        rows = real_collect(self)
+        jobs = set(tracker.getJobIdsForGroup()) - before
+        actions.append((buf.getvalue().split("\n\n")[0], jobs))
+        return rows
+
+    monkeypatch.setattr(frame_type, "collect", spy)
+    result = entry.q_dsir_resample_check(spark, sf_dir)
+    monkeypatch.undo()
+    assert len(actions) == 2
+    for tree, jobs in actions:
+        assert tree.count("TakeOrderedAndProject (") == 1, tree
+        assert jobs
+    assert not actions[0][1] & actions[1][1]
+    row = result.first()
+    assert (row["n_selected"], row["n_outside"], row["n_rerun_mismatch"]) == (200, 0, 0)

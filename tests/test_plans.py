@@ -78,40 +78,61 @@ def test_broadcast_decode_join(spark, sf_dir):
     assert "In(" in plan or "Filter" in plan
 
 
+def _partitionings(plan: str) -> list[str]:
+    """The hashpartitioning column lists of a formatted plan, in order,
+    without expression ids or partition counts."""
+    return [
+        re.sub(r"#\d+L?", "", cols).rsplit(", ", 1)[0]
+        for cols in re.findall(r"hashpartitioning\(([^)]*)\)", plan)
+    ]
+
+
 def test_grouped_sketch_exchanges_on_salted_key(docs):
-    """mg_sketch_grouped: exact (group, key) combiner first (map-side
-    partial agg so a hot key cannot straggle a salt bucket), then the
-    salted build exchange, then the per-group merge — and the salt must
-    appear in a partitioning key.  mg_topk_grouped adds only the decode
-    of the merged payloads: one MapInPandas, no JVM explode."""
-    from mgspark.aggregate import mg_sketch_grouped, mg_topk_grouped
+    """sketch_agg_grouped's shuffle plan (HLL, t-digest): the salted
+    build exchange, then the per-group merge — and the salt must appear
+    in a partitioning key so a hot group fans across cells."""
+    from mgspark.sketches.base import sketch_agg_grouped
+    from mgspark.sketches.hll import HLLSketch
 
     df = docs.select(
         "lang", F.explode(F.split(F.col("text"), " ")).alias("token")
     ).where(F.col("token") != "")
     df = encode_tokens(df, "token")
-    plan = _formatted(mg_sketch_grouped(df, "lang", "key", 8, salt_buckets=4))
+    plan = _formatted(sketch_agg_grouped(df, "lang", "key", HLLSketch(10), 4, mode="shuffle"))
     tree = plan.split("\n\n")[0]
     assert tree.count("FlatMapGroupsInArrow (") == 2, plan  # salted build, merge
-    assert tree.count("HashAggregate (") >= 2, plan  # partial+final combiner
-    first = plan.index("hashpartitioning")
-    assert "key" in plan[first : first + 200]  # combiner exchange on (group, key)
-    salted = plan.index("hashpartitioning", first + 1)
-    assert "_salt" in plan[salted : salted + 200]
+    assert _partitionings(plan) == ["lang, _salt", "lang"], plan
 
-    plan = _formatted(
-        mg_topk_grouped(docs.select("lang", "source"), "lang", "source", 8, salt_buckets=4)
-    )
+
+def test_mg_topk_grouped_is_one_jvm_window(docs):
+    """mg_topk_grouped is one JVM plan: the exact (group, key) combiner
+    exchange, then the group exchange with a partial WindowGroupLimit
+    below it (each map task ships <= k+1 rows per group), and no Python
+    node or JVM explode anywhere."""
+    from mgspark.aggregate import mg_topk_grouped
+
+    plan = _formatted(mg_topk_grouped(docs.select("lang", "source"), "lang", "source", 8))
     tree = plan.split("\n\n")[0]
-    assert tree.count("Exchange (") == 3, plan
-    assert tree.count("FlatMapGroupsInArrow (") == 2, plan
-    assert tree.count("MapInPandas (") == 1, plan
-    assert "Generate" not in tree, plan
-    partitionings = [
-        re.sub(r"#\d+L?", "", cols).rsplit(", ", 1)[0]  # drop ids and partition count
-        for cols in re.findall(r"hashpartitioning\(([^)]*)\)", plan)
+    assert tree.count("Exchange (") == 2, plan
+    assert _partitionings(plan) == ["lang, key", "lang"], plan
+    # Formatted-plan node ids count up from the scan, so on this linear
+    # plan "below" means a smaller id.
+    nodes = {}
+    for section in plan.split("\n\n")[1:]:
+        head = re.match(r"\((\d+)\) (\w+)", section)
+        if head:
+            nodes[int(head.group(1))] = (head.group(2), section.strip())
+    exchanges = sorted(i for i, (name, _) in nodes.items() if name == "Exchange")
+    partial = [
+        i for i, (name, text) in nodes.items()
+        if name == "WindowGroupLimit" and text.endswith(", Partial")
     ]
-    assert partitionings == ["lang, key", "lang, _salt", "lang"], plan
+    assert len(partial) == 1 and exchanges[0] < partial[0] < exchanges[1], plan
+    for node in (
+        "MapInPandas", "MapInArrow", "FlatMapGroupsIn", "ArrowEvalPython",
+        "BatchEvalPython", "Generate",
+    ):
+        assert node not in tree, (node, plan)
 
 
 def _collected_plan(monkeypatch, run) -> str:

@@ -1,7 +1,7 @@
 """End-to-end distributed MG tests against the sf0.001 testdata and the
 synthetic repo table: exactness at cardinality <= k, the deterministic
-error bound at cardinality > k, checkpoint resume, grouped+salted
-sketches, and the sha256 ingest invariant."""
+error bound at cardinality > k, checkpoint resume, grouped heavy
+hitters, and the sha256 ingest invariant."""
 
 import hashlib
 import os
@@ -15,8 +15,8 @@ from mgspark.aggregate import (
     encode_tokens,
     mg_partials,
     mg_sketch,
-    mg_sketch_grouped,
     mg_topk,
+    mg_topk_grouped,
 )
 from mgspark.kernel import MGState
 from mgspark.sketches.base import merge_partials
@@ -229,43 +229,53 @@ def test_mg_topk_exemplars_survive_checkpoint(spark, docs, tmp_path, monkeypatch
 
 
 def _token_rows(repo_df):
-    df = repo_df.select(
+    return repo_df.select(
         "lang", F.explode(F.split(F.col("content"), r"\s+")).alias("token")
     ).where(F.col("token") != "")
-    return encode_tokens(df, "token")
 
 
-def test_grouped_sketch_salt_deterministic(spark, repo_df):
-    """The salt must be a deterministic function of the input so task
-    retries and reruns cannot re-salt rows (nondeterminism-with-shuffle
-    hazard): two runs give the same payload bytes."""
+def _grouped_rows(df, k, group_col="lang", token_col="token"):
+    return sorted(
+        (r[group_col], r["token"], r["est"])
+        for r in mg_topk_grouped(df, group_col, token_col, k).collect()
+    )
+
+
+def test_mg_topk_grouped_deterministic(spark, repo_df):
+    """Task retries, reruns and repartitioning cannot change the result:
+    identical rows at 1 and 7 input partitions and across two runs."""
     df = _token_rows(repo_df)
-    a = {r["lang"]: bytes(r["payload"]) for r in mg_sketch_grouped(df, "lang", "key", 8, salt_buckets=4).collect()}
-    b = {r["lang"]: bytes(r["payload"]) for r in mg_sketch_grouped(df, "lang", "key", 8, salt_buckets=4).collect()}
-    assert a and a == b
+    one = _grouped_rows(df.repartition(1), 8)
+    assert one and one == _grouped_rows(df.repartition(7), 8)
+    assert one == _grouped_rows(df.repartition(7), 8)
 
 
-def test_grouped_sketch_salted(spark, repo_df):
+def test_mg_topk_grouped_bound(spark, repo_df):
+    """Above k tokens per group: at most k rows per group, one shared
+    offset t <= floor(N_g/(k+1)) per group, and every key within the MG
+    bound true - floor(N_g/(k+1)) <= est <= true."""
     k = 12
     df = _token_rows(repo_df)
-    result = mg_sketch_grouped(df, "lang", "key", k, salt_buckets=4).collect()
     exact = {
-        (r["lang"], r["key"]): r["cnt"]
-        for r in df.groupBy("lang", "key").agg(F.count("*").alias("cnt")).collect()
+        (r["lang"], r["token"]): r["cnt"]
+        for r in df.groupBy("lang", "token").agg(F.count("*").alias("cnt")).collect()
     }
-    totals = {}
+    totals, distinct = {}, {}
     for (lang, _), cnt in exact.items():
         totals[lang] = totals.get(lang, 0) + cnt
-    assert len(result) == len(totals)
-    sketch = MGSketch(k)
-    for row in result:
-        lang = row["lang"]
-        state, _ = sketch.deserialize(bytes(row["payload"]))
-        assert state.n == totals[lang]
+        distinct[lang] = distinct.get(lang, 0) + 1
+    assert min(distinct.values()) > k  # every group is pruned
+    rows = {}
+    for lang, token, est in _grouped_rows(df, k):
+        rows.setdefault(lang, []).append((token, est))
+    assert set(rows) == set(totals)
+    for lang, ests in rows.items():
+        assert len(ests) <= k
         cap = totals[lang] // (k + 1)
-        assert state.d <= cap
-        for key, est in zip(state.keys, state.counters):
-            true = exact.get((lang, int(key)), 0)
+        offsets = {exact[(lang, token)] - est for token, est in ests}
+        assert len(offsets) == 1 and 0 <= offsets.pop() <= cap
+        for token, est in ests:
+            true = exact[(lang, token)]
             assert true - cap <= est <= true
 
 
@@ -371,22 +381,38 @@ def test_mg_sketch_all_invalid_keys(spark):
     assert state.to_dict() == {} and state.n == 0
 
 
-def test_grouped_sketch_dominant_group_exact(spark):
-    """A group holding 90% of the rows still sketches exactly with the
-    default salt: its cells merge back into one state per group."""
-    from mgspark.aggregate import mg_sketch_grouped
-
+def test_mg_topk_grouped_dominant_group_exact(spark):
+    """A group holding 90% of the rows still comes back exact.  k=6000
+    lies above spark.sql.optimizer.windowGroupLimitThreshold (1000), so
+    this also covers the plan without a map-side WindowGroupLimit.
+    Negative and null integral keys are invalid, as in the MG kernel."""
     skewed = spark.createDataFrame(
-        [("big" if i % 10 else "small", i) for i in range(5000)], "g string, key long"
+        [("big" if i % 10 else "small", i) for i in range(5000)]
+        + [("big", -3), ("small", None)],
+        "g string, key long",
     )
-    sketch = MGSketch(6000)
-    result = mg_sketch_grouped(skewed, "g", "key", k=6000).collect()
-    states = {r["g"]: sketch.deserialize(bytes(r["payload"]))[0] for r in result}
-    assert {g: s.n for g, s in states.items()} == {"big": 4500, "small": 500}
-    for g, state in states.items():
-        assert state.d == 0
-        expected = {i: 1 for i in range(5000) if (i % 10 != 0) == (g == "big")}
-        assert state.to_dict() == expected
+    result = _grouped_rows(skewed, 6000, "g", "key")
+    totals = {}
+    for g, _, est in result:
+        totals[g] = totals.get(g, 0) + est
+    assert totals == {"big": 4500, "small": 500}
+    expected = sorted(("big" if i % 10 else "small", str(i), 1) for i in range(5000))
+    assert result == expected
+
+
+def test_mg_topk_grouped_drops_keys_tied_at_cutoff(spark):
+    """Keys tied with the (k+1)-th count get est 0 and are dropped, so
+    the output depends on neither tie order nor partitioning: with k=3
+    and counts 10, 9, 5, 5, 5 (ranks 3-5 tied) only the two keys above
+    the cutoff t=5 survive.  A group with <= k keys keeps exact counts."""
+    counts = {"a": 10, "b": 9, "c": 5, "d": 5, "e": 5}
+    rows = [("tied", tok) for tok, n in counts.items() for _ in range(n)]
+    rows += [("small", "x")] * 2 + [("small", "y")]
+    df = spark.createDataFrame(rows, "g string, tok string")
+    result = _grouped_rows(df.repartition(1), 3, "g", "tok")
+    assert result == [("small", "x", 2), ("small", "y", 1), ("tied", "a", 5), ("tied", "b", 4)]
+    assert all(est > 0 for _, _, est in result)
+    assert result == _grouped_rows(df.repartition(5), 3, "g", "tok")
 
 
 def test_mg_topk_combiner_resume_from_tokenless_checkpoint(spark, docs, tmp_path):
@@ -411,7 +437,7 @@ def test_mg_topk_grouped_decodes_exact_counts(spark):
     groupBy count; a null token decodes to its stringified hash key, a
     null group is its own group, and the map-side and shuffle plans of
     sketch_agg_grouped over MG's columns build equal states."""
-    from mgspark.aggregate import _mg_columns, mg_topk_grouped
+    from mgspark.aggregate import _mg_columns
     from mgspark.sketches.base import sketch_agg_grouped
 
     rows = (
@@ -426,7 +452,7 @@ def test_mg_topk_grouped_decodes_exact_counts(spark):
     }
     got = {
         (r["g"], r["token"]): r["est"]
-        for r in mg_topk_grouped(df, "g", "tok", k=4, salt_buckets=2).collect()
+        for r in mg_topk_grouped(df, "g", "tok", k=4).collect()
     }
     assert got == exact
     assert got[("b", str(null_key))] == 4 and got[(None, "z")] == 6
