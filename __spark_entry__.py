@@ -1303,16 +1303,12 @@ def q_streaming_dedup_incremental_count(spark: SparkSession, sf_dir: str) -> Dat
 
 
 def q_streaming_hll_distinct_user_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming mergeable-sketch composition: HLL registers as
-    applyInPandasWithState state over the events stream, sharded by key
-    hash (disjoint shard key sets -> register-max merge of the latest
-    shard rows IS the HLL of the union).  Both HLL paths are
+    """Streaming mergeable-sketch composition: Spark's HLL sketch as a
+    streaming aggregation over the events stream.  Both HLL paths are
     hash-deterministic, so two facts are oracle-checkable: the estimate
     is within the 2.5% bound of the exact distinct count, and it EQUALS
-    the batch hll_distinct estimate bit-for-bit (same kernel, same
-    data)."""
+    the batch hll_distinct estimate (same sketch, same data)."""
     from mgspark.sketches import hll_distinct
-    from mgspark.sketches.hll import HLLSketch
     from mgspark.streaming import streaming_hll_distinct
 
     path = os.path.join(sf_dir, "events.parquet")
@@ -1322,23 +1318,13 @@ def q_streaming_hll_distinct_user_id(spark: SparkSession, sf_dir: str) -> DataFr
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
-    out = streaming_hll_distinct(stream, "user_id", p=14, num_shards=8)
+    out = streaming_hll_distinct(stream, "user_id", p=14)
     name = _run_stream_to_memory(out, "hll_stream", "update")
-    # latest state row per shard (update mode re-emits per micro-batch;
-    # n_rows is nondecreasing per shard, so max n_rows = most recent —
-    # no reliance on the memory sink's row order)
-    latest: dict[int, bytes] = {}
-    best_n: dict[int, int] = {}
-    for r in spark.table(name).collect():
-        shard = int(r["shard"])
-        if shard not in best_n or int(r["n_rows"]) > best_n[shard]:
-            best_n[shard] = int(r["n_rows"])
-            latest[shard] = bytes(r["registers"])
-    sk = HLLSketch(14)
-    merged = sk.zero()
-    for blob in latest.values():
-        merged = sk.merge(merged, sk.deserialize(blob))
-    est = float(sk.estimate(merged))
+    # latest aggregate row (update mode re-emits it per micro-batch;
+    # n_rows is nondecreasing, so max n_rows = most recent — no reliance
+    # on the memory sink's row order)
+    latest = max(spark.table(name).collect(), key=lambda r: r["n_rows"])
+    est = float(latest["n_distinct_est"])
     events = _read(spark, sf_dir, "events")
     batch_est = float(hll_distinct(events, "user_id"))
     true = events.select("user_id").distinct().count()
@@ -1856,23 +1842,11 @@ def q_kll_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cms_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mgspark.aggregate import encode_tokens
     from mgspark.sketches import cms_estimates
 
     li = _read(spark, sf_dir, "lineitem")
-    # ONE probe-keys job: the distinct scan collects each flag WITH its
-    # encode_tokens hash, so cms_estimates skips its probe-hashing
-    # round-trip (3 probe values previously cost a whole Spark job).
-    probe = sorted(
-        (r["l_returnflag"], r["_key"])
-        for r in encode_tokens(
-            li.select("l_returnflag").distinct(), "l_returnflag", "_key"
-        ).collect()
-    )
-    flags = [v for v, _ in probe]
-    ests = cms_estimates(
-        li, "l_returnflag", flags, eps=1e-3, probe_hashed=[h for _, h in probe]
-    )
+    flags = sorted(r["l_returnflag"] for r in li.select("l_returnflag").distinct().collect())
+    ests = cms_estimates(li, "l_returnflag", flags, eps=1e-3)
     return spark.createDataFrame(
         [(flag, int(est)) for flag, est in ests.items()], "token string, est long"
     )
@@ -2082,43 +2056,28 @@ def q_streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_hll_grouped_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group HLL distinct (users per event_type) through the salted
-    grouped sketch UDAF (sketches/base.py sketch_agg_grouped) — the
-    groupBy(g).agg(sketch(x)) shape.  Hash-deterministic, so each
+    """Per-group HLL distinct (users per event_type): Spark's
+    ``hll_sketch_agg`` under ``groupBy`` — the groupBy(g).agg(sketch(x))
+    shape, all in the JVM.  Hash-deterministic, so each
     group's exact distinct (DuckDB-recomputed) plus a within-2.5%-bound
     flag is a fixed oracle fact."""
-    from mgspark.sketches.hll import hll_distinct_grouped
+    from mgspark.sketches import hll_distinct_grouped
 
     events = _read(spark, sf_dir, "events")
-    # Both sides in ONE action: the sketch estimates join the exact
-    # distinct counts on the group key (null-safe key passthrough), one
-    # collect instead of two sequential multi-stage jobs.
+    # One lazy JVM plan: the sketch estimates join the exact distinct
+    # counts on the group key (null-safe, so a null group keeps its row),
+    # and the bound flag is computed in the same projection.
     est_df = hll_distinct_grouped(events, "event_type", "user_id").select(
         F.col("event_type").alias("_g"), "n_distinct_est"
     )
     exact_df = events.groupBy("event_type").agg(
-        F.count_distinct("user_id").alias("c")
+        F.count_distinct("user_id").alias("true_distinct")
     )
-    both = {
-        (r["event_type"]): (r["c"], r["n_distinct_est"])
-        for r in exact_df.join(
-            est_df, exact_df["event_type"].eqNullSafe(est_df["_g"]), "left"
-        ).collect()
-    }
-    rows = [
-        (
-            g,
-            int(both[g][0]),
-            1 if abs(both[g][1] - both[g][0]) <= 0.025 * both[g][0] else 0,
-        )
-        # None-robust sort: a null group would make sorted() raise on
-        # None < str even though the library and the SQL oracle both
-        # support null groups.
-        for g in sorted(both, key=lambda k: (k is None, k))
-    ]
-    return spark.createDataFrame(
-        rows, "event_type string, true_distinct long, within_bound long"
-    )
+    true, est = F.col("true_distinct"), F.col("n_distinct_est")
+    within = F.coalesce(F.abs(est - true) <= 0.025 * true, F.lit(False))
+    return exact_df.join(
+        est_df, exact_df["event_type"].eqNullSafe(est_df["_g"]), "left"
+    ).select("event_type", true, within.cast("long").alias("within_bound"))
 
 
 def q_tdigest_grouped_price_by_flag(spark: SparkSession, sf_dir: str) -> DataFrame:

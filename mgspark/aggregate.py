@@ -66,15 +66,18 @@ def encode_tokens(df: DataFrame, col: str, key_col: str = "key") -> DataFrame:
     Strings (and other non-integral types) are hashed with ``xxhash64``
     (JVM-side, whole-stage codegen) and masked non-negative; integral
     columns pass through unchanged so the reference's "integers >= 0,
-    negatives skipped" contract (pmg.py:82-83) stays observable.  At
-    100 TB this avoids any dictionary shuffle; released keys are decoded
-    back to tokens with :func:`decode_keys` via a broadcast semi-join of
-    only the <= k survivors.
+    negatives skipped" contract (pmg.py:82-83) stays observable.  A null
+    of any type becomes -1, the kernel's invalid key, so every sketch
+    skips nulls.  At 100 TB this avoids any dictionary shuffle; released
+    keys are decoded back to tokens with :func:`decode_keys` via a
+    broadcast semi-join of only the <= k survivors.
     """
     dtype = dict(df.dtypes)[col]
     if dtype in ("tinyint", "smallint", "int", "bigint"):
-        return df.withColumn(key_col, F.col(col).cast("long"))
-    return df.withColumn(key_col, F.xxhash64(F.col(col)).bitwiseAND(F.lit(_HASH_MASK)))
+        key = F.col(col).cast("long")
+    else:
+        key = F.xxhash64(F.col(col)).bitwiseAND(F.lit(_HASH_MASK))
+    return df.withColumn(key_col, F.when(F.col(col).isNull(), F.lit(-1)).otherwise(key))
 
 
 def decode_keys(tokens_df: DataFrame, col: str, keys: list[int], key_col: str = "key") -> dict[int, str]:
@@ -427,11 +430,11 @@ def mg_topk_grouped(df: DataFrame, group_col: str, token_col: str, k: int) -> Da
     ``spark.sql.optimizer.windowGroupLimitThreshold``), so each map task
     ships at most k+1 rows per group and a hot group cannot straggle;
     above that threshold the plan stays correct without the map-side
-    limit.  A null token decodes to its stringified key.
+    limit.  Null tokens are skipped, as in every MG path.
     """
     encoded = encode_tokens(df.select(group_col, token_col), token_col)
     counts = (
-        encoded.where(F.col("key") >= 0)  # the kernel's invalid-key rule
+        encoded.where(F.col("key") >= 0)  # the kernel's invalid-key rule (nulls too)
         .groupBy(group_col, "key")
         .agg(F.count("*").alias("_c"), F.min(token_col).cast("string").alias("_tok"))
     )
@@ -441,7 +444,7 @@ def mg_topk_grouped(df: DataFrame, group_col: str, token_col: str, k: int) -> Da
     cutoff = F.max(F.when(F.col("_rank") == k + 1, F.col("_c")).otherwise(0)).over(by_group)
     return top.select(
         group_col,
-        F.coalesce("_tok", F.col("key").cast("string")).alias("token"),
+        F.col("_tok").alias("token"),
         (F.col("_c") - cutoff).alias("est"),
     ).where(F.col("est") > 0)
 

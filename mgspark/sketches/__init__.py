@@ -1,14 +1,22 @@
 """Mergeable sketch/approximate-aggregation families over Spark DataFrames.
 
-High-level DataFrame API: each function stages the shared two-phase
-partial+final aggregation (see base.py) and finishes on the driver.
+HLL, Count-Min and KLL are Spark's own mergeable aggregates
+(``hll_sketch_agg``, ``count_min_sketch``, ``kll_sketch_agg_double``):
+each call is one JVM aggregation with no Python worker.  Misra-Gries,
+Bloom and t-digest have no JVM twin; they run on the shared two-phase
+partial+final skeleton (see base.py) and finish on the driver.
+
+HLL and Count-Min read a column by one rule: nulls are ignored,
+``tinyint``/``smallint``/``int``/``bigint`` are cast to ``bigint``,
+``string`` and ``binary`` pass through, and any other type is cast to
+``string``.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mgspark.sketches.base import (  # noqa: F401
@@ -19,25 +27,20 @@ from mgspark.sketches.base import (  # noqa: F401
     sketch_partials,
 )
 from mgspark.sketches.bloom import BloomFilter  # noqa: F401
-from mgspark.sketches.cms import CountMinSketch  # noqa: F401
-from mgspark.sketches.hll import HLLSketch  # noqa: F401
-from mgspark.sketches.kll import KLLSketch  # noqa: F401
 from mgspark.sketches.mg import MGSketch  # noqa: F401
 from mgspark.sketches.tdigest import TDigest  # noqa: F401
 
 __all__ = [
     "MergeableSketch",
-    "HLLSketch",
-    "CountMinSketch",
     "BloomFilter",
     "TDigest",
-    "KLLSketch",
     "MGSketch",
     "sketch_agg",
     "sketch_agg_grouped",
     "sketch_partials",
     "merge_partials",
     "hll_distinct",
+    "hll_distinct_grouped",
     "cms_estimates",
     "bloom_build",
     "bloom_probe",
@@ -46,6 +49,23 @@ __all__ = [
     "tdigest_quantiles_grouped",
 ]
 
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
+def _sketch_input(column: Column, dtype: str) -> Column:
+    """``column`` (of SQL type ``dtype``) as HLL and Count-Min read it."""
+    if dtype in _INTEGRAL:
+        return column.cast("bigint")
+    if dtype in ("string", "binary"):
+        return column
+    return column.cast("string")
+
+
+def _check_p(p: int) -> int:
+    if not 4 <= p <= 18:
+        raise ValueError("p must be in [4, 18]")
+    return p
+
 
 def _encoded(df: DataFrame, col: str) -> DataFrame:
     from mgspark.aggregate import encode_tokens
@@ -53,48 +73,64 @@ def _encoded(df: DataFrame, col: str) -> DataFrame:
     return encode_tokens(df, col, key_col="_key")
 
 
+def _hll_sketch(df: DataFrame, col: str, p: int) -> Column:
+    """Spark's HLL sketch of ``df[col]`` as an aggregate column."""
+    return F.hll_sketch_agg(_sketch_input(F.col(col), dict(df.dtypes)[col]), _check_p(p))
+
+
 def hll_distinct(df: DataFrame, col: str, p: int = 14) -> float:
-    """Approximate COUNT(DISTINCT col) via distributed HLL."""
-    sketch = HLLSketch(p)
-    state = sketch_agg(_encoded(df, col), "_key", sketch)
-    return sketch.estimate(state)
+    """Approximate COUNT(DISTINCT col): one JVM ``hll_sketch_agg`` with
+    ``2^p`` registers.
+
+    The estimate is a fixed function of the input and how it is split
+    into partitions: the sketch library estimates a merge of partial
+    sketches differently from one sketch that saw every row in order
+    (both within the HLL error bound), so a rerun over the same files
+    repeats the estimate, while a repartitioned input can move it
+    slightly."""
+    return float(df.agg(F.hll_sketch_estimate(_hll_sketch(df, col, p))).first()[0])
 
 
-def _hash_literals(spark: SparkSession, col: str, dtype: str, values: list) -> list:
-    """``encode_tokens`` keys of ``values`` cast to ``dtype``, in input order.
+def hll_distinct_grouped(df: DataFrame, group_col: str, col: str, p: int = 14) -> DataFrame:
+    """Per-group distinct-count estimates: (group, n_distinct_est long).
+    Null group values form their own group, as in SQL GROUP BY."""
+    estimate = F.hll_sketch_estimate(_hll_sketch(df, col, p))
+    return df.groupBy(group_col).agg(estimate.alias("n_distinct_est"))
 
-    The values ride a one-row literal frame and are exploded and hashed
-    in the JVM: one job, no Python worker and no Python RDD."""
-    if not values:
-        return []
-    literals = F.array(*[F.lit(v).cast(dtype) for v in values])
-    probe = spark.sql("SELECT 1").select(F.posexplode(literals).alias("_pos", col))
-    rows = _encoded(probe, col).select("_pos", "_key").collect()
-    return [r["_key"] for r in sorted(rows, key=lambda r: r["_pos"])]
+
+_CMS_SEED = 1  # one fixed hash family, so the sketches of any two calls merge
 
 
 def cms_estimates(
-    df: DataFrame,
-    col: str,
-    probe_keys: list,
-    eps: float = 1e-4,
-    delta: float = 1e-3,
-    probe_hashed: list | None = None,
+    df: DataFrame, col: str, probe_keys: list, eps: float = 1e-4, delta: float = 1e-3
 ) -> dict:
     """Count-Min point-frequency estimates for ``probe_keys`` (raw
-    values).  ``probe_hashed`` optionally supplies the keys' already-
-    computed ``encode_tokens`` hashes (e.g. collected alongside a
-    distinct-keys scan), skipping the one-job probe-hashing round-trip;
-    it must align with ``probe_keys``."""
-    sketch = CountMinSketch(eps, delta)
-    encoded = _encoded(df, col)
-    state = sketch_agg(encoded, "_key", sketch)
-    if probe_hashed is None:
-        probe_hashed = _hash_literals(df.sparkSession, col, dict(df.dtypes)[col], probe_keys)
-    elif len(probe_hashed) != len(probe_keys):
-        raise ValueError("probe_hashed must align with probe_keys")
-    ests = sketch.estimate(state, np.asarray(probe_hashed, dtype=np.int64))
-    return {value: int(est) for value, est in zip(probe_keys, ests)}
+    values): ``true <= estimate <= true + eps * N`` with probability
+    ``1 - delta``.
+
+    One JVM ``count_min_sketch`` aggregation; the same job casts the
+    probe values to the column's type and by the same rule, and the
+    driver reads the sketch with Spark's own Java reader (``readFrom``)
+    to estimate each one.  A null probe value is 0, since the sketch
+    ignores nulls."""
+    if not eps > 0:
+        raise ValueError("eps must be > 0")
+    if not 0 < delta < 1:
+        raise ValueError("delta must be in (0, 1)")
+    if not probe_keys:
+        return {}
+    dtype = dict(df.dtypes)[col]
+    sketch = F.count_min_sketch(
+        _sketch_input(F.col(col), dtype), F.lit(float(eps)), F.lit(1.0 - delta), F.lit(_CMS_SEED)
+    )
+    probes = [_sketch_input(F.lit(v).cast(dtype), dtype) for v in probe_keys]
+    row = df.agg(sketch.alias("cms"), F.array(*probes).alias("probe")).first()
+    reader = df.sparkSession._jvm.org.apache.spark.util.sketch.CountMinSketch
+    cms = reader.readFrom(row["cms"])
+    return {
+        key: 0 if value is None else int(cms.estimateCount(value))
+        for key, value in zip(probe_keys, row["probe"])
+    }
 
 
 def bloom_build(df: DataFrame, col: str, capacity: int = 1_000_000, fpr: float = 0.01):
@@ -134,7 +170,7 @@ def bloom_probe(
         sk = BloomFilter(capacity, fpr)
         st = sk.deserialize(blob.value)
         for pdf in batches:
-            keys = pdf["_key"].to_numpy(dtype="int64", na_value=0)
+            keys = pdf["_key"].to_numpy(dtype="int64")
             out = pdf[out_cols].copy()
             out[flag_col] = sk.contains(st, keys)
             yield out
@@ -149,9 +185,16 @@ def tdigest_quantiles(df: DataFrame, col: str, qs, compression: float = 200.0) -
 
 
 def kll_quantiles(df: DataFrame, col: str, qs, k: int = 200) -> np.ndarray:
-    sketch = KLLSketch(k)
-    state = sketch_agg(df, col, sketch)
-    return np.array([sketch.quantile(state, q) for q in qs])
+    """Approximate quantiles of ``df[col]`` (cast to double; nulls
+    ignored) from one JVM ``kll_sketch_agg_double``; NaN for an empty input."""
+    ranks = F.array(*[F.lit(float(q)) for q in qs])
+    sketch = F.kll_sketch_agg_double(F.col(col).cast("double"), k)
+    row = (
+        df.agg(sketch.alias("_kll"), F.count(col).alias("_n"))
+        .select(F.when(F.col("_n") > 0, F.kll_sketch_get_quantile_double("_kll", ranks)))
+        .first()
+    )
+    return np.array(row[0] if row[0] is not None else [np.nan] * len(qs), dtype=np.float64)
 
 
 def tdigest_quantiles_grouped(

@@ -1,5 +1,7 @@
 """Mergeable-sketch framework: one partial+final aggregation skeleton for
-every sketch family (Misra-Gries, HLL, Count-Min, Bloom, t-digest, KLL).
+the sketch families Spark has no built-in aggregate for (Misra-Gries,
+Bloom, t-digest).  HLL, Count-Min and KLL are Spark's own aggregates
+(see ``mgspark.sketches``) and never reach this module.
 
 Stage 1 (``sketch_partials``) is a shuffle-free ``mapInArrow`` over the
 scan partitions, each task folding its Arrow batches into one
@@ -57,9 +59,9 @@ SKETCH_PARTIAL_SCHEMA = StructType(
 def splitmix64(x: np.ndarray) -> np.ndarray:
     """Deterministic 64-bit mixer (public-domain splitmix64 finalizer).
 
-    Re-hashes int64 keys into uniform uint64 bits for register/bucket
-    derivation — xxhash64 output alone is uniform, but families needing
-    several independent hashes derive them from this mix.
+    Re-hashes int64 keys into uniform uint64 bits — xxhash64 output
+    alone is uniform, but families needing several independent hashes
+    (Bloom's bit positions) derive them from this mix.
     """
     z = x.astype(np.uint64, copy=True)
     z += np.uint64(0x9E3779B97F4A7C15)
@@ -268,10 +270,10 @@ def merge_partials(
     remaining rows and folds them on the driver with ``sketch.merge``
     from ``zero()`` in ascending ``partition_id`` order — the fold the
     last ``applyInPandas`` task would run, so even the order-sensitive
-    families (t-digest, KLL, MG) get the same state, minus that round's
+    families (t-digest, MG) get the same state, minus that round's
     shuffle and Python-worker wave.  Driver memory is bounded by
-    ``fanout`` x payload size (e.g. 64 x 1.5 MB for a Count-Min sketch
-    at ``eps=1e-4``), what that last merge task would otherwise hold.
+    ``fanout`` x payload size (e.g. 64 x 1.5 MB for a Bloom filter at
+    capacity 1e6 / fpr 0.01), what that last merge task would otherwise hold.
     """
     remaining = num_partials
     while remaining > fanout:
@@ -368,12 +370,12 @@ def sketch_agg_grouped(
 
     Stage 2 merges each group's partials in ascending ``_salt`` order —
     deterministic, so order-sensitive-within-bound families (t-digest,
-    KLL, MG) reproduce bit-identical results across reruns of the same
+    MG) reproduce bit-identical results across reruns of the same
     input (same reason ``sketch_agg`` folds in partition-id order).
 
     Output: (group_col, _salt=0, payload binary, rows long); map the
-    family's ``estimate``/query over the payloads (e.g. HLL distinct
-    per group).  Null group values form their own group, matching SQL
+    family's ``estimate``/query over the payloads (e.g. t-digest
+    quantiles per group).  Null group values form their own group, matching SQL
     GROUP BY.  Caveat: a NULLABLE int64 group column passes through
     pandas as float64 in estimator helpers, so group KEYS above 2^53
     lose precision there — use string group keys (or drop nulls first)

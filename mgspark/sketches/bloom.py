@@ -1,7 +1,8 @@
 """Bloom filter as a mergeable UDAF kernel: m-bit array (packed uint8),
 k hash functions via Kirsch-Mitzenmacher double hashing; merge =
 bitwise OR.  No false negatives ever; false-positive rate ~
-(1 - e^(-k n / m))^k.  Input contract: int64 hashed keys.
+(1 - e^(-k n / m))^k.  Input contract: int64 hashed keys; negative
+keys (nulls, see ``aggregate.encode_tokens``) are invalid and skipped.
 """
 
 from __future__ import annotations
@@ -37,7 +38,8 @@ class BloomFilter(MergeableSketch):
         return ((h1[None, :] + i * h2[None, :]) % np.uint64(self.m)).astype(np.int64)
 
     def build(self, state: np.ndarray, values: pd.Series) -> np.ndarray:
-        keys = values.to_numpy(dtype=np.int64, na_value=0)
+        keys = values.to_numpy(dtype=np.int64, na_value=-1)
+        keys = keys[keys >= 0]  # invalid (negative or null) keys are never members
         if len(keys) == 0:
             return state
         pos = self._bit_positions(np.unique(keys)).ravel()
@@ -54,8 +56,9 @@ class BloomFilter(MergeableSketch):
         return np.frombuffer(blob, dtype=np.uint8).copy()
 
     def contains(self, state: np.ndarray, keys: np.ndarray) -> np.ndarray:
-        """Vectorized membership probe: bool array, no false negatives."""
+        """Vectorized membership probe: bool array, no false negatives;
+        an invalid key is never a member."""
         keys = np.asarray(keys, dtype=np.int64)
         pos = self._bit_positions(keys)  # (k, n)
         bits = (state[pos >> 3] >> (pos & 7).astype(np.uint8)) & 1
-        return bits.all(axis=0)
+        return bits.all(axis=0) & (keys >= 0)

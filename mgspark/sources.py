@@ -1,34 +1,14 @@
-"""Sources and sinks for the reference's file formats (SURVEY.md §2.4
-"scans/sources/sinks" row).
-
-* integer stream files — one element per line (README.md:17,
-  pmg.py:515-517) — as a distributed Spark text source;
-* JSON sketch files — ``{"key": counter}`` objects (pmg.py:222-225,
-  532-534) — loaded into partial-sketch rows ready for
-  :func:`mgspark.sketches.base.merge_partials`, and written back out;
-* parquet checkpoint partials (the engine's own resumable format);
-* catalog tables — ``table:NAME`` (session catalog) and
-  ``iceberg:catalog.db.table`` (Apache Iceberg DataSource-V2 reader with
-  snapshot time-travel), the BASELINE input shape at 10^12-file scale.
+"""Sources for every engine surface (SURVEY.md §2.4 "scans/sources/sinks"
+row): parquet paths, catalog tables — ``table:NAME`` (session catalog)
+— and ``iceberg:catalog.db.table`` (Apache Iceberg DataSource-V2 reader
+with snapshot time-travel), the BASELINE input shape at 10^12-file scale.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from mgspark.kernel import MGState
-
-__all__ = [
-    "read_stream_file",
-    "read_sketch_jsons",
-    "write_sketch_json",
-    "read_checkpoint",
-    "load_table",
-]
+__all__ = ["load_table"]
 
 _ICEBERG_HINT = (
     "the Iceberg DataSource is not on this Spark classpath; submit with "
@@ -98,51 +78,3 @@ def load_table(
     if columns is not None:
         df = df.select(*columns)
     return df
-
-
-def read_stream_file(spark: SparkSession, path: str) -> DataFrame:
-    """Reference stream-file format as a DataFrame of int64 keys.
-
-    One integer per line; invalid (negative) elements are kept — the
-    build kernel skips them, preserving pmg.py:82-83 semantics (they must
-    not count toward ``n``).
-    """
-    return spark.read.text(path).select(
-        F.col("value").cast("long").alias("key")
-    ).where(F.col("key").isNotNull())
-
-
-def read_sketch_jsons(spark: SparkSession, paths: list[str], k: int) -> DataFrame:
-    """Load reference JSON sketch files as partial-sketch rows.
-
-    Each file becomes one ``SKETCH_PARTIAL_SCHEMA`` row whose payload is
-    an ``MGSketch(k)`` state (n and d are unknown for foreign sketches —
-    recorded as 0, matching the reference merge which ignores them,
-    pmg.py:207-246).  Fold order in ``merge_partials`` follows the given
-    path order via ``partition_id``.
-    """
-    from mgspark.sketches.base import SKETCH_PARTIAL_SCHEMA
-    from mgspark.sketches.mg import MGSketch
-
-    sketch = MGSketch(k)
-    rows = []
-    for i, path in enumerate(paths):
-        with open(path, encoding="utf8") as f:
-            counters = {int(key): counter for key, counter in json.load(f).items()}
-        payload = sketch.serialize((MGState.from_dict(counters, k), {}))
-        rows.append((i, payload, len(counters), 0.0))
-    return spark.createDataFrame(rows, SKETCH_PARTIAL_SCHEMA)
-
-
-def write_sketch_json(state_or_dict, path: str) -> None:
-    """Write a sketch in the reference JSON format (pmg.py:532-534)."""
-    sketch = state_or_dict.to_dict() if isinstance(state_or_dict, MGState) else state_or_dict
-    with open(path, "w", encoding="utf8") as f:
-        json.dump({str(key): int(cnt) for key, cnt in sketch.items()}, f)
-
-
-def read_checkpoint(spark: SparkSession, checkpoint_dir: str) -> DataFrame:
-    """Read a partial-sketch parquet checkpoint (lineage + metrics rows)."""
-    if not os.path.exists(os.path.join(checkpoint_dir, "_SUCCESS")):
-        raise FileNotFoundError(f"no completed checkpoint at {checkpoint_dir}")
-    return spark.read.parquet(checkpoint_dir)

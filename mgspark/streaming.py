@@ -11,6 +11,8 @@ Structured Streaming:
   keeps the per-shard key sets disjoint, so reading the union of shard
   sketches is itself a valid sharded-MG summary (each estimate obeys its
   shard's N_shard/(k+1) bound, hence the global N/(k+1) bound).
+* :func:`streaming_hll_distinct` — Spark's ``hll_sketch_agg`` as a
+  streaming aggregation: a running approximate distinct count.
 * :func:`windowed_token_counts` — watermarked tumbling-window exact
   counts with late-data handling, for the windowed-aggregation surface
   (pure built-ins).
@@ -28,7 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     LongType,
     StringType,
     StructField,
@@ -158,82 +159,25 @@ def mg_streaming_sketch(
     )
 
 
-HLL_STREAM_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("shard", LongType(), False),
-        StructField("registers", BinaryType(), False),
-        StructField("n_rows", LongType(), False),
-    ]
-)
+def streaming_hll_distinct(stream_df: DataFrame, key_col: str, p: int = 14) -> DataFrame:
+    """Continuously-updated approximate DISTINCT count over a stream: a
+    streaming ``agg(hll_sketch_agg)``, Spark's own mergeable HLL held in
+    the state store (O(2^p) bytes, whatever the stream length).
 
-HLL_STREAM_STATE_SCHEMA = StructType(
-    [
-        StructField("registers", BinaryType(), True),
-        StructField("n_rows", LongType(), True),
-    ]
-)
-
-
-def streaming_hll_distinct(
-    stream_df: DataFrame,
-    key_col: str,
-    p: int = 14,
-    num_shards: int = 8,
-) -> DataFrame:
-    """Continuously-updated approximate DISTINCT count over a stream: the
-    mergeable HLL kernel as streaming state (``applyInPandasWithState``),
-    the same composition :func:`mg_streaming_sketch` uses for MG.
-
-    Keys hash JVM-side (:func:`~mgspark.aggregate.encode_tokens` rule)
-    and shard by key hash, so shard key sets are DISJOINT and the
-    register-wise max of the emitted shard states is exactly the HLL of
-    the union — read the latest row per shard, merge with
-    ``HLLSketch(p).merge``, estimate.  State per shard is one 2^p-byte
-    register array regardless of stream length; emits one updated
-    (shard, registers, n_rows) row per shard per micro-batch (update
-    mode).  The same replayable-sink checkpoint caveat as
-    :func:`mg_streaming_sketch` applies.
+    Reads ``key_col`` by the rule of :func:`mgspark.sketches.hll_distinct`
+    (nulls ignored); a stream that takes each file as it comes reaches
+    the estimate of the batch ``hll_distinct`` over the same files.  Emits one ``(sketch binary, n_distinct_est long, n_rows long)``
+    row per micro-batch in update or complete mode; ``n_rows`` counts the
+    non-null keys so far, and ``sketch`` merges with other HLL sketches
+    of the same ``p`` through ``hll_union_agg``.  The same
+    replayable-sink checkpoint caveat as :func:`mg_streaming_sketch`
+    applies.
     """
-    from mgspark.aggregate import encode_tokens
-    from mgspark.sketches.hll import HLLSketch
+    from mgspark.sketches import _hll_sketch
 
-    HLLSketch(p)  # validate p driver-side, before any executor sees it
-    encoded = encode_tokens(stream_df.select(key_col), key_col, key_col="key")
-    sharded = encoded.select("key").where(F.col("key").isNotNull()).withColumn(
-        "shard", F.pmod(F.col("key"), F.lit(num_shards))
-    )
-
-    def update(
-        shard_key: Tuple,
-        batches: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        sk = HLLSketch(p)
-        if state.exists:
-            blob, n_rows = state.get
-            regs = sk.deserialize(bytes(blob))
-            n_rows = int(n_rows)
-        else:
-            regs = sk.zero()
-            n_rows = 0
-        for pdf in batches:
-            regs = sk.build(regs, pdf["key"])
-            n_rows += len(pdf)
-        state.update((sk.serialize(regs), n_rows))
-        yield pd.DataFrame(
-            {
-                "shard": [int(shard_key[0])],
-                "registers": [sk.serialize(regs)],
-                "n_rows": [n_rows],
-            }
-        )
-
-    return sharded.groupBy("shard").applyInPandasWithState(
-        update,
-        HLL_STREAM_OUTPUT_SCHEMA,
-        HLL_STREAM_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
+    sketch = _hll_sketch(stream_df, key_col, p)
+    return stream_df.agg(sketch.alias("sketch"), F.count(key_col).alias("n_rows")).select(
+        "sketch", F.hll_sketch_estimate("sketch").alias("n_distinct_est"), "n_rows"
     )
 
 

@@ -192,7 +192,7 @@ def main() -> None:
     ))
 
     from mgspark.sketches.base import sketch_agg_grouped
-    from mgspark.sketches.hll import HLLSketch
+    from mgspark.sketches.tdigest import TDigest
 
     sections.append((
         "Grouped sketch, map-side combine plan",
@@ -201,7 +201,7 @@ def main() -> None:
         "exchange moves O(partitions x groups x sketch-size) partial "
         "rows into the per-group merge — the hash-aggregate shape for "
         "sketch states.",
-        tree(sketch_agg_grouped(docs, "lang", "doc_id", HLLSketch(12), mode="mapside")),
+        tree(sketch_agg_grouped(docs, "lang", "doc_id", TDigest(100), mode="mapside")),
     ))
 
     from mgspark.pipeline.decontam import decontaminate

@@ -88,17 +88,17 @@ def _partitionings(plan: str) -> list[str]:
 
 
 def test_grouped_sketch_exchanges_on_salted_key(docs):
-    """sketch_agg_grouped's shuffle plan (HLL, t-digest): the salted
-    build exchange, then the per-group merge — and the salt must appear
-    in a partitioning key so a hot group fans across cells."""
+    """sketch_agg_grouped's shuffle plan (t-digest): the salted build
+    exchange, then the per-group merge — and the salt must appear in a
+    partitioning key so a hot group fans across cells."""
     from mgspark.sketches.base import sketch_agg_grouped
-    from mgspark.sketches.hll import HLLSketch
+    from mgspark.sketches.tdigest import TDigest
 
     df = docs.select(
         "lang", F.explode(F.split(F.col("text"), " ")).alias("token")
     ).where(F.col("token") != "")
     df = encode_tokens(df, "token")
-    plan = _formatted(sketch_agg_grouped(df, "lang", "key", HLLSketch(10), 4, mode="shuffle"))
+    plan = _formatted(sketch_agg_grouped(df, "lang", "key", TDigest(50), 4, mode="shuffle"))
     tree = plan.split("\n\n")[0]
     assert tree.count("FlatMapGroupsInArrow (") == 2, plan  # salted build, merge
     assert _partitionings(plan) == ["lang, _salt", "lang"], plan
@@ -160,12 +160,12 @@ def test_sketch_agg_folds_last_round_on_driver(spark, monkeypatch):
     no FlatMapGroupsInPandas merge round and no Exchange.  Past fanout
     (6 partitions, fanout 2) it runs exactly the two distributed rounds
     that bring the partials down to <= fanout rows."""
-    from mgspark.sketches import HLLSketch
+    from mgspark.sketches import TDigest
     from mgspark.sketches.base import sketch_agg
 
     def run(partitions, fanout):
         df = spark.range(0, 1_000, numPartitions=partitions)
-        return lambda: sketch_agg(df, "id", HLLSketch(p=10), fanout=fanout)
+        return lambda: sketch_agg(df, "id", TDigest(compression=50), fanout=fanout)
 
     tree = _collected_plan(monkeypatch, run(4, 64))
     assert "MapInArrow" in tree

@@ -9,8 +9,6 @@ from hypothesis import strategies as st
 from mgspark import dp
 from mgspark.kernel import MGState, mg_build_weighted, mg_merge, mg_reference
 from mgspark.sketches.bloom import BloomFilter
-from mgspark.sketches.cms import CountMinSketch
-from mgspark.sketches.hll import HLLSketch
 
 streams = st.lists(st.integers(min_value=-3, max_value=30), max_size=200)
 small_k = st.integers(min_value=1, max_value=8)
@@ -68,27 +66,42 @@ def test_distributed_build_merge_bound_any_partitioning(parts, k):
             assert int(key) in set(int(x) for x in acc.keys)
 
 
+def _sides(spark, a, b):
+    """One frame of ``a`` (side 0) and ``b`` (side 1), shipped through
+    Arrow so that its scans run no Python worker."""
+    import pandas as pd
+
+    sides = pd.DataFrame({"side": [0] * len(a) + [1] * len(b), "v": a + b}, dtype="int64")
+    return spark.createDataFrame(sides, "side bigint, v bigint")
+
+
 @settings(max_examples=60, deadline=None)
 @given(
     a=st.lists(st.integers(min_value=0, max_value=10**6), max_size=300),
     b=st.lists(st.integers(min_value=0, max_value=10**6), max_size=300),
 )
-def test_hll_merge_commutes_and_bounds(a, b):
-    sk = HLLSketch(p=10)
-    import pandas as pd
+def test_hll_merge_commutes_and_bounds(spark, a, b):
+    """The JVM HLL: the sketch of a union is the union of the two
+    sketches, in either order, and idempotent; estimates stay in bound."""
+    from pyspark.sql import functions as F
 
-    sa = sk.build(sk.zero(), pd.Series(a, dtype="int64"))
-    sb = sk.build(sk.zero(), pd.Series(b, dtype="int64"))
-    merged = sk.merge(sa, sb)
-    assert np.array_equal(merged, sk.merge(sb, sa))
-    assert np.array_equal(sk.merge(merged, merged), merged)  # idempotent
+    from mgspark.sketches import _hll_sketch
+
+    df = _sides(spark, a, b)
+    sa, sb = (F.hll_sketch_agg(F.when(F.col("side") == side, F.col("v")), 10) for side in (0, 1))
+    row = df.agg(
+        F.hll_sketch_estimate(F.hll_union(sa, sb)).alias("ab"),
+        F.hll_sketch_estimate(F.hll_union(sb, sa)).alias("ba"),
+        F.hll_sketch_estimate(F.hll_union(F.hll_union(sa, sb), F.hll_union(sa, sb))).alias("twice"),
+        F.hll_sketch_estimate(_hll_sketch(df, "v", 10)).alias("whole"),  # hll_distinct's
+    ).first()
+    assert row["ab"] == row["ba"] == row["twice"] == row["whole"]
     true = len(set(a) | set(b))
     if true:
-        est = sk.estimate(merged)
         # p=10 -> ~3.3% sigma relative; the absolute floor covers tiny
         # cardinalities, where two values hashing into one register is a
         # legitimate 50%-relative-error outcome (found by hypothesis).
-        assert abs(est - true) <= max(0.25 * true, 2.0)
+        assert abs(row["ab"] - true) <= max(0.25 * true, 2.0)
 
 
 @settings(max_examples=60, deadline=None)
@@ -96,18 +109,29 @@ def test_hll_merge_commutes_and_bounds(a, b):
     a=st.lists(st.integers(min_value=0, max_value=1000), max_size=300),
     b=st.lists(st.integers(min_value=0, max_value=1000), max_size=300),
 )
-def test_cms_never_underestimates_after_merge(a, b):
-    import pandas as pd
+def test_cms_never_underestimates_after_merge(spark, a, b):
+    """The JVM Count-Min sketches of two sides, merged on the driver,
+    never undercount a key of either side."""
+    from pyspark.sql import functions as F
 
-    sk = CountMinSketch(eps=1e-2, delta=1e-2)
-    merged = sk.merge(
-        sk.build(sk.zero(), pd.Series(a, dtype="int64")),
-        sk.build(sk.zero(), pd.Series(b, dtype="int64")),
-    )
+    from mgspark.sketches import _CMS_SEED
+
+    df = _sides(spark, a, b)
+    blobs = df.agg(
+        *[
+            F.count_min_sketch(
+                F.when(F.col("side") == side, F.col("v")), F.lit(1e-2), F.lit(0.99), F.lit(_CMS_SEED)
+            )
+            for side in (0, 1)
+        ]
+    ).first()
+    reader = spark._jvm.org.apache.spark.util.sketch.CountMinSketch
+    merged = reader.readFrom(blobs[0])
+    merged.mergeInPlace(reader.readFrom(blobs[1]))
     full = a + b
     if full:
         uniq, counts = np.unique(np.asarray(full, dtype=np.int64), return_counts=True)
-        est = sk.estimate(merged, uniq)
+        est = np.array([merged.estimateCount(int(key)) for key in uniq])
         assert (est >= counts).all()
 
 

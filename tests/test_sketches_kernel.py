@@ -1,14 +1,18 @@
 """Kernel-level tests for the sketch families: error bounds, merge
-associativity/commutativity, serialization round-trips. No Spark."""
+associativity/commutativity, serialization round-trips.
+
+The Python families (Bloom, t-digest, MG) are tested on their numpy
+kernels, without Spark.  HLL, Count-Min and KLL are Spark's own
+aggregates, so their tests drive those aggregates on small local frames
+and merge their sketches the way the JVM does."""
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
+from mgspark.sketches import cms_estimates, hll_distinct, kll_quantiles
 from mgspark.sketches.bloom import BloomFilter
-from mgspark.sketches.cms import CountMinSketch
-from mgspark.sketches.hll import HLLSketch
-from mgspark.sketches.kll import KLLSketch
 from mgspark.sketches.tdigest import TDigest
 
 
@@ -33,41 +37,65 @@ def _split_build(sketch, data, n_parts=7):
 
 
 @pytest.mark.parametrize("n_distinct", [100, 5_000, 200_000])
-def test_hll_accuracy_and_merge(n_distinct):
-    rng = np.random.default_rng(42)
-    keys = rng.permutation(n_distinct * 3)[:n_distinct].astype(np.int64)
-    data = np.repeat(keys, 3)  # duplicates must not matter
-    sketch = HLLSketch(p=14)
-    merged, states = _split_build(sketch, data)
-    est = sketch.estimate(merged)
-    rel_err = abs(est - n_distinct) / n_distinct
-    assert rel_err < 0.05, f"HLL rel err {rel_err:.3f}"
-    # merge commutative + idempotent
-    back = sketch.zero()
-    for st in reversed(states):
-        back = sketch.merge(back, st)
-    assert np.array_equal(back, merged)
-    assert np.array_equal(sketch.merge(merged, merged), merged)
+def test_hll_accuracy_and_merge(spark, n_distinct):
+    """Each key three times, over 7 parts: the estimate is within 5 %,
+    and the union of the 7 part sketches is the sketch of the whole —
+    in either order, and idempotent."""
+    df = spark.range(0, 3 * n_distinct, numPartitions=4).select(
+        ((F.col("id") % n_distinct) * 7919).alias("key"), (F.col("id") % 7).alias("part")
+    )
+    est = hll_distinct(df, "key", p=14)
+    assert abs(est - n_distinct) / n_distinct < 0.05, f"HLL rel err {est}"
+    parts = df.groupBy("part").agg(F.hll_sketch_agg("key", 14).alias("s"))
+    union = parts.agg(F.hll_sketch_estimate(F.hll_union_agg("s")).alias("u")).first()["u"]
+    assert union == est
+    first, second = (
+        parts.where(F.col("part") < 3).agg(F.hll_union_agg("s").alias("s")),
+        parts.where(F.col("part") >= 3).agg(F.hll_union_agg("s").alias("s")),
+    )
+    pair = first.crossJoin(second.withColumnRenamed("s", "t"))
+    row = pair.select(
+        F.hll_sketch_estimate(F.hll_union("s", "t")).alias("st"),
+        F.hll_sketch_estimate(F.hll_union("t", "s")).alias("ts"),
+        F.hll_sketch_estimate(F.hll_union(F.hll_union("s", "t"), F.hll_union("s", "t"))).alias("twice"),
+    ).first()
+    assert row["st"] == row["ts"] == row["twice"] == est
 
 
-def test_cms_bounds():
+def _cms_sketch(frame, col, eps, delta):
+    """The Count-Min sketch ``cms_estimates`` builds, as a JVM object."""
+    from mgspark.sketches import _CMS_SEED
+
+    blob = frame.agg(
+        F.count_min_sketch(col, F.lit(eps), F.lit(1.0 - delta), F.lit(_CMS_SEED))
+    ).first()[0]
+    return frame.sparkSession._jvm.org.apache.spark.util.sketch.CountMinSketch.readFrom(blob)
+
+
+def test_cms_bounds(spark):
     rng = np.random.default_rng(7)
     data = (rng.zipf(1.3, size=100_000) % 1000).astype(np.int64)
-    sketch = CountMinSketch(eps=1e-3, delta=1e-3)
-    merged, _ = _split_build(sketch, data)
+    df = spark.createDataFrame(pd.DataFrame({"k": data})).repartition(7)
     uniq, counts = np.unique(data, return_counts=True)
-    est = sketch.estimate(merged, uniq)
+    ests = cms_estimates(df, "k", uniq.tolist(), eps=1e-3, delta=1e-3)
+    est = np.array([ests[key] for key in uniq.tolist()])
     assert (est >= counts).all(), "CMS must never underestimate"
     overshoot = (est - counts).max()
-    assert overshoot <= sketch.eps * len(data) * 10, f"overshoot {overshoot}"
+    assert overshoot <= 1e-3 * len(data) * 10, f"overshoot {overshoot}"
 
 
-def test_cms_merge_commutative():
+def test_cms_merge_commutative(spark):
     rng = np.random.default_rng(1)
-    sketch = CountMinSketch(eps=1e-3, delta=1e-2)
-    a = sketch.build(sketch.zero(), _series(rng.integers(0, 100, 1000)))
-    b = sketch.build(sketch.zero(), _series(rng.integers(0, 100, 1000)))
-    assert np.array_equal(sketch.merge(a, b), sketch.merge(b, a))
+    a, b = (
+        spark.createDataFrame(pd.DataFrame({"k": rng.integers(0, 100, 1000)}, dtype="int64"))
+        for _ in range(2)
+    )
+    ab = _cms_sketch(a, "k", 1e-3, 1e-2)
+    ab.mergeInPlace(_cms_sketch(b, "k", 1e-3, 1e-2))
+    ba = _cms_sketch(b, "k", 1e-3, 1e-2)
+    ba.mergeInPlace(_cms_sketch(a, "k", 1e-3, 1e-2))
+    assert bytes(ab.toByteArray()) == bytes(ba.toByteArray())
+    assert bytes(ab.toByteArray()) == bytes(_cms_sketch(a.union(b), "k", 1e-3, 1e-2).toByteArray())
 
 
 def test_bloom_no_false_negatives_and_fpr():
@@ -112,20 +140,23 @@ def test_tdigest_quantile_accuracy(dist):
     assert int(merged[1].sum()) == len(data)
 
 
-def test_kll_rank_accuracy_and_merge():
+def test_kll_rank_accuracy_and_merge(spark):
+    """kll_quantiles within 0.03 rank error; the merge of 7 part
+    sketches keeps every item's weight and the same rank bound."""
     rng = np.random.default_rng(5)
     data = rng.normal(size=150_000)
-    sketch = KLLSketch(k=200)
-    merged, states = _split_build(sketch, data)
-    total_weight = sum(len(b) * 2**h for h, b in enumerate(merged))
-    assert total_weight == len(data)
-    for q in [0.05, 0.25, 0.5, 0.75, 0.95]:
-        est = sketch.quantile(merged, q)
-        rank = (data <= est).mean()
-        assert abs(rank - q) < 0.03, f"q={q}: rank err {abs(rank-q):.4f}"
-    # serialization round-trip
-    rt = sketch.deserialize(sketch.serialize(merged))
-    assert all(np.array_equal(a, b) for a, b in zip(rt, merged))
+    df = spark.createDataFrame(pd.DataFrame({"x": data, "part": np.arange(len(data)) % 7}))
+    qs = [0.05, 0.25, 0.5, 0.75, 0.95]
+    parts = df.groupBy("part").agg(F.kll_sketch_agg_double("x", 200).alias("s"))
+    merged = parts.agg(F.kll_merge_agg_double("s").alias("s")).select(
+        F.kll_sketch_get_n_double("s").alias("n"),
+        F.kll_sketch_get_quantile_double("s", F.array(*[F.lit(q) for q in qs])).alias("v"),
+    ).first()
+    assert merged["n"] == len(data)
+    for est in (kll_quantiles(df, "x", qs), merged["v"]):
+        for q, e in zip(qs, est):
+            rank = (data <= e).mean()
+            assert abs(rank - q) < 0.03, f"q={q}: rank err {abs(rank-q):.4f}"
 
 
 def test_mg_sketch_serialize_roundtrip():

@@ -122,15 +122,15 @@ def test_kll_quantiles_value(tables):
 
 def test_sketch_agg_checkpoint_resume(spark, tables, tmp_path):
     from mgspark.aggregate import encode_tokens
-    from mgspark.sketches import HLLSketch
+    from mgspark.sketches import BloomFilter
     from mgspark.sketches.base import sketch_agg
 
     import numpy as np
     import os
 
-    sk = HLLSketch(p=12)
+    sk = BloomFilter(capacity=10_000)
     encoded = encode_tokens(tables["events"], "user_id", "_key")
-    ckpt = str(tmp_path / "hll_ckpt")
+    ckpt = str(tmp_path / "bloom_ckpt")
     s1 = sketch_agg(encoded, "_key", sk, checkpoint_dir=ckpt)
     assert os.path.exists(os.path.join(ckpt, "_SUCCESS"))
     # resume: empty input + existing checkpoint reproduces the state
@@ -139,37 +139,28 @@ def test_sketch_agg_checkpoint_resume(spark, tables, tmp_path):
 
 
 def test_sketch_agg_checkpoint_refuses_other_parameters(spark, tmp_path):
-    """A checkpoint built for HLL p=12 must not silently answer a p=14
-    (or other-column) query: its manifest makes the resume raise."""
-    from mgspark.sketches import HLLSketch
+    """A checkpoint built for t-digest compression 50 must not silently
+    answer a compression-100 (or other-column) query: its manifest makes
+    the resume raise."""
+    from mgspark.sketches import TDigest
     from mgspark.sketches.base import sketch_agg
 
     df = spark.range(0, 2_000, numPartitions=2)
-    ckpt = str(tmp_path / "hll_p12")
-    sketch_agg(df, "id", HLLSketch(p=12), checkpoint_dir=ckpt)
+    ckpt = str(tmp_path / "tdigest_50")
+    sketch_agg(df, "id", TDigest(compression=50), checkpoint_dir=ckpt)
     with pytest.raises(ValueError, match="params"):
-        sketch_agg(df, "id", HLLSketch(p=14), checkpoint_dir=ckpt)
+        sketch_agg(df, "id", TDigest(compression=100), checkpoint_dir=ckpt)
     with pytest.raises(ValueError, match="key_col"):
-        sketch_agg(df.withColumnRenamed("id", "v"), "v", HLLSketch(p=12), checkpoint_dir=ckpt)
+        sketch_agg(df.withColumnRenamed("id", "v"), "v", TDigest(compression=50), checkpoint_dir=ckpt)
 
 
 def _families():
-    from mgspark.sketches import (
-        BloomFilter,
-        CountMinSketch,
-        HLLSketch,
-        KLLSketch,
-        MGSketch,
-        TDigest,
-    )
+    from mgspark.sketches import BloomFilter, MGSketch, TDigest
 
     return {
         "mg": (MGSketch(k=64), "key"),
-        "hll": (HLLSketch(p=10), "id"),
-        "cms": (CountMinSketch(eps=1e-2, delta=1e-2), "id"),
         "bloom": (BloomFilter(capacity=10_000), "id"),
         "tdigest": (TDigest(compression=50), "x"),
-        "kll": (KLLSketch(k=32), "x"),
     }
 
 
@@ -193,12 +184,12 @@ def _reference_merge(sketch, rows, fanout: int, num_partitions: int):
 
 
 @pytest.mark.parametrize("fanout", [64, 2])
-@pytest.mark.parametrize("family", ["mg", "hll", "cms", "bloom", "tdigest", "kll"])
+@pytest.mark.parametrize("family", ["mg", "bloom", "tdigest"])
 def test_sketch_agg_driver_fold_matches_sequential_fold(spark, family, fanout):
     """sketch_agg's state is bit-identical to folding the collected
     stage-1 partials in partition-id order (at fanout=2 over 6
     partitions, after the same two bucketed rounds the distributed
-    merge runs) — including the order-sensitive t-digest, KLL and MG
+    merge runs) — including the order-sensitive t-digest and MG
     (whose (k+1)-th-largest offset depends on the fold order)."""
     from mgspark.sketches.base import sketch_agg, sketch_partials
 
@@ -216,14 +207,14 @@ def test_sketch_agg_driver_fold_matches_sequential_fold(spark, family, fanout):
 def test_sketch_agg_within_fanout_runs_one_job(spark):
     """<= fanout input partitions: the build's collect is the only Spark
     job — no merge-round shuffle, no second Python-worker wave."""
-    from mgspark.sketches import HLLSketch
+    from mgspark.sketches import BloomFilter
     from mgspark.sketches.base import sketch_agg
 
     sc = spark.sparkContext
     group = "test-sketch-agg-one-job"
     sc.setJobGroup(group, "sketch_agg within fanout")
     try:
-        sketch_agg(spark.range(0, 4_000, numPartitions=4), "id", HLLSketch(p=10))
+        sketch_agg(spark.range(0, 4_000, numPartitions=4), "id", BloomFilter(capacity=10_000))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
@@ -231,11 +222,12 @@ def test_sketch_agg_within_fanout_runs_one_job(spark):
 
 def test_hll_distinct_grouped_accuracy_and_nulls(spark):
     """Per-group HLL estimates within the published error bound (~1.04/
-    sqrt(2^p), p=14 -> ~0.8%); a null group forms its own group like
-    SQL GROUP BY; groups never bleed into each other."""
+    sqrt(2^p), p=14 -> ~0.8%) at any partitioning; a null group forms
+    its own group like SQL GROUP BY; groups never bleed into each
+    other."""
     from pyspark.sql import functions as F
 
-    from mgspark.sketches.hll import hll_distinct_grouped
+    from mgspark.sketches import hll_distinct_grouped
 
     df = (
         spark.range(0, 60_000)
@@ -254,24 +246,15 @@ def test_hll_distinct_grouped_accuracy_and_nulls(spark):
         r["grp"]: r["c"]
         for r in df.groupBy("grp").agg(F.count_distinct("v").alias("c")).collect()
     }
-    results = {}
-    for mode in ("mapside", "shuffle"):
+    for partitions in (1, 3, 7):
+        split = df.repartition(partitions)
         est = {
             r["grp"]: r["n_distinct_est"]
-            for r in hll_distinct_grouped(df, "grp", "v", p=14, mode=mode).collect()
+            for r in hll_distinct_grouped(split, "grp", "v", p=14).collect()
         }
-        assert set(est) == set(exact) == {"a", "b", None}, mode
+        assert set(est) == set(exact) == {"a", "b", None}, partitions
         for g, true in exact.items():
-            assert abs(est[g] - true) / true < 0.05, (mode, g, est[g], true)
-        results[mode] = est
-    # HLL register merges are split-invariant: both plans must agree
-    # exactly, and so must the auto plan.
-    assert results["mapside"] == results["shuffle"]
-    auto = {
-        r["grp"]: r["n_distinct_est"]
-        for r in hll_distinct_grouped(df, "grp", "v", p=14).collect()
-    }
-    assert auto == results["mapside"]
+            assert abs(est[g] - true) / true < 0.05, (partitions, g, est[g], true)
 
 
 def test_tdigest_grouped_deterministic_and_bounded(spark):
@@ -306,20 +289,96 @@ def test_tdigest_grouped_deterministic_and_bounded(spark):
 
 
 def test_hll_grouped_numeric_group_with_nulls(spark):
-    """Numeric group columns with nulls survive both grouped plans
-    (pandas NaN keys must round-trip to SQL null longs)."""
+    """Numeric group columns with nulls keep their null group."""
     from pyspark.sql import functions as F
 
-    from mgspark.sketches.hll import hll_distinct_grouped
+    from mgspark.sketches import hll_distinct_grouped
 
     df = spark.range(0, 30_000).select(
         F.when(F.col("id") % 3 == 2, None).otherwise(F.col("id") % 3).alias("g"),
         (F.col("id") % 1000).alias("v"),
     )
-    for mode in ("mapside", "shuffle"):
-        est = {
-            r["g"]: r["n_distinct_est"]
-            for r in hll_distinct_grouped(df, "g", "v", mode=mode).collect()
-        }
-        assert set(est) == {None, 0, 1}, mode
-        assert all(abs(v - 1000) / 1000 < 0.05 for v in est.values()), (mode, est)
+    est = {r["g"]: r["n_distinct_est"] for r in hll_distinct_grouped(df, "g", "v").collect()}
+    assert set(est) == {None, 0, 1}
+    assert all(abs(v - 1000) / 1000 < 0.05 for v in est.values()), est
+
+
+def _typed_frame(spark):
+    """Values 0..4 three times, plus three nulls, in every column type
+    the input rule names."""
+    n = F.when(F.col("id") < 15, F.col("id") % 5)
+    return spark.range(0, 18, numPartitions=3).select(
+        n.cast("tinyint").alias("t"),
+        n.cast("smallint").alias("s"),
+        n.cast("int").alias("i"),
+        n.alias("l"),
+        n.cast("string").alias("str"),
+        n.cast("string").cast("binary").alias("bin"),
+        (n + 0.5).alias("d"),
+        n.cast("decimal(10,2)").alias("dec"),
+    )
+
+
+_INPUT_RULE = {
+    "t": "bigint", "s": "bigint", "i": "bigint", "l": "bigint",
+    "str": "string", "bin": "binary", "d": "string", "dec": "string",
+}
+
+
+def test_sketch_input_rule_per_column_type(spark):
+    """HLL and Count-Min read integral columns as bigint, string and
+    binary unchanged, anything else as string — and every type gives
+    the exact answer on 5 distinct values, with its nulls ignored."""
+    from mgspark.sketches import _sketch_input
+
+    df = _typed_frame(spark)
+    types = dict(df.dtypes)
+    got = dict(df.select(*[_sketch_input(F.col(c), types[c]).alias(c) for c in _INPUT_RULE]).dtypes)
+    assert got == _INPUT_RULE
+    for col in _INPUT_RULE:
+        assert hll_distinct(df, col) == 5, col
+        # binary values collect as bytearray; probe with hashable bytes
+        probe = [
+            bytes(v) if isinstance(v, bytearray) else v
+            for v in (r[col] for r in df.select(col).distinct().collect())
+        ]
+        assert len(probe) == 6 and None in probe, col
+        ests = cms_estimates(df, col, probe, eps=1e-3)
+        assert ests == {v: 0 if v is None else 3 for v in probe}, col
+
+
+def test_sketches_ignore_nulls(spark):
+    """{"0".."4", null x 3}: 5 distinct for HLL (grouped and streaming
+    inputs follow the same rule), the same Count-Min counts as without
+    the nulls, and KLL quantiles over the non-null values."""
+    from mgspark.sketches import hll_distinct_grouped
+
+    df = spark.range(8).select(F.when(F.col("id") < 5, F.col("id").cast("string")).alias("v"))
+    assert hll_distinct(df, "v") == 5
+    assert hll_distinct_grouped(df.withColumn("g", F.lit(1)), "g", "v").first()["n_distinct_est"] == 5
+    probe = ["0", "4", "9"]
+    assert cms_estimates(df, "v", probe) == cms_estimates(df.dropna(), "v", probe) == {
+        "0": 1, "4": 1, "9": 0
+    }
+    nums = spark.range(8).select(F.when(F.col("id") < 5, F.col("id") + 1.0).alias("x"))
+    assert kll_quantiles(nums, "x", [0.0, 1.0]).tolist() == [1.0, 5.0]
+    assert np.isnan(kll_quantiles(nums.limit(0), "x", [0.5])).all()
+
+
+def test_sketch_parameters_validated_on_driver(spark):
+    """Out-of-range HLL p and Count-Min eps/delta raise ValueError
+    before any Spark job."""
+    from mgspark.sketches import hll_distinct_grouped
+    from mgspark.streaming import streaming_hll_distinct
+
+    df = spark.range(10)
+    for p in (3, 19):
+        with pytest.raises(ValueError, match="p must be"):
+            hll_distinct(df, "id", p=p)
+        with pytest.raises(ValueError, match="p must be"):
+            hll_distinct_grouped(df, "id", "id", p=p)
+        with pytest.raises(ValueError, match="p must be"):
+            streaming_hll_distinct(df, "id", p=p)
+    for eps, delta in ((0.0, 0.01), (-1.0, 0.01), (0.01, 0.0), (0.01, 1.0)):
+        with pytest.raises(ValueError, match="eps|delta"):
+            cms_estimates(df, "id", [1], eps=eps, delta=delta)

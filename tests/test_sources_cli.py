@@ -1,5 +1,5 @@
-"""Sources/sinks for the reference file formats + CLI regression tests
-(drop-in parity pinned against the reference binary)."""
+"""Source dispatch (``load_table``) + CLI regression tests (drop-in
+parity pinned against the reference binary)."""
 
 import json
 import subprocess
@@ -7,17 +7,6 @@ import sys
 
 import pytest
 from pyspark.sql import functions as F
-
-from mgspark.aggregate import mg_sketch
-from mgspark.kernel import MGState, mg_reference
-from mgspark.sketches.base import merge_partials
-from mgspark.sketches.mg import MGSketch
-from mgspark.sources import (
-    read_checkpoint,
-    read_sketch_jsons,
-    read_stream_file,
-    write_sketch_json,
-)
 
 REPO = "/root/repo"
 
@@ -28,41 +17,6 @@ def stream_file(tmp_path):
     p = tmp_path / "stream.txt"
     p.write_text("\n".join(str(x) for x in data) + "\n")
     return str(p), data
-
-
-def test_read_stream_file_distributed_build(spark, stream_file):
-    path, data = stream_file
-    df = read_stream_file(spark, path)
-    state = mg_sketch(df, "key", 3)
-    # distributed build counts only valid elements
-    assert state.n == len([x for x in data if x >= 0])
-    # bound vs exact counts
-    exact = {}
-    for x in data:
-        if x >= 0:
-            exact[x] = exact.get(x, 0) + 1
-    cap = state.n // 4
-    for key, est in state.to_dict().items():
-        assert exact.get(key, 0) - cap <= est <= exact.get(key, 0)
-
-
-def test_sketch_json_roundtrip_and_merge(spark, tmp_path):
-    a = {1: 10, 2: 20}
-    b = {3: 30, 4: 40}
-    pa_, pb = str(tmp_path / "a.json"), str(tmp_path / "b.json")
-    write_sketch_json(a, pa_)
-    write_sketch_json(b, pb)
-    partials = read_sketch_jsons(spark, [pa_, pb], k=3)
-    assert [r["partition_id"] for r in partials.collect()] == [0, 1]
-    merged, _ = merge_partials(partials, 2, MGSketch(3))
-    got = merged.to_dict()
-    # golden merge vector (evaluate.py:189-203)
-    assert got == {2: 10, 3: 20, 4: 30}
-
-
-def test_read_checkpoint_requires_success_marker(spark, tmp_path):
-    with pytest.raises(FileNotFoundError):
-        read_checkpoint(spark, str(tmp_path / "nope"))
 
 
 def _run_cli(args, cwd):
@@ -93,9 +47,8 @@ def test_cli_sketch_mode_parity(stream_file, tmp_path):
 
 
 def test_cli_merge_mode_parity(tmp_path):
-    write_sketch_json({1: 1, 2: 2}, str(tmp_path / "s1.json"))
-    write_sketch_json({3: 3, 4: 4, 5: 5}, str(tmp_path / "s2.json"))
-    write_sketch_json({6: 6}, str(tmp_path / "s3.json"))
+    for i, sketch in enumerate(({"1": 1, "2": 2}, {"3": 3, "4": 4, "5": 5}, {"6": 6}), 1):
+        (tmp_path / f"s{i}.json").write_text(json.dumps(sketch))
     files = [str(tmp_path / f"s{i}.json") for i in (1, 2, 3)]
     ours = _run_cli(["merge", "3", "5.0", "0.001", *files], str(tmp_path))
     theirs = _run_reference(["merge", "3", "5.0", "0.001", *files], str(tmp_path))

@@ -434,9 +434,10 @@ def test_mg_topk_combiner_resume_from_tokenless_checkpoint(spark, docs, tmp_path
 
 def test_mg_topk_grouped_decodes_exact_counts(spark):
     """With <= k tokens per group, mg_topk_grouped equals an exact
-    groupBy count; a null token decodes to its stringified hash key, a
-    null group is its own group, and the map-side and shuffle plans of
-    sketch_agg_grouped over MG's columns build equal states."""
+    groupBy count of the non-null tokens (a null token is skipped, not
+    reported as a key), a null group is its own group, and the map-side
+    and shuffle plans of sketch_agg_grouped over MG's columns build
+    equal states."""
     from mgspark.aggregate import _mg_columns
     from mgspark.sketches.base import sketch_agg_grouped
 
@@ -445,17 +446,16 @@ def test_mg_topk_grouped_decodes_exact_counts(spark):
         + [(None, "z")] * 6 + [(None, "x")]
     )
     df = spark.createDataFrame(rows, "g string, tok string").repartition(3)
-    null_key = encode_tokens(spark.createDataFrame([(None,)], "tok string"), "tok").first()["key"]
     exact = {
-        (r["g"], str(null_key) if r["tok"] is None else r["tok"]): r["count"]
-        for r in df.groupBy("g", "tok").count().collect()
+        (r["g"], r["tok"]): r["count"]
+        for r in df.where(F.col("tok").isNotNull()).groupBy("g", "tok").count().collect()
     }
     got = {
         (r["g"], r["token"]): r["est"]
         for r in mg_topk_grouped(df, "g", "tok", k=4).collect()
     }
     assert got == exact
-    assert got[("b", str(null_key))] == 4 and got[(None, "z")] == 6
+    assert got[("b", "x")] == 2 and got[(None, "z")] == 6
 
     counts = encode_tokens(df, "tok").groupBy("g", "key").agg(
         F.count("*").alias("_w"), F.min("tok").alias("_tok")
@@ -474,3 +474,42 @@ def test_mg_topk_grouped_decodes_exact_counts(spark):
     mapside = states("mapside")
     assert set(mapside) == {"a", "b", None}
     assert mapside == states("shuffle")
+
+
+@pytest.mark.parametrize("dtype", ["string", "bigint"])
+def test_mg_paths_skip_null_tokens(spark, dtype):
+    """One null rule: encode_tokens maps a null of any type to -1, the
+    kernel's invalid key, so 3 x "1", 2 x "2" and 5 nulls give exact
+    counts 3 and 2 on every MG path — never a null or hash-key heavy
+    hitter, and nulls never count toward n."""
+    from mgspark.aggregate import mg_sketch_with_tokens
+
+    rows = [("1",)] * 3 + [("2",)] * 2 + [(None,)] * 5
+    df = spark.createDataFrame(rows, "tok string").select(F.col("tok").cast(dtype).alias("tok"))
+    assert sorted(r["key"] for r in encode_tokens(df, "tok").collect()).count(-1) == 5
+    expected = {"1": 3, "2": 2}
+    for pre_aggregate in (True, False):
+        got = {r["token"]: r["est"] for r in mg_topk(df, "tok", 4, pre_aggregate=pre_aggregate).collect()}
+        assert got == expected, pre_aggregate
+        state, tokens = mg_sketch_with_tokens(
+            encode_tokens(df, "tok"), "key", 4, "tok", pre_aggregate=pre_aggregate
+        )
+        assert state.n == 5 and sorted(state.counters.tolist()) == [2, 3], pre_aggregate
+        assert sorted(tokens.values()) == ["1", "2"], pre_aggregate
+    grouped = df.withColumn("g", F.lit("a"))
+    assert {(g, tok): est for g, tok, est in _grouped_rows(grouped, 4, "g", "tok")} == {
+        ("a", "1"): 3, ("a", "2"): 2
+    }
+
+
+def test_bloom_null_is_never_a_member(spark):
+    """bloom_build skips invalid (null) keys and bloom_probe flags a null
+    as a non-member, whatever bits the filter has set."""
+    from mgspark.sketches import BloomFilter, bloom_build, bloom_probe
+
+    df = spark.createDataFrame([("a",), ("b",), (None,)], "v string")
+    sketch, state = bloom_build(df, "v", capacity=100)
+    flags = {r["v"]: r["in_bloom"] for r in bloom_probe(df, "v", sketch, state).collect()}
+    assert flags == {"a": True, "b": True, None: False}
+    full = np.full_like(state, 0xFF)  # every bit set: anything valid is "in"
+    assert BloomFilter(capacity=100).contains(full, np.array([-1, 0, 7])).tolist() == [False, True, True]

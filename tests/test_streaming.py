@@ -276,15 +276,15 @@ def test_mg_streaming_sketch_resumes_from_checkpoint(spark, tmp_path):
 
 
 def test_streaming_hll_distinct_matches_batch(spark, tmp_path):
-    """The streaming HLL (sharded applyInPandasWithState) must merge to
-    the BIT-IDENTICAL estimate of the batch hll_distinct over the same
-    rows (both are hash-deterministic), across multiple micro-batch
-    files, and land within the 2.5% bound of the exact distinct."""
+    """The streaming HLL aggregate must reach the IDENTICAL estimate of
+    the batch hll_distinct over the same files (both are
+    hash-deterministic and merge one partial sketch per file), across
+    multiple micro-batch files, and land within the 2.5% bound of the
+    exact distinct."""
     import numpy as np
     import pandas as pd
 
     from mgspark.sketches import hll_distinct
-    from mgspark.sketches.hll import HLLSketch
     from mgspark.streaming import streaming_hll_distinct
 
     src = tmp_path / "src"
@@ -298,7 +298,7 @@ def test_streaming_hll_distinct_matches_batch(spark, tmp_path):
     stream = spark.readStream.schema("uid long").option(
         "maxFilesPerTrigger", 1
     ).parquet(str(src))
-    out = streaming_hll_distinct(stream, "uid", p=12, num_shards=4)
+    out = streaming_hll_distinct(stream, "uid", p=12)
     query = (
         out.writeStream.format("memory")
         .queryName("hll_stream_t")
@@ -310,22 +310,19 @@ def test_streaming_hll_distinct_matches_batch(spark, tmp_path):
     query.awaitTermination(120)
 
     rows = spark.sql("SELECT * FROM hll_stream_t ORDER BY n_rows").collect()
-    assert rows
-    latest = {}
-    for r in rows:
-        if r["shard"] not in latest or r["n_rows"] > latest[r["shard"]]["n_rows"]:
-            latest[r["shard"]] = r
-    assert sum(r["n_rows"] for r in latest.values()) == len(all_keys)
-    sk = HLLSketch(12)
-    merged = sk.zero()
-    for r in latest.values():
-        merged = sk.merge(merged, sk.deserialize(bytes(r["registers"])))
-    est = float(sk.estimate(merged))
-    batch_df = spark.createDataFrame([(int(x),) for x in all_keys], "uid long")
-    batch_est = float(hll_distinct(batch_df, "uid", p=12))
+    assert len(rows) == 3  # one update per micro-batch file
+    latest = rows[-1]
+    assert latest["n_rows"] == len(all_keys)
+    est = float(latest["n_distinct_est"])
+    batch_est = float(hll_distinct(spark.read.parquet(str(src)), "uid", p=12))
     true = len(set(all_keys.tolist()))
     assert est == batch_est, (est, batch_est)
     assert abs(est - true) <= 0.025 * true, (est, true)
+    # the emitted sketch is Spark's mergeable HLL: it estimates the same
+    merged = spark.createDataFrame([(latest["sketch"],)], "s binary").select(
+        F.hll_sketch_estimate("s")
+    ).first()[0]
+    assert merged == latest["n_distinct_est"]
 
 
 def test_streaming_dedup_incremental_vs_static_corpus(spark, tmp_path):
