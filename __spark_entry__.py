@@ -18,6 +18,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mgspark.session import local_frame
+
 
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
@@ -116,9 +118,7 @@ def q_hll_vs_exact_user_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = float(hll_distinct(events, "user_id"))
     true = events.select("user_id").distinct().count()
     ok = 1 if abs(est - true) <= 0.025 * true else 0
-    return spark.createDataFrame(
-        [(int(true), ok)], "true_distinct long, within_bound long"
-    )
+    return local_frame(spark, [(int(true), ok)], "true_distinct long, within_bound long")
 
 
 def q_quantile_rank_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -142,7 +142,7 @@ def q_quantile_rank_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     for q, est in zip(qs, kll):
         rank = events.where(F.col("value") <= float(est)).count() / n_ev
         rows.append(("kll", q, int(abs(rank - q) <= 0.05)))
-    out = spark.createDataFrame(rows, "sketch string, q double, within_bound long")
+    out = local_frame(spark, rows, "sketch string, q double, within_bound long")
     return out.withColumn(
         "n_rows",
         F.when(F.col("sketch") == "tdigest", F.lit(n_li)).otherwise(F.lit(n_ev)).cast("long"),
@@ -177,7 +177,7 @@ def q_ann_recall_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()
     }
     rows = [("lsh", int(lsh == exact)), ("ivf", int(ivf == exact))]
-    return spark.createDataFrame(rows, "method string, matches_exact long")
+    return local_frame(spark, rows, "method string, matches_exact long")
 
 
 def q_mg_grouped_lang_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,7 +210,7 @@ def q_mg_private_topk_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     released = dp.privatize_merged(state.to_dict(), 10, epsilon=2.0, delta=1e-6)
     rows = [(mapping.get(key, str(key)), int(cnt)) for key, cnt in released.items()]
-    return spark.createDataFrame(rows, "token string, est long")
+    return local_frame(spark, rows, "token string, est long")
 
 
 # ---------------------------------------------------------------------------
@@ -775,9 +775,7 @@ def q_dsir_resample_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         sum(r["_c"] is None for r in first),
         len({r["id"] for r in first} ^ rerun),
     )
-    return spark.createDataFrame(
-        [row], "n_selected long, n_outside long, n_rerun_mismatch long"
-    )
+    return local_frame(spark, [row], "n_selected long, n_outside long, n_rerun_mismatch long")
 
 
 def _bench_set(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1189,7 +1187,8 @@ def q_embedding_near_dup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFra
             emb, "embedding", "vec_id", threshold=0.99, method="exact"
         ).collect()
     }
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(len(exact), int(lsh <= exact), int(lsh == exact))],
         "n_exact long, lsh_subset_exact long, lsh_recall_complete long",
     )
@@ -1328,7 +1327,8 @@ def q_streaming_hll_distinct_user_id(spark: SparkSession, sf_dir: str) -> DataFr
     events = _read(spark, sf_dir, "events")
     batch_est = float(hll_distinct(events, "user_id"))
     true = events.select("user_id").distinct().count()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(true),
@@ -1399,7 +1399,7 @@ def q_streaming_mg_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         (mapping.get(int(key), str(int(key))), int(cnt))
         for key, cnt in zip(merged.keys, merged.counters)
     ]
-    return spark.createDataFrame(out_rows, "token string, est long")
+    return local_frame(spark, out_rows, "token string, est long")
 
 
 # ---------------------------------------------------------------------------
@@ -1641,7 +1641,8 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     merges = bpe_train(docs, "text", n_merges=_BPE_MERGES, max_vocab_words=_BPE_TOP_WORDS)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank long, left string, right string",
     )
@@ -1818,7 +1819,7 @@ def q_hll_distinct_user_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mgspark.sketches import hll_distinct
 
     est = hll_distinct(_read(spark, sf_dir, "events"), "user_id")
-    return spark.createDataFrame([(float(est),)], "estimate double")
+    return local_frame(spark, [(float(est),)], "estimate double")
 
 
 def q_tdigest_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1826,9 +1827,7 @@ def q_tdigest_price_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qs = [0.1, 0.5, 0.9]
     est = tdigest_quantiles(_read(spark, sf_dir, "lineitem"), "l_extendedprice", qs)
-    return spark.createDataFrame(
-        [(q, float(e)) for q, e in zip(qs, est)], "q double, value double"
-    )
+    return local_frame(spark, [(q, float(e)) for q, e in zip(qs, est)], "q double, value double")
 
 
 def q_kll_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1836,9 +1835,7 @@ def q_kll_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qs = [0.25, 0.5, 0.75]
     est = kll_quantiles(_read(spark, sf_dir, "events"), "value", qs)
-    return spark.createDataFrame(
-        [(q, float(e)) for q, e in zip(qs, est)], "q double, value double"
-    )
+    return local_frame(spark, [(q, float(e)) for q, e in zip(qs, est)], "q double, value double")
 
 
 def q_cms_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1847,8 +1844,8 @@ def q_cms_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _read(spark, sf_dir, "lineitem")
     flags = sorted(r["l_returnflag"] for r in li.select("l_returnflag").distinct().collect())
     ests = cms_estimates(li, "l_returnflag", flags, eps=1e-3)
-    return spark.createDataFrame(
-        [(flag, int(est)) for flag, est in ests.items()], "token string, est long"
+    return local_frame(
+        spark, [(flag, int(est)) for flag, est in ests.items()], "token string, est long"
     )
 
 
@@ -1864,7 +1861,7 @@ def q_mg_user_level_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         return_tokens=True,
     )
     rows = [(mapping.get(key, str(key)), int(cnt)) for key, cnt in released.items()]
-    return spark.createDataFrame(rows, "token string, est long")
+    return local_frame(spark, rows, "token string, est long")
 
 
 def q_mg_pure_dp_doc_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1884,7 +1881,7 @@ def q_mg_pure_dp_doc_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.to_dict(), 3, epsilon=5.0, universe_size=max(dict_size, 3) + 1
     )
     rows = [(inverse.get(key, f"u{key}"), int(cnt)) for key, cnt in released.items()]
-    return spark.createDataFrame(rows, "token string, est long")
+    return local_frame(spark, rows, "token string, est long")
 
 
 def q_mg_topk_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1907,7 +1904,7 @@ def q_mg_topk_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         (mapping.get(int(key), str(int(key))), int(cnt))
         for key, cnt in zip(state.keys, state.counters)
     ]
-    return spark.createDataFrame(rows, "token string, est long")
+    return local_frame(spark, rows, "token string, est long")
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -2132,9 +2129,7 @@ def q_tdigest_grouped_price_by_flag(spark: SparkSession, sf_dir: str) -> DataFra
             counts.items(), key=lambda kv: (kv[0] is None, kv[0])
         )
     ]
-    return spark.createDataFrame(
-        rows, "l_returnflag string, n_rows long, median_rank_ok long"
-    )
+    return local_frame(spark, rows, "l_returnflag string, n_rows long, median_rank_ok long")
 
 
 def q_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:

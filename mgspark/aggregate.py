@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from mgspark.kernel import MGState
+from mgspark.session import local_frame
 from mgspark.sketches.base import (
     checkpoint_manifest,
     checkpoint_ready,
@@ -142,9 +143,7 @@ def dictionary_encode(
     dict_schema = StructType(
         [StructField(col, df.schema[col].dataType, True), StructField(tmp_key, LongType(), False)]
     )
-    dict_df = spark.createDataFrame(
-        [(value, i) for i, value in enumerate(values)], dict_schema
-    )
+    dict_df = local_frame(spark, [(value, i) for i, value in enumerate(values)], dict_schema)
     encoded = _claim_key_col(df.join(F.broadcast(dict_df), col, "inner"), tmp_key)
     return encoded, {i: value for i, value in enumerate(values)}, len(values)
 
@@ -218,9 +217,7 @@ def dictionary_encode_distributed(
         empty_dict = distinct.withColumn(tmp_key, F.lit(0).cast("long")).limit(0)
         encoded = _claim_key_col(df.join(empty_dict, col, "inner"), tmp_key)
         return encoded, _dict_public(empty_dict, col, tmp_key), 0
-    off_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _off long"
-    )
+    off_df = local_frame(spark, offsets.items(), "_pid int, _off long")
     dict_int = (
         ranked.join(F.broadcast(off_df), "_pid")
         .select(col, (F.col("_off") + F.col("_lid")).cast("long").alias(tmp_key))
@@ -531,7 +528,11 @@ def mg_topk(
     Returns a DataFrame ``(token string, est long)`` sorted by estimate
     descending, token ascending.  When the column's true cardinality is
     <= k the estimates are exact (no decrement can fire), which is what
-    the DuckDB oracle checks at small scale.
+    the DuckDB oracle checks at small scale.  The <= k result rows are
+    already on the driver, so the frame is a one-partition
+    ``LocalTableScan`` under the ``Sort``
+    (:func:`mgspark.session.local_frame`): actions on it run no Python
+    worker and no exchange, and never re-run the sketch.
 
     Plan selection (``pre_aggregate``):
 
@@ -578,5 +579,7 @@ def mg_topk(
         (mapping.get(int(key), str(int(key))), int(cnt))
         for key, cnt in zip(state.keys, state.counters)
     ]
-    out = spark.createDataFrame(rows, schema="token string, est long")
+    # One partition: sorting <= k rows then needs no range-partition
+    # exchange (a sampling job plus a shuffle) on every action.
+    out = local_frame(spark, rows, "token string, est long").coalesce(1)
     return out.orderBy(F.desc("est"), F.asc("token"))

@@ -6,7 +6,8 @@ noise machinery of the reference (``/root/reference/pmg.py``):
 * two samplers — geometric / two-sided geometric (pmg.py:363-394), here
   drawing whole arrays through a ``numpy.random.Generator``;
 * :func:`find_threshold` — the numerical binary-search threshold
-  (pmg.py:397-478), a scalar driver-side computation;
+  (pmg.py:397-478), a driver-side computation whose global-noise sum is
+  evaluated in numpy chunks;
 * element-level approx-DP release (pmg.py:101-140), element-level pure-DP
   release (pmg.py:143-204), their merged-sketch variants with sensitivity
   ``k`` (pmg.py:249-298), and the user-level variants with scaled privacy
@@ -78,19 +79,27 @@ def two_sided_geometric(
     return geometric(rng, epsilon, sensitivity, size) - geometric(rng, epsilon, sensitivity, size)
 
 
-def _tsg_pmf(j: int, epsilon: float, sensitivity: float) -> float:
-    """P(X = j) for the two-sided geometric distribution (pmg.py:419-424)."""
-    alpha = math.exp(-epsilon / sensitivity)
-    return (1 - alpha) / (1 + alpha) * alpha ** abs(j)
+def _tsg_pmf(j: np.ndarray, alpha: float) -> np.ndarray:
+    """P(X = j) for the two-sided geometric distribution with
+    ``alpha = exp(-eps/sens)`` (pmg.py:419-424)."""
+    return (1 - alpha) / (1 + alpha) * np.power(alpha, np.abs(j))
 
 
-def _tsg_sf(j: int, epsilon: float, sensitivity: float) -> float:
-    """P(X >= j) for the two-sided geometric distribution (pmg.py:426-432)."""
-    alpha = math.exp(-epsilon / sensitivity)
-    if j <= 0:
-        # P(X >= j) = 1 - P(X >= -j+1) by symmetry.
-        return 1.0 - alpha ** (1 - j) / (1 + alpha)
-    return alpha**j / (1 + alpha)
+def _tsg_sf(j: np.ndarray, alpha: float) -> np.ndarray:
+    """P(X >= j) for the two-sided geometric distribution (pmg.py:426-432).
+
+    Each branch is evaluated on its own entries only: ``alpha ** (1 - j)``
+    overflows for large positive ``j``."""
+    sf = np.empty(j.shape)
+    low = j <= 0
+    # P(X >= j) = 1 - P(X >= -j+1) by symmetry.
+    sf[low] = 1.0 - np.power(alpha, 1 - j[low]) / (1 + alpha)
+    sf[~low] = np.power(alpha, j[~low]) / (1 + alpha)
+    return sf
+
+
+# Global-noise values evaluated per numpy step of the threshold search.
+_THRESHOLD_CHUNK = 2048
 
 
 def find_threshold(
@@ -110,28 +119,40 @@ def find_threshold(
     where ``g`` ranges over global-noise values.  The smallest ``t`` with
     ``P(bad) <= delta/2`` is located by doubling then binary search; +1 is
     added at the end to absorb the unique keys' true count of at most 1.
+
+    The sum runs over numpy chunks of ``g`` but adds its terms strictly
+    in the scalar order (``np.cumsum`` seeded with the running total, not
+    ``np.sum``'s pairwise tree), so every threshold equals the scalar
+    loop's.
     """
 
     goal = delta / 2
     tolerance = delta / 1e9
+    alpha = math.exp(-epsilon / sensitivity)
+    steps = np.arange(_THRESHOLD_CHUNK, dtype=np.int64)
 
     def exceeds_goal(threshold: int) -> bool:
         """True if P(bad at `threshold`) > goal (with early exit)."""
         total = 0.0
         # Enumerate global noise g = 0, 1, 2, ... then g = -1, -2, ...;
-        # each branch stops once its terms fall below the tolerance.
+        # each branch stops after its first term at or below the
+        # tolerance, that term included.
         for start, step in ((0, 1), (-1, -1)):
-            g = start
             while True:
-                term = _tsg_pmf(g, epsilon, sensitivity) * (
-                    1 - (1 - _tsg_sf(threshold - g, epsilon, sensitivity)) ** max_unique_keys
+                g = start + step * steps
+                terms = _tsg_pmf(g, alpha) * (
+                    1 - np.power(1 - _tsg_sf(threshold - g, alpha), max_unique_keys)
                 )
-                total += term
-                if total > goal:
+                small = np.flatnonzero(terms <= tolerance)
+                if small.size:
+                    terms = terms[: small[0] + 1]
+                running = np.cumsum(np.concatenate(([total], terms)))
+                if (running > goal).any():
                     return True
-                if term <= tolerance:
+                total = float(running[-1])
+                if small.size:
                     break
-                g += step
+                start += step * _THRESHOLD_CHUNK
         return False
 
     # Exponential search for an upper bound.

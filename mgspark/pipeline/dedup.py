@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mgspark.session import local_frame
 from mgspark.sketches.base import splitmix64
 
 __all__ = [
@@ -436,7 +437,7 @@ def lsh_candidate_pairs(
     if sig_len is None:
         sig_len_row = sig_df.select(F.size("sig").alias("s")).first()
         if sig_len_row is None:
-            return sig_df.sparkSession.createDataFrame([], pair_schema)
+            return local_frame(sig_df.sparkSession, [], pair_schema)
         sig_len = sig_len_row["s"]
     rows_per_band = max(1, sig_len // num_bands)
 

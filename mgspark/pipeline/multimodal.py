@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mgspark.session import local_frame
+
 __all__ = [
     "synth_assets",
     "write_assets_parquet",
@@ -79,8 +81,9 @@ def _gen_asset_rows(n: int, seed: int) -> list[tuple[int, str, bytes]]:
 
 def synth_assets(spark: SparkSession, n: int = 256, seed: int = 42) -> DataFrame:
     """MGB1 asset table as a Spark DataFrame (see :func:`_gen_asset_rows`)."""
-    rows = [(i, kind, bytearray(blob)) for i, kind, blob in _gen_asset_rows(n, seed)]
-    return spark.createDataFrame(rows, "asset_id long, kind string, payload binary")
+    return local_frame(
+        spark, _gen_asset_rows(n, seed), "asset_id long, kind string, payload binary"
+    )
 
 
 def write_assets_parquet(path: str, n: int = 256, seed: int = 42) -> str:

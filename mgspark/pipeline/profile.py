@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mgspark.session import local_frame
+
 __all__ = ["profile_table", "corpus_delta"]
 
 
@@ -67,7 +69,6 @@ def profile_table(
             F.max(F.col(col)).cast("string").alias(f"_max_{i}"),
         ]
     row = df.agg(*aggs).first()
-    spark = df.sparkSession
     # SUM over zero rows is null, so `or 0` keeps the empty-table profile
     # (the case a data-quality pass most wants to report) from crashing.
     out = [
@@ -81,7 +82,8 @@ def profile_table(
         )
         for i, col in enumerate(columns)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         out,
         "column string, n_rows long, n_nulls long, n_distinct long, "
         "min_str string, max_str string",

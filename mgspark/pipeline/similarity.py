@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
+from mgspark.session import local_frame
+
 __all__ = [
     "cosine_topk",
     "lsh_bucket_embeddings",
@@ -653,7 +655,7 @@ def semantic_dedup_pairs(
     spark = df.sparkSession
     pair_schema = "id_a bigint, id_b bigint, cosine double"
     if centroids.size == 0:
-        return spark.createDataFrame([], pair_schema)
+        return local_frame(spark, [], pair_schema)
     assigned = ivf_assign(df, vec_col, id_col, centroids)  # (id, centroid)
     ok = (
         assigned.groupBy("centroid")

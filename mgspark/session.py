@@ -1,16 +1,29 @@
-"""SparkSession factory with the configuration the engine assumes.
+"""SparkSession factory with the configuration the engine assumes, and
+the one way the engine turns driver-side rows into a DataFrame.
 
 Local mode mirrors a multi-executor cluster via partitioning: the same
 job is benchmarked at two parallelism levels (local[8] vs local[32]) as
 the sandbox stand-in for the N vs 4N executor scaling requirement
 (BASELINE.md).
+
+One rule for driver-built frames: rows that already sit on the driver (a
+top-k result, a broadcast dictionary, a one-row invariant report) go
+through :func:`local_frame`, never ``spark.createDataFrame(list)``.  A
+Python list becomes a pickled Python RDD, so every later action on the
+frame runs Python-worker tasks over ``defaultParallelism`` partitions; a
+typed Arrow table is planned as a ``LocalRelation`` / ``LocalTableScan``
+and no action on it starts a Python worker.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -41,3 +54,32 @@ def get_spark(
         for key, value in extra_conf.items():
             builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Sequence], ddl: str | StructType
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples in ``ddl`` column
+    order), planned as a ``LocalTableScan``; building it starts no job.
+
+    Each column becomes an Arrow array of the type the schema declares,
+    so a value of the wrong type raises instead of being coerced.  Two
+    holes in Arrow's own conversion are closed here: a float in an
+    integral column (Arrow truncates it) and a null in a non-nullable
+    column (Arrow keeps it).
+    """
+    schema = ddl if isinstance(ddl, StructType) else StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    if any(len(row) != len(arrow_schema) for row in rows):
+        raise ValueError(f"local_frame: every row needs {len(arrow_schema)} values")
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    arrays = []
+    for values, field in zip(columns, arrow_schema):
+        if pa.types.is_integer(field.type) and any(isinstance(v, float) for v in values):
+            raise TypeError(f"local_frame: float value in integral column {field.name!r}")
+        array = pa.array(values, type=field.type)
+        if not field.nullable and array.null_count:
+            raise ValueError(f"local_frame: null in non-nullable column {field.name!r}")
+        arrays.append(array)
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)

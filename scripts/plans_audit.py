@@ -82,6 +82,19 @@ def main() -> None:
         tree(pre),
     ))
 
+    from mgspark.aggregate import mg_topk
+
+    sections.append((
+        "mg_topk result: a LocalTableScan under the Sort",
+        "The <= k decoded rows are already on the driver when mg_topk "
+        "returns, so its frame is an Arrow local relation "
+        "(mgspark.session.local_frame): LocalTableScan below the Sort, "
+        "never Scan ExistingRDD, so no action on the result starts a "
+        "Python worker.  Coalesce 1 lets the Sort run without a "
+        "range-partition Exchange.",
+        tree(mg_topk(docs.select("lang"), "lang", 8, pre_aggregate=True)),
+    ))
+
     q = li.where(F.col("l_returnflag") == "R").select("l_returnflag", "l_quantity")
     fq = formatted(q)
     sections.append((

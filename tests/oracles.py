@@ -53,6 +53,50 @@ def find_threshold_union_bound(epsilon, delta, sensitivity=1, max_unique_keys=2)
     )
 
 
+def find_threshold_scalar(epsilon, delta, sensitivity=1, max_unique_keys=2):
+    """Numerical threshold search one global-noise term at a time
+    (pmg.py:397-478): the loop ``dp.find_threshold`` evaluates in numpy
+    chunks, kept to check that both return the same thresholds."""
+    alpha = math.exp(-epsilon / sensitivity)
+
+    def pmf(j):
+        return (1 - alpha) / (1 + alpha) * alpha ** abs(j)
+
+    def sf(j):
+        if j <= 0:
+            return 1.0 - alpha ** (1 - j) / (1 + alpha)
+        return alpha**j / (1 + alpha)
+
+    goal = delta / 2
+    tolerance = delta / 1e9
+
+    def exceeds_goal(threshold):
+        total = 0.0
+        for start, step in ((0, 1), (-1, -1)):
+            g = start
+            while True:
+                term = pmf(g) * (1 - (1 - sf(threshold - g)) ** max_unique_keys)
+                total += term
+                if total > goal:
+                    return True
+                if term <= tolerance:
+                    break
+                g += step
+        return False
+
+    low, high = 1, 1
+    while exceeds_goal(high):
+        low = high + 1
+        high *= 2
+    while low < high:
+        mid = (low + high) // 2
+        if exceeds_goal(mid):
+            low = mid + 1
+        else:
+            high = mid
+    return low + 1
+
+
 def kth_largest_quickselect(items, k, rng=None):
     """Randomized quickselect (op 21, pmg_alternatives.py:185-207)."""
     if rng is None:

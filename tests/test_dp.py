@@ -33,6 +33,40 @@ def test_find_threshold_parity_with_reference(reference_pmg):
         assert ours == theirs, (eps, delta, sens, m, ours, theirs)
 
 
+@pytest.mark.parametrize(
+    "eps, delta, sens, m, expected",
+    [
+        (1.0, 1e-6, 1, 2, 19),
+        (1.0, 1e-6, 100, 100, 2062),
+        (0.1, 1e-6, 1, 2, 169),
+        (0.5, 1e-3, 1, 2, 20),
+        (2.0, 1e-9, 7, 7, 90),
+        (0.25, 1e-4, 3, 5, 154),
+        (1.0, 1e-3, 1, 2, 11),
+        (4.0, 1e-8, 50, 50, 311),
+        (1.0, 1e-6, 1024, 1024, 23474),
+        (2.0, 1e-6, 10, 10, 93),
+    ],
+)
+def test_find_threshold_pinned_values(eps, delta, sens, m, expected):
+    """Thresholds recorded from the scalar search loop (one pmf * tail
+    term per global-noise value, summed in order): the chunked numpy
+    search must return exactly these, with no reference import."""
+    assert dp.find_threshold(eps, delta, sens, m) == expected
+
+
+def test_find_threshold_matches_scalar_loop():
+    """The chunked search equals the one-term-at-a-time loop over a grid
+    of budgets and small sensitivities (each scalar call stays fast)."""
+    from oracles import find_threshold_scalar
+
+    for eps in (0.05, 0.3, 1.0, 3.0, 20.0):
+        for delta in (1e-2, 1e-5, 1e-9, 1e-12):
+            for sens, m in ((1, 1), (1, 2), (3, 5), (8, 8), (2, 64)):
+                ours = dp.find_threshold(eps, delta, sens, m)
+                assert ours == find_threshold_scalar(eps, delta, sens, m), (eps, delta, sens, m)
+
+
 def test_threshold_tighter_than_union_bound():
     # evaluate.py:56-66: numerical threshold beats the closed-form union
     # bound and exceeds 1.

@@ -456,3 +456,79 @@ def test_dsir_resample_is_take_ordered(docs):
     w = dsir_log_weights(docs, docs.limit(20), n_buckets=128)
     plan = _formatted(dsir_resample(w, 10, seed=1))
     assert "TakeOrderedAndProject" in plan
+
+
+def _executed_plan(df) -> str:
+    """The physical plan ``df`` ran with, taken after one ``collect``."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize("pre_aggregate", [True, False])
+def test_mg_topk_result_is_local_table_scan(docs, pre_aggregate):
+    """mg_topk's <= k result rows sit under its Sort as a LocalTableScan,
+    never a pickled Python RDD (``Scan ExistingRDD`` / ``LogicalRDD``),
+    so actions on the result run no Python worker — also when the input
+    yields no heavy hitter at all.  The rows are one partition, so the
+    Sort needs no range-partition exchange."""
+    from mgspark.aggregate import mg_topk
+
+    for df in (docs.select("lang"), docs.select("lang").where(F.lit(False))):
+        plan = _executed_plan(mg_topk(df, "lang", 8, pre_aggregate=pre_aggregate))
+        assert "LocalTableScan" in plan, plan
+        assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
+        assert "Exchange" not in plan, plan
+
+
+def test_local_frame_round_trips_declared_schema(spark):
+    """local_frame keeps the declared schema and every value: a null in
+    a long column, a binary payload, and no rows at all."""
+    from pyspark.sql.types import StructType
+
+    from mgspark.session import local_frame
+
+    ddl = "id long, payload binary"
+    rows = [(1, b"\x00\xffMGB1"), (None, b"")]
+    df = local_frame(spark, rows, ddl)
+    assert df.schema == StructType.fromDDL(ddl)
+    assert [tuple(r) for r in df.collect()] == rows  # binary collects as bytearray
+    empty = local_frame(spark, [], "token string, est long")
+    assert empty.collect() == []
+    assert empty.dtypes == [("token", "string"), ("est", "bigint")]
+    assert "LocalTableScan" in _executed_plan(empty)
+
+
+def test_local_frame_rejects_values_arrow_would_coerce(spark):
+    """A float in an integral column, a null in a non-nullable column and
+    a short row raise; a string in a long column raises in Arrow itself."""
+    import pyarrow as pa
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from mgspark.session import local_frame
+
+    with pytest.raises(TypeError, match="float value"):
+        local_frame(spark, [("a", 1.5)], "token string, est long")
+    with pytest.raises(ValueError, match="non-nullable"):
+        local_frame(spark, [(None,)], StructType([StructField("id", LongType(), False)]))
+    with pytest.raises(ValueError, match="every row needs 2 values"):
+        local_frame(spark, [("a",)], "token string, est long")
+    with pytest.raises(pa.ArrowInvalid):
+        local_frame(spark, [("a", "3")], "token string, est long")
+
+
+def test_local_frame_starts_no_job(spark):
+    """Building a driver-side frame starts no Spark job; the same job
+    group does record one for an action over ``spark.range``, so the
+    tracker is watching."""
+    from mgspark.session import local_frame
+
+    sc = spark.sparkContext
+    group = "local-frame-no-job"
+    sc.setJobGroup(group, "local_frame plan guard")
+    try:
+        local_frame(spark, [(str(i), i) for i in range(64)], "token string, est long")
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        spark.range(8).count()
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
