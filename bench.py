@@ -53,8 +53,8 @@ def _repo_table_dir(rows: int) -> str:
 def _build_merge_job(spark, repo_dir: str, pre_aggregate: bool = False):
     """The headline job: tokenize -> per-partition build -> tree merge.
 
-    ``pre_aggregate`` turns on the exact JVM-side combiner in front of the
-    sketch (identical result; boundary crossing shrinks to distinct keys).
+    ``pre_aggregate`` runs the exact JVM-side combiner instead of the
+    ``mapInArrow`` sketch (identical result; nothing crosses to Python).
     """
     from mgspark.aggregate import encode_tokens, mg_sketch
     from mgspark.tokenize import content_tokens
@@ -603,8 +603,8 @@ def run_scaling(scale_dir: str, warm_dir: str) -> dict:
     # path is ceiling-limited by this VM's JVM->Python Arrow pipe rate
     # (~0.5M rows/s/pipe, and pipes stop multiplying beyond ~8 here), so
     # the combiner path (pre_aggregate=True; identical results) carries
-    # the headline efficiency — its boundary crossing is distinct keys
-    # only, leaving the JVM hash-agg to scale.
+    # the headline efficiency — it is one JVM query with no Python
+    # stage, leaving the JVM aggregation to scale.
     # One round per pair per invocation: best-observed points accumulate
     # across bench runs via scaling_history.json (the driver benches every
     # round), so per-run wall time stays inside the driver budget.
@@ -839,8 +839,8 @@ def write_bench_md(queries, meta, scaling) -> None:
         "throughput stops multiplying beyond ~8 concurrent pipes, so the",
         "zero-shuffle sketch path is boundary-limited, not compute-limited.",
         "The combiner path (`mg_sketch(..., pre_aggregate=True)`, identical",
-        "results, exact JVM-side partial aggregation so only distinct keys",
-        "cross the boundary) is therefore the scaling-representative",
+        "results, one JVM query with no Python stage, so nothing crosses",
+        "the boundary) is therefore the scaling-representative",
         "configuration; both are reported.",
         "",
         *(

@@ -1,14 +1,33 @@
 """Distributed Misra-Gries aggregation: the two-stage plan.
 
-PySpark exposes no Python UDAF ``merge()`` hook, so the partial/final
-split of the reference's build+merge pipeline (pmg.py:26-98, 207-246) is
-staged explicitly (SURVEY.md §4.1):
+MG has two plans, both ending in one O(k) state on the driver and a
+driver-side DP release.
+
+The combiner plan (``pre_aggregate=True``; chosen by the ``"auto"``
+probe when keys are few relative to rows) is one JVM query with no
+Python stage:
+
+    Scan parquet -> Project(tokenize/encode) -> Filter(key >= 0)
+      -> partial count [+ min token] -> Exchange(key) -> final count
+      -> CollectMetrics(sum, rows) -> TakeOrderedAndProject(k+1)
+      -> driver: prune at the (k+1)-th count t, d = t
+      -> [optional checkpoint: the state as one partial row]
+
+An exact count table pruned at its (k+1)-th largest count is itself an
+MG summary (MG's merge rule applied once to exact counts), so nothing
+crosses the JVM->Python boundary.  The grouped per-entity variant
+(``mg_topk_grouped``) applies the same prune per group with one JVM
+window.
+
+The zero-shuffle plan (``pre_aggregate=False``) is for unbounded key
+spaces.  PySpark exposes no Python UDAF ``merge()`` hook, so the
+partial/final split of the reference's build+merge pipeline
+(pmg.py:26-98, 207-246) is staged explicitly (SURVEY.md §4.1):
 
     Scan parquet -> Project(tokenize/encode) -> mapInArrow(build)    [stage 1]
       -> [optional parquet checkpoint of partials]
       -> merge_partials: merge rounds while > fanout partials,
          then a driver fold of the rest                           [stage 2]
-      -> driver-side DP release
 
 MG is one ``MergeableSketch`` family (``mgspark.sketches.mg.MGSketch``)
 and runs through the shared skeleton of ``mgspark.sketches.base``: this
@@ -20,9 +39,7 @@ Stage 2 moves only the partial rows (<= k keys each), which is bytes,
 not data; at <= fanout input partitions it is a plain collect.  Skewed
 input (one giant repo) cannot create a straggler because stage 1
 partitions by input splits (``spark.sql.files.maxPartitionBytes``), not
-by key.  The grouped per-entity variant (``mg_topk_grouped``) needs no
-Python at all: an exact ``(group, key)`` count pruned per group at its
-(k+1)-th largest count by one JVM window is itself an MG summary.
+by key.  A checkpoint of either plan resumes through ``merge_partials``.
 
 Partial rows carry lineage + metrics (partition id, row count, wall time)
 and can be persisted to a parquet checkpoint so a killed job resumes from
@@ -31,17 +48,23 @@ partials (north_star requirement).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import time
+
+import numpy as np
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from mgspark.kernel import MGState
 from mgspark.session import local_frame
 from mgspark.sketches.base import (
+    SKETCH_PARTIAL_SCHEMA,
     checkpoint_manifest,
     checkpoint_ready,
+    resume_partials,
     sketch_agg,
     sketch_partials,
+    write_checkpoint,
 )
 from mgspark.sketches.mg import MGSketch
 
@@ -278,8 +301,8 @@ def mg_partials(
     With ``token_col`` set, each partial also carries one exemplar token
     string per surviving key, so the release decodes keys without a
     second scan of the input.  Token strings then cross the Arrow
-    boundary, so prefer this on pre-aggregated (distinct-key) inputs —
-    the combiner path — where the extra bytes are O(distinct), not O(rows).
+    boundary per row; the combiner plan (:func:`_mg_exact_prune`) takes
+    its exemplars in the JVM instead and runs no partials at all.
     """
     return sketch_partials(df, _mg_columns(key_col, weight_col, token_col), MGSketch(k))
 
@@ -304,8 +327,8 @@ def _combiner_probe(df: DataFrame, key_col: str) -> bool:
     ``_PROBE_ROWS`` rows — one input split's worth), NOT the full table:
     the decision actually depends on the *per-partition* ratio, because
     the combiner's win is map-side combining (shuffle bytes ~
-    sum of per-partition distincts, and JVM shuffle is ~10x cheaper per
-    row than the Arrow pipe the zero-shuffle path feeds).  A prefix is a
+    sum of per-partition distincts, and nothing crosses the Arrow pipe
+    that the zero-shuffle path feeds with every row).  A prefix is a
     fair estimate of per-partition behavior and keeps the probe O(1) in
     table size; either mis-choice degrades speed only, never results.
     Prefer the combiner whenever distinct/rows <= 0.5.
@@ -323,6 +346,106 @@ def _combiner_probe(df: DataFrame, key_col: str) -> bool:
     return rows_n == 0 or int(probe["distinct"]) <= rows_n * 0.5
 
 
+def _mg_top_counts(
+    df: DataFrame, key_col: str, k: int, token_col: str | None, weight_col: str | None
+) -> tuple[DataFrame, Observation]:
+    """The combiner's one JVM query and the observation of its totals.
+
+    Exact per-key counts ``_c`` (``count``, or the ``weight_col`` sum;
+    each weight cast to long as on the zero-shuffle path, nulls count 0)
+    with a ``min`` exemplar token ``_tok`` over the valid keys (>= 0, so
+    nulls are skipped too), ordered by count descending, key ascending,
+    and limited to k+1 rows.  The observation collects ``n`` = sum of
+    ``_c`` and ``rows`` = distinct keys from the same count rows, above
+    the exchange, in the same job as the top-(k+1) collect.
+    """
+    weight = (
+        F.count("*") if weight_col is None
+        else F.coalesce(F.sum(F.col(weight_col).cast("long")), F.lit(0))
+    )
+    aggs = [weight.cast("long").alias("_c")]
+    if token_col is not None:
+        # min() = deterministic exemplar (all tokens under one hashed
+        # key are equal anyway, modulo hash collisions).
+        aggs.append(F.min(token_col).cast("string").alias("_tok"))
+    counts = (
+        df.where(F.col(key_col) >= 0)  # the kernel's invalid-key rule
+        .groupBy(F.col(key_col).cast("long").alias("_key"))
+        .agg(*aggs)
+    )
+    totals = Observation()
+    counts = counts.observe(totals, F.sum("_c").alias("n"), F.count("*").alias("rows"))
+    return counts.orderBy(F.desc("_c"), F.asc("_key")).limit(k + 1), totals
+
+
+def _mg_exact_prune(
+    df: DataFrame,
+    key_col: str,
+    k: int,
+    token_col: str | None,
+    weight_col: str | None,
+    checkpoint_dir: str | None,
+    manifest: dict,
+) -> tuple[MGState, dict[int, str]]:
+    """The combiner plan: an exact count table pruned at its (k+1)-th
+    largest count ``t`` (0 when there are <= k keys) is an MG summary.
+
+    ``est = count - t`` for the keys with ``count > t``, ``n`` = the
+    exact total, ``d = t``: MG's merge rule applied once to exact counts
+    (``kernel.mg_merge_arrays`` from an empty sketch), so the bound
+    est in [true - N/(k+1), true] holds, no counter is zero (a key whose
+    weights sum to <= 0 is not kept), and keys tied at the cutoff drop
+    whatever their order or the input partitioning.  With
+    ``checkpoint_dir`` set the state is written as one partial row.
+    """
+    start = time.perf_counter()
+    top, totals = _mg_top_counts(df, key_col, k, token_col, weight_col)
+    rows = top.collect()
+    observed = totals.get
+    cutoff = int(rows[k]["_c"]) if len(rows) > k else 0
+    kept = sorted((r for r in rows[:k] if r["_c"] > cutoff), key=lambda r: r["_key"])
+    state = MGState(
+        k=k,
+        keys=np.array([r["_key"] for r in kept], dtype=np.int64),
+        counters=np.array([r["_c"] - cutoff for r in kept], dtype=np.int64),
+        n=int(observed["n"] or 0),
+        d=cutoff,
+    )
+    exemplars = {} if token_col is None else {
+        int(r["_key"]): r["_tok"] for r in kept if r["_tok"] is not None
+    }
+    if checkpoint_dir is not None:
+        payload = MGSketch(k).serialize((state, exemplars))
+        partial = (0, payload, int(observed["rows"]), time.perf_counter() - start)
+        write_checkpoint(
+            local_frame(df.sparkSession, [partial], SKETCH_PARTIAL_SCHEMA), checkpoint_dir, manifest
+        )
+    return state, exemplars
+
+
+def _mg_build(
+    df: DataFrame,
+    key_col: str,
+    k: int,
+    token_col: str | None,
+    weight_col: str | None,
+    checkpoint_dir: str | None,
+    fanout: int,
+    pre_aggregate: bool | str,
+    manifest: dict,
+) -> tuple[MGState, dict[int, str]]:
+    """Resume a ready checkpoint, else build on the chosen plan."""
+    sketch = MGSketch(k)
+    if checkpoint_dir is not None and checkpoint_ready(checkpoint_dir, manifest):
+        return resume_partials(df.sparkSession, checkpoint_dir, sketch, fanout)
+    if pre_aggregate == "auto":
+        pre_aggregate = _combiner_probe(df, key_col)
+    if pre_aggregate:
+        return _mg_exact_prune(df, key_col, k, token_col, weight_col, checkpoint_dir, manifest)
+    columns = _mg_columns(key_col, weight_col, token_col)
+    return sketch_agg(df, columns, sketch, fanout, checkpoint_dir, manifest)
+
+
 def mg_sketch_with_tokens(
     df: DataFrame,
     key_col: str,
@@ -336,38 +459,22 @@ def mg_sketch_with_tokens(
     """Distributed MG sketch plus exemplar-token decode in ONE input scan.
 
     Returns ``(final MGState, {key: exemplar token})``: one token string
-    per surviving key rides along in the partial-sketch rows (stage 1)
-    and through every merge round, so releases decode without a second
-    scan of the input (the decode-re-scan would double the dominant cost
-    of every DP query at 100 TB).  Exemplars cover every released key of
-    the approx-DP mechanisms (they never invent keys); pure-DP releases
-    can add fresh universe keys, which need a dictionary universe instead
-    (see the CLI's pure mode / ``q_mg_pure_dp_doc_lang``).
+    per surviving key comes out of the build, so releases decode without
+    a second scan of the input (the decode-re-scan would double the
+    dominant cost of every DP query at 100 TB).  Exemplars cover every
+    released key of the approx-DP mechanisms (they never invent keys);
+    pure-DP releases can add fresh universe keys, which need a dictionary
+    universe instead (see the CLI's pure mode / ``q_mg_pure_dp_doc_lang``).
 
-    On the combiner path exemplars cost O(distinct keys) extra bytes; on
-    the zero-shuffle path the token column crosses the Arrow pipe per
-    row — still one scan, but prefer the combiner when cardinality allows
-    (the ``"auto"`` probe does this).
+    On the combiner path the exemplar is each key's ``min`` token, taken
+    in the JVM with the exact count; on the zero-shuffle path the token
+    column crosses the Arrow pipe per row — still one scan, but prefer
+    the combiner when cardinality allows (the ``"auto"`` probe does this).
     """
     manifest = _mg_manifest(k, key_col, weight_col, token_col)
-    if pre_aggregate == "auto":
-        if checkpoint_dir is not None and checkpoint_ready(checkpoint_dir, manifest):
-            pre_aggregate = False  # resuming from partials; no probe needed
-        else:
-            pre_aggregate = _combiner_probe(df, key_col)
-    if pre_aggregate:
-        weight_expr = F.count("*") if weight_col is None else F.sum(weight_col)
-        aggs = [weight_expr.cast("long").alias("_w")]
-        if token_col is not None:
-            # min() = deterministic exemplar (all tokens under one hashed
-            # key are equal anyway, modulo hash collisions).
-            aggs.append(F.min(token_col).cast("string").alias("_tok"))
-        df = df.groupBy(key_col).agg(*aggs)
-        weight_col = "_w"
-        if token_col is not None:
-            token_col = "_tok"
-    columns = _mg_columns(key_col, weight_col, token_col)
-    return sketch_agg(df, columns, MGSketch(k), fanout, checkpoint_dir, manifest)
+    return _mg_build(
+        df, key_col, k, token_col, weight_col, checkpoint_dir, fanout, pre_aggregate, manifest
+    )
 
 
 def mg_sketch(
@@ -386,13 +493,14 @@ def mg_sketch(
     With ``checkpoint_dir`` set, stage-1 partials are persisted and reused
     on rerun (resumability with lineage+metrics).
 
-    ``pre_aggregate=True`` inserts an exact JVM-side ``groupBy(key).sum``
-    before the sketch: map-side combining means only *distinct* keys per
-    shuffle partition cross the JVM->Python Arrow boundary (the per-pipe
-    boundary throughput, not Python compute, is the hot-path ceiling).
-    Both plans give the full MG guarantee (est in [true - N/(k+1), true]);
-    when key cardinality is <= k the results are bit-identical, while at
-    higher cardinality the combiner and zero-shuffle plans can release
+    ``pre_aggregate=True`` builds the sketch as one JVM query with no
+    Python stage: an exact ``groupBy(key)`` count (map-side combined),
+    its total observed in the same job, and the top k+1 counts collected;
+    the driver prunes them at the (k+1)-th count (:func:`_mg_exact_prune`).
+    Nothing crosses the JVM->Python Arrow boundary.  Both plans give the
+    full MG guarantee (est in [true - N/(k+1), true]); when key
+    cardinality is <= k the results are bit-identical, while at higher
+    cardinality the combiner and zero-shuffle plans can release
     *different* (equally bound-valid) key sets, so the data-dependent
     ``"auto"`` probe may change the released keys between runs on
     slightly different inputs.  The combiner plan gains a key shuffle, so
@@ -536,12 +644,13 @@ def mg_topk(
 
     Plan selection (``pre_aggregate``):
 
-    * ``True`` — combiner path: exact JVM ``groupBy(token).count`` first
-      (map-side combine), then sketch the distinct (token, count) rows.
-      Only distinct keys cross the Arrow boundary and token exemplars
-      ride along in the partial rows, so the whole query is **one scan**
-      of the input with no decode re-scan.  Right whenever distinct
-      tokens ≪ rows — the typical heavy-hitter workload.
+    * ``True`` — combiner path: one JVM query counts each hashed token
+      exactly (map-side combine) with a ``min`` exemplar token and
+      collects the top k+1 counts (:func:`_mg_exact_prune`).  Nothing
+      crosses the Arrow boundary and the exemplars decode the keys, so
+      the whole query is **one scan** of the input with no decode
+      re-scan.  Right whenever distinct tokens ≪ rows — the typical
+      heavy-hitter workload.
     * ``False`` — zero-shuffle path: sketch the raw stream (no shuffle at
       all), then decode the <= k survivors with a JVM-only re-scan.  Right
       for unbounded key spaces where a groupBy state would be as large as
@@ -549,32 +658,26 @@ def mg_topk(
     * ``"auto"`` (default) — one cheap JVM-only probe
       (``count`` + ``approx_count_distinct``, no Python boundary) picks
       the combiner path when distinct/rows <= 0.5; ties go to combiner
-      because JVM shuffle bytes are ~10x cheaper than Arrow-pipe bytes.
+      because a JVM shuffle is cheaper than the Arrow pipe.
     """
     spark = df.sparkSession
     if pre_aggregate == "auto":
         pre_aggregate = _combiner_probe(df, token_col)
-    if pre_aggregate:
-        pre = df.groupBy(token_col).agg(F.count("*").cast("long").alias("_w"))
-        encoded = encode_tokens(pre, token_col)
-        # Both paths sketch the unweighted token stream and this path
-        # decodes keys without exemplars below, so a checkpoint from
-        # either path resumes into the other: one manifest for both.
-        manifest = _mg_manifest(k, "key", None, None)
-        columns = _mg_columns("key", "_w", token_col)
-        state, mapping = sketch_agg(encoded, columns, MGSketch(k), 64, checkpoint_dir, manifest)
-        # A checkpoint written by the zero-shuffle path (or older code)
-        # carries no exemplars; resolve any un-decoded keys with the
-        # broadcast semi-join instead of silently emitting hash strings.
-        missing = [int(key) for key in state.keys if int(key) not in mapping]
-        if missing:
-            mapping.update(decode_keys(df, token_col, missing))
-    else:
-        encoded = encode_tokens(df, token_col)
-        state = mg_sketch(
-            encoded, "key", k, checkpoint_dir=checkpoint_dir, pre_aggregate=False
-        )
-        mapping = decode_keys(df, token_col, state.keys.tolist())
+    # Exemplars ride only the combiner (on the zero-shuffle path tokens
+    # would cross the Arrow pipe per row).  Both paths sketch the
+    # unweighted key stream, so a checkpoint from either resumes into the
+    # other: one manifest, without the token column.
+    manifest = _mg_manifest(k, "key", None, None)
+    state, mapping = _mg_build(
+        encode_tokens(df, token_col), "key", k, token_col if pre_aggregate else None,
+        None, checkpoint_dir, 64, pre_aggregate, manifest,
+    )
+    # The zero-shuffle path, and a checkpoint it (or older code) wrote,
+    # carries no exemplars; resolve any un-decoded keys with the
+    # broadcast semi-join instead of silently emitting hash strings.
+    missing = [int(key) for key in state.keys if int(key) not in mapping]
+    if missing:
+        mapping.update(decode_keys(df, token_col, missing))
     rows = [
         (mapping.get(int(key), str(int(key))), int(cnt))
         for key, cnt in zip(state.keys, state.counters)

@@ -308,7 +308,12 @@ def sketch_agg(
         manifest = checkpoint_manifest(sketch.name, sketch.params(), col)
     if not checkpoint_ready(checkpoint_dir, manifest):
         write_checkpoint(sketch_partials(df, col, sketch), checkpoint_dir, manifest)
-    partials = df.sparkSession.read.parquet(checkpoint_dir)
+    return resume_partials(df.sparkSession, checkpoint_dir, sketch, fanout)
+
+
+def resume_partials(spark, checkpoint_dir: str, sketch: MergeableSketch, fanout: int = 64) -> Any:
+    """The final state of the partial rows checkpointed in ``checkpoint_dir``."""
+    partials = spark.read.parquet(checkpoint_dir)
     return merge_partials(partials, checkpoint_partitions(partials), sketch, fanout)
 
 

@@ -73,13 +73,26 @@ def main() -> None:
         tree(_merge_round(mg_partials(tokens, "key", 64), MGSketch(64), 64)),
     ))
 
-    pre = tokens.groupBy("key").agg(F.count("*").cast("long").alias("_w"))
+    from mgspark.aggregate import _mg_top_counts
+
+    top, _ = _mg_top_counts(tokens, "key", 64, None, None)
     sections.append((
-        "Combiner path: exact partial aggregation",
-        "Two HashAggregate nodes around one Exchange = map-side combine: "
-        "shuffle bytes are O(distinct keys per partition), the property "
-        "that beats the JVM->Python Arrow pipe ceiling at scale.",
-        tree(pre),
+        "Combiner path: one JVM query, exact prune on the driver",
+        "The whole combiner sketch: a partial count before the one "
+        "Exchange (map-side combine, so shuffle bytes are O(distinct keys "
+        "per partition)), CollectMetrics taking the exact total n above "
+        "it in the same job, and TakeOrderedAndProject collecting the top "
+        "k+1 counts, which the driver prunes at the (k+1)-th count.  No "
+        "Python node: nothing crosses the Arrow boundary.",
+        tree(top),
+    ))
+    top, _ = _mg_top_counts(tokens, "key", 64, "token", None)
+    sections.append((
+        "Combiner path with exemplar tokens",
+        "min(token) has a string buffer, which a HashAggregate cannot "
+        "hold, so Spark plans a SortAggregate (a sort on each side of the "
+        "Exchange); still one scan and no Python node.",
+        tree(top),
     ))
 
     from mgspark.aggregate import mg_topk

@@ -198,14 +198,46 @@ def test_mg_sketch_collects_partials_without_merge_round(spark, docs, monkeypatc
     assert "Exchange" not in tree[tree.index("MapInArrow"):], tree
 
 
+@pytest.mark.parametrize("entry", ["mg_sketch_with_tokens", "mg_topk"])
+def test_combiner_is_one_jvm_query(spark, docs, monkeypatch, entry):
+    """The combiner path builds its sketch with one JVM query: no Python
+    node, one file scan, and a TakeOrderedAndProject collecting the top
+    k+1 counts.  It runs in at most two Spark jobs (the map stage and the
+    result stage), as the mapInArrow build it replaced did."""
+    from mgspark.aggregate import mg_sketch_with_tokens, mg_topk
+
+    tokens = content_tokens(docs, "text")
+
+    def run():
+        if entry == "mg_topk":
+            return mg_topk(tokens, "token", 16, pre_aggregate=True)
+        encoded = encode_tokens(tokens, "token")
+        return mg_sketch_with_tokens(encoded, "key", 16, "token", pre_aggregate=True)
+
+    tree = _collected_plan(monkeypatch, run)
+    assert tree.count("Scan parquet") == 1, tree
+    assert "TakeOrderedAndProject" in tree, tree
+    for node in ("MapInPandas", "MapInArrow", "EvalPython", "FlatMapGroupsIn"):
+        assert node not in tree, (node, tree)
+    sc = spark.sparkContext
+    group = f"combiner-jobs-{entry}"
+    sc.setJobGroup(group, "combiner job count")
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+
 def test_combiner_preagg_has_mapside_partial_agg(docs):
     """The combiner plan must show a two-phase hash aggregate (partial
     map-side combine before the exchange): shuffle bytes are then
     O(distinct keys per partition), the property that makes the combiner
     beat the Arrow pipe at scale."""
+    from mgspark.aggregate import _mg_top_counts
+
     tokens = encode_tokens(content_tokens(docs, "text"), "token")
-    pre = tokens.groupBy("key").agg(F.count("*").cast("long").alias("_w"))
-    plan = _formatted(pre)
+    plan = _formatted(_mg_top_counts(tokens, "key", 64, None, None)[0])
     # Spark renders partial+final as two HashAggregate nodes around one
     # Exchange; count nodes in the plan tree (node ids like "(6) Exchange"
     # repeat in the details section, so count tree entries only).

@@ -18,7 +18,7 @@ from mgspark.aggregate import (
     mg_topk,
     mg_topk_grouped,
 )
-from mgspark.kernel import MGState
+from mgspark.kernel import MGState, mg_merge_arrays
 from mgspark.sketches.base import merge_partials
 from mgspark.sketches.mg import MGSketch
 from mgspark.testgen import repo_table_pandas, write_repo_table
@@ -513,3 +513,86 @@ def test_bloom_null_is_never_a_member(spark):
     assert flags == {"a": True, "b": True, None: False}
     full = np.full_like(state, 0xFF)  # every bit set: anything valid is "in"
     assert BloomFilter(capacity=100).contains(full, np.array([-1, 0, 7])).tolist() == [False, True, True]
+
+
+# (key, token, weight) rows: per-key counts 10, 9, 5, 5, 5, 2, 1, so at
+# k=3 three keys tie at the cutoff; tokens alternate "b<key>" / "a<key>"
+# so the exemplar must be the min; a null weight counts 0.
+_PRUNE_ROWS = (
+    [(key, ("b" if i % 2 == 0 else "a") + str(key), i % 2 + 1)
+     for key, n in {1: 10, 2: 9, 3: 5, 4: 5, 5: 5, 6: 2, 7: 1}.items() for i in range(n)]
+    + [(1, "c1", None), (-3, "neg", 4), (None, "null", 4)]
+)
+
+
+def _exact_prune_oracle(rows, k, weighted):
+    """kernel.mg_merge_arrays from an empty sketch over the exact
+    per-key counts of the valid keys, and the min token of each kept key."""
+    counts, tokens = {}, {}
+    for key, tok, weight in rows:
+        if key is None or key < 0:
+            continue
+        counts[key] = counts.get(key, 0) + ((weight or 0) if weighted else 1)
+        tokens[key] = min(tokens.get(key, tok), tok)
+    keys = np.array(sorted(counts), dtype=np.int64)
+    summed = np.array([counts[key] for key in keys.tolist()], dtype=np.int64)
+    empty = np.empty(0, dtype=np.int64)
+    kept, counters, offset = mg_merge_arrays(empty, empty, keys, summed, k)
+    exemplars = {key: tokens[key] for key in kept.tolist()}
+    return kept.tolist(), counters.tolist(), int(summed.sum()), int(offset), exemplars
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+def test_combiner_equals_exact_prune_oracle(spark, weighted):
+    """The combiner plan's state is mg_merge_arrays(empty, exact counts, k):
+    the same keys, counters, n and d = t (the (k+1)-th count), with the
+    min token as exemplar.  Covers keys tied at the cutoff (k=3: counts
+    5, 5, 5 all drop), <= k keys (k=7: nothing pruned, d = 0), negative
+    and null keys (skipped), a weight column with a null weight, and 1
+    vs 7 input partitions (identical)."""
+    from mgspark.aggregate import mg_sketch_with_tokens
+
+    df = spark.createDataFrame(_PRUNE_ROWS, "key long, tok string, w long")
+    weight_col = "w" if weighted else None
+    for k in (1, 3, 7, 19):
+        keys, counters, n, d, exemplars = _exact_prune_oracle(_PRUNE_ROWS, k, weighted)
+        for partitions in (1, 7):
+            state, tokens = mg_sketch_with_tokens(
+                df.repartition(partitions), "key", k, "tok", weight_col, pre_aggregate=True
+            )
+            got = (state.keys.tolist(), state.counters.tolist(), state.n, state.d, tokens)
+            assert got == (keys, counters, n, d, exemplars), (k, partitions)
+    tied = _exact_prune_oracle(_PRUNE_ROWS, 3, weighted)
+    assert tied[0] == [1, 2] and tied[3] > 0  # the three keys at the cutoff dropped
+    assert _exact_prune_oracle(_PRUNE_ROWS, 7, weighted)[3] == 0
+
+
+def test_combiner_empty_input(spark):
+    """No rows, or only invalid keys: n = 0, d = 0, no counters, no exemplars."""
+    from mgspark.aggregate import mg_sketch_with_tokens
+
+    empty = spark.createDataFrame([], "key long, tok string")
+    invalid = spark.createDataFrame([(-1, "a"), (None, "b")], "key long, tok string")
+    for df in (empty, invalid):
+        state, tokens = mg_sketch_with_tokens(df, "key", 4, "tok", pre_aggregate=True)
+        assert (state.to_dict(), state.n, state.d, tokens) == ({}, 0, 0, {})
+
+
+def test_combiner_checkpoint_is_one_partial_row(spark, tmp_path):
+    """With checkpoint_dir set the combiner writes its pruned state as
+    one partial row, exemplars included, and either plan resumes it."""
+    from mgspark.aggregate import mg_sketch_with_tokens
+
+    ckpt = str(tmp_path / "combiner_ckpt")
+    df = spark.createDataFrame(_PRUNE_ROWS, "key long, tok string, w long").repartition(3)
+    built = mg_sketch_with_tokens(df, "key", 3, "tok", checkpoint_dir=ckpt, pre_aggregate=True)
+    rows = spark.read.parquet(ckpt).collect()
+    assert len(rows) == 1 and rows[0]["rows"] == 7  # the distinct valid keys
+    empty = df.limit(0)
+    for pre_aggregate in (True, False):
+        state, tokens = mg_sketch_with_tokens(
+            empty, "key", 3, "tok", checkpoint_dir=ckpt, pre_aggregate=pre_aggregate
+        )
+        assert (state.to_dict(), state.n, state.d, tokens) == (
+            built[0].to_dict(), built[0].n, built[0].d, built[1]
+        )
