@@ -14,6 +14,7 @@ Usage:
     python bench_extra.py --all          # every bench headline query
     python bench_extra.py --plans q1 ... # also dump plans/r06/<q>_<tag>.txt
     python bench_extra.py --tag after --plans q1
+    python bench_extra.py --boundary     # per-Python-stage fixed cost
 
 This file is NOT bench.py: the driver's frozen benchmark is untouched.
 """
@@ -22,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -44,6 +46,36 @@ def _plan_str(df) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
+def boundary_probe(spark, runs: int = 9) -> dict:
+    """The fixed cost one Python stage adds to a query: the median wall
+    of a 1-partition no-op ``mapInArrow`` minus that of a 1-partition JVM
+    ``collect`` of the same one-row range, each warmed once first."""
+    df = spark.range(1, numPartitions=1)
+
+    def noop(batches):
+        yield from batches
+
+    def median_wall(action) -> float:
+        action()
+        walls = []
+        for _ in range(runs):
+            t0 = time.perf_counter()
+            action()
+            walls.append(time.perf_counter() - t0)
+        return statistics.median(walls)
+
+    python_s = median_wall(lambda: df.mapInArrow(noop, df.schema).collect())
+    jvm_s = median_wall(df.collect)
+    return {
+        "python_stage_fixed_s": round(python_s - jvm_s, 4),
+        "map_in_arrow_s": round(python_s, 4),
+        "jvm_collect_s": round(jvm_s, 4),
+        "runs": runs,
+        "cpus": len(os.sched_getaffinity(0)),
+        "local_cores": CPUS,
+    }
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:]]
     dump_plans = "--plans" in args
@@ -62,6 +94,9 @@ def main() -> None:
     from mgspark.session import get_spark
 
     spark = get_spark("mgspark-bench-extra", cores=CPUS, extra_conf=SPLIT_CONF)
+    if "--boundary" in args:
+        print(json.dumps({"boundary": boundary_probe(spark)}), flush=True)
+        return
     import __spark_entry__ as entrymod
     from mgspark.cacheutil import clear_transient_caches
 

@@ -49,6 +49,7 @@ partials (north_star requirement).
 from __future__ import annotations
 
 import time
+from dataclasses import replace
 
 import numpy as np
 from pyspark.sql import DataFrame, Observation, Window
@@ -434,16 +435,36 @@ def _mg_build(
     pre_aggregate: bool | str,
     manifest: dict,
 ) -> tuple[MGState, dict[int, str]]:
-    """Resume a ready checkpoint, else build on the chosen plan."""
+    """Resume a ready checkpoint, else build on the chosen plan.
+
+    Every plan returns the combiner's state shape: no counter <= 0.  The
+    zero-shuffle kernel keeps a key whose weights sum to <= 0 as a zero
+    counter while there are <= k keys, and a DP release would add noise
+    to it; it is dropped here, which changes neither ``n`` nor ``d``.
+    """
     sketch = MGSketch(k)
     if checkpoint_dir is not None and checkpoint_ready(checkpoint_dir, manifest):
-        return resume_partials(df.sparkSession, checkpoint_dir, sketch, fanout)
+        return _positive_counters(*resume_partials(df.sparkSession, checkpoint_dir, sketch, fanout))
     if pre_aggregate == "auto":
         pre_aggregate = _combiner_probe(df, key_col)
     if pre_aggregate:
         return _mg_exact_prune(df, key_col, k, token_col, weight_col, checkpoint_dir, manifest)
     columns = _mg_columns(key_col, weight_col, token_col)
-    return sketch_agg(df, columns, sketch, fanout, checkpoint_dir, manifest)
+    return _positive_counters(*sketch_agg(df, columns, sketch, fanout, checkpoint_dir, manifest))
+
+
+def _positive_counters(
+    state: MGState, exemplars: dict[int, str]
+) -> tuple[MGState, dict[int, str]]:
+    keep = state.counters > 0
+    if keep.all():
+        return state, exemplars
+    keys = state.keys[keep]
+    kept = set(keys.tolist())
+    return (
+        replace(state, keys=keys, counters=state.counters[keep]),
+        {key: tok for key, tok in exemplars.items() if key in kept},
+    )
 
 
 def mg_sketch_with_tokens(

@@ -596,3 +596,18 @@ def test_combiner_checkpoint_is_one_partial_row(spark, tmp_path):
         assert (state.to_dict(), state.n, state.d, tokens) == (
             built[0].to_dict(), built[0].n, built[0].d, built[1]
         )
+
+
+@pytest.mark.parametrize("pre_aggregate", [True, False])
+def test_nonpositive_weight_keys_are_not_counters(spark, tmp_path, pre_aggregate):
+    """A key whose weights sum to <= 0 (a zero or null weight) is no
+    counter on either plan, built or resumed from its checkpoint; n and
+    d are unchanged."""
+    df = spark.createDataFrame([(1, 3), (2, 0), (3, None)], "key long, w long")
+    ckpt = str(tmp_path / "ckpt")
+    built = mg_sketch(df, "key", 4, weight_col="w", checkpoint_dir=ckpt, pre_aggregate=pre_aggregate)
+    resumed = mg_sketch(
+        df.limit(0), "key", 4, weight_col="w", checkpoint_dir=ckpt, pre_aggregate=pre_aggregate
+    )
+    for state in (built, resumed):
+        assert (state.to_dict(), state.n, state.d) == ({1: 3}, 3, 0)
