@@ -94,8 +94,8 @@ def encode_tokens(df: DataFrame, col: str, key_col: str = "key") -> DataFrame:
     negatives skipped" contract (pmg.py:82-83) stays observable.  A null
     of any type becomes -1, the kernel's invalid key, so every sketch
     skips nulls.  At 100 TB this avoids any dictionary shuffle; released
-    keys are decoded back to tokens with :func:`decode_keys` via a
-    broadcast semi-join of only the <= k survivors.
+    keys decode from the exemplar tokens the build carries
+    (:func:`mg_sketch_with_tokens`), with :func:`decode_keys` as fallback.
     """
     dtype = dict(df.dtypes)[col]
     if dtype in ("tinyint", "smallint", "int", "bigint"):
@@ -106,11 +106,12 @@ def encode_tokens(df: DataFrame, col: str, key_col: str = "key") -> DataFrame:
 
 
 def decode_keys(tokens_df: DataFrame, col: str, keys: list[int], key_col: str = "key") -> dict[int, str]:
-    """Decode hashed keys back to their tokens.
+    """Decode hashed keys back to their tokens by re-scanning the input.
 
-    Broadcast the (tiny) released key set, filter the token stream to
-    survivors only, and collect the distinct (key, token) pairs — O(k)
-    result rows regardless of input size.
+    An ``isin`` IN-list filter of the keys over the re-encoded tokens,
+    then the distinct (key, token) pairs: O(k) rows, but a second full
+    scan.  Only the fallback for keys with no exemplar token (a
+    token-less checkpoint); every build carries exemplars instead.
     """
     if not keys:
         return {}
@@ -658,10 +659,10 @@ def mg_topk(
     descending, token ascending.  When the column's true cardinality is
     <= k the estimates are exact (no decrement can fire), which is what
     the DuckDB oracle checks at small scale.  The <= k result rows are
-    already on the driver, so the frame is a one-partition
-    ``LocalTableScan`` under the ``Sort``
-    (:func:`mgspark.session.local_frame`): actions on it run no Python
-    worker and no exchange, and never re-run the sketch.
+    sorted on the driver (``str`` order is code-point order, Spark's
+    UTF-8 byte order), so the frame is a bare ``LocalTableScan``
+    (:func:`mgspark.session.local_frame`): collecting it starts no job,
+    and no action on it runs a Python worker or re-runs the sketch.
 
     Plan selection (``pre_aggregate``):
 
@@ -673,29 +674,28 @@ def mg_topk(
       re-scan.  Right whenever distinct tokens ≪ rows — the typical
       heavy-hitter workload.
     * ``False`` — zero-shuffle path: sketch the raw stream (no shuffle at
-      all), then decode the <= k survivors with a JVM-only re-scan.  Right
-      for unbounded key spaces where a groupBy state would be as large as
-      the data.
+      all) with the token column beside each key, so every partial
+      carries one exemplar per surviving key and the query is one scan
+      too.  Right for unbounded key spaces where a groupBy state would be
+      as large as the data.
     * ``"auto"`` (default) — one cheap JVM-only probe
       (``count`` + ``approx_count_distinct``, no Python boundary) picks
       the combiner path when distinct/rows <= 0.5; ties go to combiner
       because a JVM shuffle is cheaper than the Arrow pipe.
     """
-    spark = df.sparkSession
     if pre_aggregate == "auto":
         pre_aggregate = _combiner_probe(df, token_col)
-    # Exemplars ride only the combiner (on the zero-shuffle path tokens
-    # would cross the Arrow pipe per row).  Both paths sketch the
-    # unweighted key stream, so a checkpoint from either resumes into the
-    # other: one manifest, without the token column.
+    # Both plans carry exemplar tokens and sketch the unweighted key
+    # stream, so a checkpoint from either resumes into the other: one
+    # manifest, without the token column.
     manifest = _mg_manifest(k, "key", None, None)
     state, mapping = _mg_build(
-        encode_tokens(df, token_col), "key", k, token_col if pre_aggregate else None,
-        None, checkpoint_dir, 64, pre_aggregate, manifest,
+        encode_tokens(df, token_col), "key", k, token_col, None, checkpoint_dir, 64,
+        pre_aggregate, manifest,
     )
-    # The zero-shuffle path, and a checkpoint it (or older code) wrote,
-    # carries no exemplars; resolve any un-decoded keys with the
-    # broadcast semi-join instead of silently emitting hash strings.
+    # A token-less checkpoint (written by mg_sketch, or by older code)
+    # carries no exemplars; resolve those keys with decode_keys instead
+    # of silently emitting hash strings.
     missing = [int(key) for key in state.keys if int(key) not in mapping]
     if missing:
         mapping.update(decode_keys(df, token_col, missing))
@@ -703,7 +703,6 @@ def mg_topk(
         (mapping.get(int(key), str(int(key))), int(cnt))
         for key, cnt in zip(state.keys, state.counters)
     ]
-    # One partition: sorting <= k rows then needs no range-partition
-    # exchange (a sampling job plus a shuffle) on every action.
-    out = local_frame(spark, rows, "token string, est long").coalesce(1)
-    return out.orderBy(F.desc("est"), F.asc("token"))
+    # Sorted here: collecting a bare LocalTableScan starts no job.
+    rows.sort(key=lambda row: (-row[1], row[0]))
+    return local_frame(df.sparkSession, rows, "token string, est long")

@@ -95,16 +95,26 @@ def main() -> None:
         tree(top),
     ))
 
+    sections.append((
+        "Zero-shuffle build with exemplar tokens",
+        "mg_topk(pre_aggregate=False) projects the token string beside "
+        "each key into MapInArrow, so every partial row carries one "
+        "exemplar per surviving key and the released keys decode with "
+        "no re-scan of the input.  Still no Exchange below the build.",
+        tree(mg_partials(tokens, "key", 64, token_col="token")),
+    ))
+
     from mgspark.aggregate import mg_topk
 
     sections.append((
-        "mg_topk result: a LocalTableScan under the Sort",
+        "mg_topk result: a bare LocalTableScan, sorted on the driver",
         "The <= k decoded rows are already on the driver when mg_topk "
-        "returns, so its frame is an Arrow local relation "
-        "(mgspark.session.local_frame): LocalTableScan below the Sort, "
-        "never Scan ExistingRDD, so no action on the result starts a "
-        "Python worker.  Coalesce 1 lets the Sort run without a "
-        "range-partition Exchange.",
+        "returns, and are sorted there by (est desc, token asc); Python "
+        "str order is code-point order, the same as Spark's UTF-8 byte "
+        "order.  The frame is an Arrow local relation "
+        "(mgspark.session.local_frame): no Sort and never Scan "
+        "ExistingRDD, so collecting it starts no Spark job and no action "
+        "on it starts a Python worker.",
         tree(mg_topk(docs.select("lang"), "lang", 8, pre_aggregate=True)),
     ))
 

@@ -64,8 +64,9 @@ def test_predicate_pushdown_reaches_scan(spark, sf_dir):
 
 
 def test_broadcast_decode_join(spark, sf_dir):
-    """mg_topk-style decode must broadcast the tiny key set, never
-    shuffle the token stream for the join."""
+    """decode_keys (the fallback for a token-less checkpoint) filters the
+    token stream with an ``isin`` IN-list of the tiny key set, never a
+    shuffled join."""
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     tokens = content_tokens(docs, "text")
     encoded = encode_tokens(tokens, "token")
@@ -498,11 +499,11 @@ def _executed_plan(df) -> str:
 
 @pytest.mark.parametrize("pre_aggregate", [True, False])
 def test_mg_topk_result_is_local_table_scan(docs, pre_aggregate):
-    """mg_topk's <= k result rows sit under its Sort as a LocalTableScan,
-    never a pickled Python RDD (``Scan ExistingRDD`` / ``LogicalRDD``),
-    so actions on the result run no Python worker — also when the input
-    yields no heavy hitter at all.  The rows are one partition, so the
-    Sort needs no range-partition exchange."""
+    """mg_topk's <= k result rows, sorted on the driver, are a bare
+    LocalTableScan, never a pickled Python RDD (``Scan ExistingRDD`` /
+    ``LogicalRDD``), so actions on the result run no Python worker — also
+    when the input yields no heavy hitter at all — and need no Sort or
+    exchange."""
     from mgspark.aggregate import mg_topk
 
     for df in (docs.select("lang"), docs.select("lang").where(F.lit(False))):
@@ -510,6 +511,41 @@ def test_mg_topk_result_is_local_table_scan(docs, pre_aggregate):
         assert "LocalTableScan" in plan, plan
         assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
         assert "Exchange" not in plan, plan
+        assert "Sort" not in plan, plan
+
+
+def _jobs(spark, group, action):
+    """``action()`` and the number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "mg_topk job count")
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_zero_shuffle_mg_topk_is_one_job(spark, docs):
+    """Zero-shuffle mg_topk, collect included, is one Spark job: the
+    mapInArrow build carries exemplar tokens, so no decode re-scan runs,
+    and the result needs no Sort job."""
+    from mgspark.aggregate import mg_topk
+
+    tokens = content_tokens(docs, "text")
+    rows, jobs = _jobs(
+        spark, "zero-shuffle-mg-topk", lambda: mg_topk(tokens, "token", 16, pre_aggregate=False).collect()
+    )
+    assert rows and jobs == 1
+
+
+@pytest.mark.parametrize("pre_aggregate", [True, False])
+def test_mg_topk_result_collects_without_a_job(spark, docs, pre_aggregate):
+    """Collecting mg_topk's result starts no Spark job on either plan."""
+    from mgspark.aggregate import mg_topk
+
+    out = mg_topk(docs.select("lang"), "lang", 8, pre_aggregate=pre_aggregate)
+    rows, jobs = _jobs(spark, f"mg-topk-collect-{pre_aggregate}", out.collect)
+    assert rows and jobs == 0
 
 
 def test_local_frame_round_trips_declared_schema(spark):

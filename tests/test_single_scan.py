@@ -14,14 +14,13 @@ from pyspark.sql import functions as F
 import mgspark.aggregate as agg
 
 
+def _rescan(*args, **kwargs):  # pragma: no cover - failure path
+    raise AssertionError("decode_keys called: a release path re-scanned the input")
+
+
 @pytest.fixture()
 def no_decode_rescan(monkeypatch):
-    def boom(*args, **kwargs):  # pragma: no cover - failure path
-        raise AssertionError(
-            "decode_keys called: a release path re-scanned the input"
-        )
-
-    monkeypatch.setattr(agg, "decode_keys", boom)
+    monkeypatch.setattr(agg, "decode_keys", _rescan)
 
 
 def _tokens_df(spark):
@@ -85,3 +84,36 @@ def test_streaming_mg_decodes_from_state_tokens(spark, sf_dir, no_decode_rescan)
     assert rows
     for r in rows:
         assert not r["token"].isdigit(), r
+
+
+def test_zero_shuffle_mg_topk_decodes_from_exemplars(spark, no_decode_rescan):
+    """Zero-shuffle mg_topk decodes from the exemplars of its own build,
+    and at cardinality <= k returns exactly the combiner plan's rows."""
+    df = _tokens_df(spark)
+    rows = {pre: agg.mg_topk(df, "token", 8, pre_aggregate=pre).collect() for pre in (True, False)}
+    assert rows[False] == rows[True]
+    assert [tuple(r) for r in rows[False]] == [("apple", 40), ("pear", 25), ("plum", 10)]
+
+
+def test_zero_shuffle_exemplars_across_small_batches(spark, monkeypatch):
+    """With 7-row Arrow batches, keys leave and re-enter each task's MG
+    state between batches.  Above k distinct tokens, every key that
+    zero-shuffle mg_topk keeps still decodes, from its exemplar, to the
+    token decode_keys finds for it, never to a digit string."""
+    tokens = [f"w{i}" for i in range(60) for _ in range(max(1, 40 // (i + 1)))]
+    np.random.default_rng(3).shuffle(tokens)
+    df = spark.createDataFrame([(tok,) for tok in tokens], "token string")
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        with monkeypatch.context() as patched:
+            patched.setattr(agg, "decode_keys", _rescan)
+            got = {r["token"]: r["est"] for r in agg.mg_topk(df, "token", 6, pre_aggregate=False).collect()}
+        state = agg.mg_sketch(agg.encode_tokens(df, "token"), "key", 6, pre_aggregate=False)
+    finally:
+        spark.conf.set(conf, old)
+    decoded = agg.decode_keys(df, "token", [int(key) for key in state.keys])
+    assert len(got) >= 2
+    assert got == {decoded[int(key)]: int(cnt) for key, cnt in zip(state.keys, state.counters)}
+    assert not any(token.isdigit() for token in got)

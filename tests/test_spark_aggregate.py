@@ -415,21 +415,48 @@ def test_mg_topk_grouped_drops_keys_tied_at_cutoff(spark):
     assert result == _grouped_rows(df.repartition(5), 3, "g", "tok")
 
 
-def test_mg_topk_combiner_resume_from_tokenless_checkpoint(spark, docs, tmp_path):
-    """A checkpoint written by the zero-shuffle path carries no exemplar
-    tokens; a combiner-path resume must still decode real tokens (via the
-    broadcast-decode fallback), never stringified hash keys."""
-    from mgspark.aggregate import mg_topk
+def test_mg_topk_combiner_resume_from_tokenless_checkpoint(spark, docs, tmp_path, monkeypatch):
+    """A checkpoint written by mg_sketch carries no exemplar tokens (and
+    shares mg_topk's manifest); a combiner-path resume must still decode
+    real tokens, never stringified hash keys, through one decode_keys
+    call over only the keys that lack an exemplar."""
+    import mgspark.aggregate as agg
 
     ckpt = str(tmp_path / "cross_ckpt")
     langs = docs.select(F.col("lang").alias("token"))
-    first = {r["token"]: r["est"] for r in mg_topk(langs, "token", 64, checkpoint_dir=ckpt, pre_aggregate=False).collect()}
+    state = mg_sketch(encode_tokens(langs, "token"), "key", 64, checkpoint_dir=ckpt, pre_aggregate=False)
+    calls = []
+
+    def spy(tokens_df, col, keys, *args, **kwargs):
+        calls.append(sorted(keys))
+        return decode_keys(tokens_df, col, keys, *args, **kwargs)
+
+    monkeypatch.setattr(agg, "decode_keys", spy)
     resumed = {
         r["token"]: r["est"]
         for r in mg_topk(langs, "token", 64, checkpoint_dir=ckpt, pre_aggregate=True).collect()
     }
+    assert calls == [sorted(int(key) for key in state.keys)]
+    first = {r["token"]: r["est"] for r in mg_topk(langs, "token", 64, pre_aggregate=False).collect()}
+    assert len(calls) == 1, "a fresh build carries exemplars"
     assert resumed == first
     assert all(not t.isdigit() for t in resumed), "must not emit hash-key strings"
+
+
+@pytest.mark.parametrize("pre_aggregate", [True, False])
+def test_mg_topk_orders_by_est_then_token(spark, pre_aggregate):
+    """mg_topk's rows come sorted by est descending, then token ascending
+    in Spark's UTF-8 byte order, which is code-point order: U+FF5E sorts
+    before U+1F600 (in UTF-16 order the surrogate pair would sort first).
+    Spark's own orderBy agrees, and .limit(n) keeps the top n."""
+    counts = {"b": 3, "\u00e9": 3, "a": 3, "\U0001f600": 2, "\uff5e": 2, "z": 1}
+    rows = [(tok,) for tok, n in counts.items() for _ in range(n)]
+    df = spark.createDataFrame(rows, "token string").repartition(3)
+    out = mg_topk(df, "token", 8, pre_aggregate=pre_aggregate)
+    expected = [("a", 3), ("b", 3), ("\u00e9", 3), ("\uff5e", 2), ("\U0001f600", 2), ("z", 1)]
+    assert [tuple(r) for r in out.collect()] == expected
+    assert [tuple(r) for r in out.orderBy(F.desc("est"), F.asc("token")).collect()] == expected
+    assert [tuple(r) for r in out.limit(4).collect()] == expected[:4]
 
 
 def test_mg_topk_grouped_decodes_exact_counts(spark):
