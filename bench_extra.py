@@ -14,7 +14,7 @@ Usage:
     python bench_extra.py --all          # every bench headline query
     python bench_extra.py --plans q1 ... # also dump plans/r06/<q>_<tag>.txt
     python bench_extra.py --tag after --plans q1
-    python bench_extra.py --boundary     # per-Python-stage fixed cost
+    python bench_extra.py --boundary     # Python-stage fixed and per-row costs
 
 This file is NOT bench.py: the driver's frozen benchmark is untouched.
 """
@@ -46,14 +46,29 @@ def _plan_str(df) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
-def boundary_probe(spark, runs: int = 9) -> dict:
-    """The fixed cost one Python stage adds to a query: the median wall
-    of a 1-partition no-op ``mapInArrow`` minus that of a 1-partition JVM
-    ``collect`` of the same one-row range, each warmed once first."""
+def boundary_probe(spark, runs: int = 9, size_check_rows: int = 1_000_000) -> dict:
+    """What the Python boundary costs.
+
+    Fixed cost of one Python stage: the median wall of a 1-partition
+    no-op ``mapInArrow`` minus that of a 1-partition JVM ``collect`` of
+    the same one-row range.  Per-row cost of Spark's Arrow batch byte
+    check: a 1-partition ``mapInArrow`` that counts ``size_check_rows``
+    (long, short string) rows, timed as the session runs it and inside
+    ``sketch_agg``'s rows-only batch scope, where the JVM skips the
+    check.  Each timing is warmed once first."""
+    from pyspark.sql import functions as F
+
+    from mgspark.sketches.base import _rows_only_batches
+
     df = spark.range(1, numPartitions=1)
 
     def noop(batches):
         yield from batches
+
+    def count_rows(batches):
+        import pyarrow as pa
+
+        yield pa.RecordBatch.from_pydict({"n": [sum(b.num_rows for b in batches)]})
 
     def median_wall(action) -> float:
         action()
@@ -66,10 +81,21 @@ def boundary_probe(spark, runs: int = 9) -> dict:
 
     python_s = median_wall(lambda: df.mapInArrow(noop, df.schema).collect())
     jvm_s = median_wall(df.collect)
+    rows = spark.range(size_check_rows, numPartitions=1).select(
+        "id", F.concat(F.lit("t"), (F.col("id") % 1000).cast("string")).alias("s")
+    )
+    counted = rows.mapInArrow(count_rows, "n long")
+    checked_s = median_wall(counted.collect)
+    with _rows_only_batches(spark):
+        unchecked_s = median_wall(counted.collect)
     return {
         "python_stage_fixed_s": round(python_s - jvm_s, 4),
         "map_in_arrow_s": round(python_s, 4),
         "jvm_collect_s": round(jvm_s, 4),
+        "arrow_size_check_ns_per_row": round((checked_s - unchecked_s) / size_check_rows * 1e9, 1),
+        "size_checked_s": round(checked_s, 4),
+        "rows_only_s": round(unchecked_s, 4),
+        "size_check_rows": size_check_rows,
         "runs": runs,
         "cpus": len(os.sched_getaffinity(0)),
         "local_cores": CPUS,

@@ -683,12 +683,14 @@ def mg_topk(
       the combiner path when distinct/rows <= 0.5; ties go to combiner
       because a JVM shuffle is cheaper than the Arrow pipe.
     """
-    if pre_aggregate == "auto":
-        pre_aggregate = _combiner_probe(df, token_col)
     # Both plans carry exemplar tokens and sketch the unweighted key
     # stream, so a checkpoint from either resumes into the other: one
     # manifest, without the token column.
     manifest = _mg_manifest(k, "key", None, None)
+    resuming = checkpoint_dir is not None and checkpoint_ready(checkpoint_dir, manifest)
+    if pre_aggregate == "auto" and not resuming:
+        # The raw token column: its nulls, as key -1, would count as rows.
+        pre_aggregate = _combiner_probe(df, token_col)
     state, mapping = _mg_build(
         encode_tokens(df, token_col), "key", k, token_col, None, checkpoint_dir, 64,
         pre_aggregate, manifest,

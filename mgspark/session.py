@@ -32,6 +32,14 @@ overrides it.  ``get_spark`` also puts the directory that holds
 ``mgspark`` first on ``spark.executorEnv.PYTHONPATH``, ahead of any value
 the caller passes, so workers import the daemon and mgspark's pickled
 UDFs from any cwd.
+
+The session keeps Spark's 64 MB ``spark.sql.execution.arrow.maxBytesPerBatch``.
+The pipeline's document UDFs ship whole documents across the Arrow
+boundary, and 262,144 documents of 10 KB would make one 2.6 GB batch;
+the byte cap is what closes those batches early.  The sketch
+build projects narrow columns, which the row cap alone bounds, so
+:func:`mgspark.sketches.base.sketch_agg` lifts the byte cap for its own
+jobs only, as a thread-local property.
 """
 
 from __future__ import annotations

@@ -17,6 +17,21 @@ several columns (MG: key, weight, exemplar token) overrides
 ``build_batch`` to read the Arrow batch itself.  The Spark plumbing —
 including the per-group form, ``sketch_agg_grouped`` — is shared, feeds
 every family through ``build_batch`` and never touches per-row Python.
+
+Batches are capped by rows only.  :func:`sketch_agg` runs its jobs with
+``spark.sql.execution.arrow.maxBytesPerBatch`` at ``Int.MaxValue`` as a
+thread-local Spark property: at any other value Spark's JVM writer
+measures the open Arrow batch after every row it appends, 0.25-0.45 us
+per row on 4 CPUs (``python bench_extra.py --boundary``).  The
+projected columns are narrow, so the session's 64 MB default seldom
+closes a batch: 262,144 rows reach it only above 256 bytes a row.  A
+batch holds at most ``spark.sql.execution.arrow.maxRecordsPerBatch``
+rows (262,144 in :func:`mgspark.session.get_spark`) of the projected
+columns: about 4 MB for key and weight, plus the token bytes when a
+token column rides along.
+A ``maxBytesPerBatch`` set explicitly on the session still wins, because
+Spark copies explicit session confs over local properties when it runs
+a query.
 """
 
 from __future__ import annotations
@@ -25,6 +40,7 @@ import json
 import os
 import time
 from abc import ABC, abstractmethod
+from contextlib import contextmanager
 from typing import Any, Iterator
 
 import numpy as np
@@ -283,6 +299,27 @@ def merge_partials(
     return _fold(sketch, (r["payload"] for r in rows))
 
 
+_MAX_BYTES_PER_BATCH = "spark.sql.execution.arrow.maxBytesPerBatch"
+
+
+@contextmanager
+def _rows_only_batches(spark):
+    """Run the enclosed jobs with Arrow batches capped by rows only.
+
+    ``maxBytesPerBatch`` at ``Int.MaxValue`` is the one value at which
+    Spark skips its per-row size check.  It is set as a thread-local
+    property, so the session conf and other threads keep the byte cap,
+    and the previous local value (none, usually) comes back on exit.
+    """
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty(_MAX_BYTES_PER_BATCH)
+    sc.setLocalProperty(_MAX_BYTES_PER_BATCH, str(2**31 - 1))
+    try:
+        yield
+    finally:
+        sc.setLocalProperty(_MAX_BYTES_PER_BATCH, previous)  # None removes it
+
+
 def sketch_agg(
     df: DataFrame,
     col: str | list[Column],
@@ -300,15 +337,22 @@ def sketch_agg(
     family, its parameters and ``col``; MG passes one over the caller's
     own columns, shared by its zero-shuffle and combiner plans.  A rerun
     resumes from them and raises ``ValueError`` on another manifest.
+
+    Every job it runs (build, checkpoint write, merge rounds, resume)
+    feeds Python Arrow batches capped by rows only: at most
+    ``maxRecordsPerBatch`` rows of the projected columns, about 4 MB for
+    key and weight plus the token bytes, with no per-row byte check
+    (module docstring).  A ``maxBytesPerBatch`` set on the session wins.
     """
-    if checkpoint_dir is None:
-        partials = sketch_partials(df, col, sketch)
-        return merge_partials(partials, partials.rdd.getNumPartitions(), sketch, fanout)
-    if manifest is None:
-        manifest = checkpoint_manifest(sketch.name, sketch.params(), col)
-    if not checkpoint_ready(checkpoint_dir, manifest):
-        write_checkpoint(sketch_partials(df, col, sketch), checkpoint_dir, manifest)
-    return resume_partials(df.sparkSession, checkpoint_dir, sketch, fanout)
+    with _rows_only_batches(df.sparkSession):
+        if checkpoint_dir is None:
+            partials = sketch_partials(df, col, sketch)
+            return merge_partials(partials, partials.rdd.getNumPartitions(), sketch, fanout)
+        if manifest is None:
+            manifest = checkpoint_manifest(sketch.name, sketch.params(), col)
+        if not checkpoint_ready(checkpoint_dir, manifest):
+            write_checkpoint(sketch_partials(df, col, sketch), checkpoint_dir, manifest)
+        return resume_partials(df.sparkSession, checkpoint_dir, sketch, fanout)
 
 
 def resume_partials(spark, checkpoint_dir: str, sketch: MergeableSketch, fanout: int = 64) -> Any:

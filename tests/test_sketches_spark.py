@@ -1,7 +1,9 @@
 """Distributed sketch aggregations vs exact Spark/DuckDB answers on the
 sf0.001 testdata."""
 
+import json
 import os
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -382,3 +384,122 @@ def test_sketch_parameters_validated_on_driver(spark):
     for eps, delta in ((0.0, 0.01), (-1.0, 0.01), (0.01, 0.0), (0.01, 1.0)):
         with pytest.raises(ValueError, match="eps|delta"):
             cms_estimates(df, "id", [1], eps=eps, delta=delta)
+
+
+_MAX_BYTES = "spark.sql.execution.arrow.maxBytesPerBatch"
+
+
+@contextmanager
+def _session_max_bytes(spark, value: str):
+    """``maxBytesPerBatch`` set explicitly on the session, unset on exit."""
+    spark.conf.set(_MAX_BYTES, value)
+    try:
+        yield
+    finally:
+        spark.conf.unset(_MAX_BYTES)
+
+
+def _batch_counter(fail: bool = False):
+    """A family whose final state lists, per task in partition order, the
+    Arrow batches it folded and the ``maxBytesPerBatch`` local property
+    it saw.  Defined locally so workers unpickle it by value."""
+    from pyspark import TaskContext
+
+    from mgspark.sketches.base import MergeableSketch
+
+    class BatchCount(MergeableSketch):
+        name = "batch_count"
+
+        def zero(self):
+            return []
+
+        def build(self, state, values):
+            raise NotImplementedError
+
+        def build_batch(self, state, batch):
+            if fail:
+                raise RuntimeError("batch counter failed on purpose")
+            if not state:
+                state = [[0, TaskContext.get().getLocalProperty(_MAX_BYTES)]]
+            state[0][0] += 1
+            return state
+
+        def merge(self, a, b):
+            return a + b
+
+        def serialize(self, state):
+            return json.dumps(state).encode()
+
+        def deserialize(self, blob):
+            return json.loads(blob)
+
+    return BatchCount()
+
+
+def test_sketch_agg_batches_by_rows_only(spark):
+    """Without a session value every task of sketch_agg sees the
+    rows-only cap and folds one batch; an explicit session value wins
+    and splits each task into several batches."""
+    from mgspark.sketches.base import sketch_agg
+
+    df = spark.range(0, 4_000, numPartitions=2)
+    assert sketch_agg(df, "id", _batch_counter()) == [[1, "2147483647"]] * 2
+    with _session_max_bytes(spark, "1k"):
+        per_task = sketch_agg(df, "id", _batch_counter())
+    assert len(per_task) == 2
+    assert all(batches > 1 for batches, _ in per_task)
+
+
+def test_sketch_agg_restores_the_local_property(spark):
+    """The scope leaves the thread's local property as it found it:
+    unset after a return and after a failed job, and an earlier local
+    value comes back."""
+    from pyspark.errors import PythonException
+
+    from mgspark.sketches.base import sketch_agg
+
+    sc = spark.sparkContext
+    df = spark.range(0, 100, numPartitions=1)
+    sketch_agg(df, "id", _batch_counter())
+    assert sc.getLocalProperty(_MAX_BYTES) is None
+    with pytest.raises(PythonException, match="failed on purpose"):
+        sketch_agg(df, "id", _batch_counter(fail=True))
+    assert sc.getLocalProperty(_MAX_BYTES) is None
+    sc.setLocalProperty(_MAX_BYTES, "5000")
+    try:
+        sketch_agg(df, "id", _batch_counter())
+        assert sc.getLocalProperty(_MAX_BYTES) == "5000"
+    finally:
+        sc.setLocalProperty(_MAX_BYTES, None)
+
+
+def test_sketch_agg_results_do_not_depend_on_batches(spark):
+    """One batch per task (the session default) and many (a 1k session
+    cap) give identical zero-shuffle MG state and exemplars, t-digest
+    quantiles and Bloom bits.  Each family is batch-invariant on this
+    input: MG holds <= k keys, the t-digest stays below its compression."""
+    from mgspark.aggregate import mg_sketch_with_tokens
+    from mgspark.sketches.base import sketch_agg
+
+    df = spark.range(0, 4_000, numPartitions=4).select(
+        "id",
+        (F.col("id") % 50).alias("key"),
+        F.concat(F.lit("tok-"), (F.col("id") % 50).cast("string")).alias("token"),
+        (((F.col("id") * 7919) % 1009) / F.lit(7.0)).alias("x"),
+    )
+    qs = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
+
+    def run():
+        state, exemplars = mg_sketch_with_tokens(df, "key", 64, "token", pre_aggregate=False)
+        _, bloom = bloom_build(df, "key", capacity=10_000)
+        return (
+            state.n, state.d, state.keys.tolist(), state.counters.tolist(), exemplars,
+            tdigest_quantiles(df, "x", qs, compression=5_000).tolist(), bloom.tobytes(),
+        )
+
+    default = run()
+    with _session_max_bytes(spark, "1k"):
+        assert all(batches > 1 for batches, _ in sketch_agg(df, "x", _batch_counter()))
+        small = run()
+    assert small == default
+    assert default[0] == 4_000 and len(default[4]) == 50

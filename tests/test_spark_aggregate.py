@@ -205,6 +205,41 @@ def test_mg_sketch_within_fanout_runs_one_job(spark):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
+def test_mg_topk_resume_skips_the_auto_probe(spark, docs, tmp_path, monkeypatch):
+    """A resume from a ready checkpoint runs no plan probe: under "auto"
+    it starts no more jobs than under True, with the same rows.  A fresh
+    build still probes the raw token column (null tokens are not rows)."""
+    import mgspark.aggregate as agg
+
+    probed = []
+    probe = agg._combiner_probe
+
+    def recording_probe(df, key_col):
+        probed.append(key_col)
+        return probe(df, key_col)
+
+    monkeypatch.setattr(agg, "_combiner_probe", recording_probe)
+    sc = spark.sparkContext
+    ckpt = str(tmp_path / "auto_ckpt")
+    langs = docs.select("lang")
+    built = agg.mg_topk(langs, "lang", 8, checkpoint_dir=ckpt).collect()
+    assert probed == ["lang"]
+    jobs = {}
+    for pre_aggregate in ("auto", True):
+        group = f"test-mg-topk-resume-{pre_aggregate}"
+        sc.setJobGroup(group, "mg_topk resume")
+        try:
+            resumed = agg.mg_topk(
+                langs, "lang", 8, checkpoint_dir=ckpt, pre_aggregate=pre_aggregate
+            ).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[pre_aggregate] = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert resumed == built
+    assert probed == ["lang"]
+    assert jobs["auto"] <= jobs[True]
+
+
 def test_mg_topk_exemplars_survive_checkpoint(spark, docs, tmp_path, monkeypatch):
     """Exemplar tokens ride the parquet checkpoint: a resumed combiner-path
     mg_topk decodes from the checkpointed partials with no input re-scan."""
